@@ -129,7 +129,8 @@ def main() -> None:
         cold[name] = round(max(elapsed, 0.0), 4)
 
     # Lane hygiene (round 14, adjudicating the r13 trainer "warm
-    # regression"): scripts/r14_probe_trainers2.py isolated a REAL but
+    # regression"): a controlled probe (OPTIMIZATION_r14.md, "VERDICT item
+    # 1 — the trainer warm regression, ADJUDICATED") isolated a REAL but
     # transient post-cold-lane effect — right after the 50-query cold
     # lane the scheduling-sensitive engine trainers run ~10-15% slow
     # (lr 2.24→2.46, nn 2.28→2.63 median), and a forced full JVM GC

@@ -44,6 +44,10 @@ class SumWorker(WorkerComputable):
     def compute(
         self, context: WorkerContext, batches: Iterator[pa.RecordBatch]
     ) -> SumState:
+        # imported here, not at module level: every worker process
+        # imports this package, and pyarrow.compute costs ~60 ms there
+        import pyarrow.compute as pc
+
         # -D sum.column=<name> overrides, like the reference's
         # Properties-driven config (mapreduce/GuaguaMapper.java:107-119)
         column = context.props.get("sum.column", self.column)
@@ -53,7 +57,7 @@ class SumWorker(WorkerComputable):
         total = prev
         for batch in batches:
             col = batch.column(column)
-            s = pa.compute.sum(col).as_py()
+            s = pc.sum(col).as_py()
             if s is not None:
                 total += s
         return SumState(value=total)

@@ -46,11 +46,14 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import glob
 import logging
 import os
 import pickle
+import shutil
+import tempfile
 import time
-from typing import Any, Callable, Iterator, Sequence
+from typing import Any, Callable, Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
 from pyspark import TaskContext
@@ -121,57 +124,70 @@ class _Partial:
         self.all_halt = all_halt
         self.n = n
 
-    def combine(self, other: "_Partial") -> "_Partial":
-        if self.result is None:
-            merged = other.result
-        elif other.result is None:
-            merged = self.result
-        else:
-            merged = self.result.combine(other.result)
-        return _Partial(merged, self.all_halt and other.all_halt, self.n + other.n)
+
+class _Task(NamedTuple):
+    """What one iteration's worker task needs besides its partition data.
+    The worker object, props and interceptors are serialized into the
+    task closure; the (potentially large) master result rides the
+    _ModelRef."""
+
+    worker: WorkerComputable
+    iteration: int
+    total_iteration: int
+    props: dict[str, Any]
+    model: _ModelRef
+    interceptors: Sequence[WorkerInterceptor]
+
+
+def _partition_id() -> int:
+    tc = TaskContext.get()
+    return tc.partitionId() if tc is not None else -1
+
+
+def _run_task(
+    task: _Task, pid: int, compute: Callable[[WorkerContext], Any]
+) -> bytes:
+    """The one worker-task body every path runs; paths differ only in
+    how ``compute`` obtains the partition data. Hook order is the
+    reference's call-stack contract (worker/WorkerInterceptor.java:33-38):
+    [iter 1: pre_application FIFO] → pre_iteration FIFO → init/compute →
+    post_iteration FILO → [iter N: post_application FILO]. Returns the
+    pickled (result, halt vote)."""
+    ctx = WorkerContext(
+        current_iteration=task.iteration,
+        total_iteration=task.total_iteration,
+        last_master_result=task.model.get(),
+        props=task.props,
+        partition_id=pid,
+    )
+    if task.iteration == 1:
+        for icpt in task.interceptors:
+            icpt.pre_application(ctx)
+    for icpt in task.interceptors:
+        icpt.pre_iteration(ctx)
+    task.worker.init(ctx)
+    result = compute(ctx)
+    for icpt in reversed(task.interceptors):
+        icpt.post_iteration(ctx)
+    if task.iteration == task.total_iteration:
+        for icpt in reversed(task.interceptors):
+            icpt.post_application(ctx)
+    halt = bool(getattr(result, "halt", False))
+    return pickle.dumps((result, halt), protocol=pickle.HIGHEST_PROTOCOL)
 
 
 def _make_worker_fn(
-    worker: WorkerComputable,
-    iteration: int,
-    total_iteration: int,
-    props: dict[str, Any],
-    bc_master,
-    worker_interceptors: Sequence["WorkerInterceptor"] = (),
+    task: _Task,
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """Build the mapInArrow function for one iteration.
-
-    The worker object, props and interceptors are serialized into the
-    task closure; the (potentially large) master result rides the
-    broadcast. Executor-side hook order per task (the reference's
-    call-stack contract, worker/WorkerInterceptor.java:33-38):
-    [iter 1: pre_application FIFO] → pre_iteration FIFO → init/compute →
-    post_iteration FILO → [iter N: post_application FILO].
-    """
+    """mapInArrow task over the persisted rows: the worker folds the
+    partition's Arrow batches."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tc = TaskContext.get()
-        ctx = WorkerContext(
-            current_iteration=iteration,
-            total_iteration=total_iteration,
-            last_master_result=bc_master.get(),
-            props=props,
-            partition_id=tc.partitionId() if tc is not None else -1,
+        payload = _run_task(
+            task,
+            _partition_id(),
+            lambda ctx: task.worker.compute(ctx, batches),
         )
-        if iteration == 1:
-            for icpt in worker_interceptors:
-                icpt.pre_application(ctx)
-        for icpt in worker_interceptors:
-            icpt.pre_iteration(ctx)
-        worker.init(ctx)
-        result = worker.compute(ctx, batches)
-        for icpt in reversed(worker_interceptors):
-            icpt.post_iteration(ctx)
-        if iteration == total_iteration:
-            for icpt in reversed(worker_interceptors):
-                icpt.post_application(ctx)
-        halt = bool(getattr(result, "halt", False))
-        payload = pickle.dumps((result, halt), protocol=pickle.HIGHEST_PROTOCOL)
         yield pa.RecordBatch.from_pydict({"result": [payload]})
 
     return fn
@@ -198,14 +214,30 @@ def _prep_cache_dir(run_id: str) -> str:
     """Host-local directory for prepared-partition files — the direct
     analogue of the reference's MemoryDiskList (util/MemoryDiskList.java:
     42-155): hot data lives in the OS page cache, cold spills to disk.
-    Rooted in the executor's Spark scratch space when available."""
-    import tempfile
-
+    Rooted in the executor's Spark scratch space when available (Python
+    workers see SPARK_LOCAL_DIRS as the block manager's dirs)."""
     base = os.environ.get("SPARK_LOCAL_DIRS")
     base = base.split(",")[0] if base else tempfile.gettempdir()
-    d = os.path.join(base, f"guagua-prep-{run_id}")
-    os.makedirs(d, exist_ok=True)
-    return d
+    return os.path.join(base, f"guagua-prep-{run_id}")
+
+
+def _driver_prep_dirs(sc, run_id: str) -> list[str]:
+    """This run's prepared-file directories on the driver's host. The
+    driver resolves Spark's local-dir roots (SPARK_LOCAL_DIRS, else
+    spark.local.dir, else the temp dir) and globs one level below each,
+    where the block manager's ``blockmgr-*`` dirs live; the run id is a
+    fresh uuid, so only this run's directories match."""
+    roots = (
+        os.environ.get("SPARK_LOCAL_DIRS")
+        or sc.getConf().get("spark.local.dir")
+        or tempfile.gettempdir()
+    )
+    name = f"guagua-prep-{run_id}"
+    return [
+        d
+        for root in roots.split(",")
+        for d in glob.glob(os.path.join(root, "*", name))
+    ]
 
 
 def _make_prepare_write_fn(
@@ -216,10 +248,10 @@ def _make_prepare_write_fn(
     interleave partial writes."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
+        pid = _partition_id()
         data = worker.prepare(batches)
         d = _prep_cache_dir(run_id)
+        os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, f"p{pid}.pkl.tmp.{os.getpid()}")
         with open(tmp, "wb") as f:
             pickle.dump(data, f, protocol=pickle.HIGHEST_PROTOCOL)
@@ -229,15 +261,7 @@ def _make_prepare_write_fn(
     return fn
 
 
-def _make_file_iter_fn(
-    worker: WorkerComputable,
-    iteration: int,
-    total_iteration: int,
-    props: dict[str, Any],
-    bc_master,
-    worker_interceptors: Sequence["WorkerInterceptor"],
-    run_id: str,
-):
+def _make_file_iter_fn(task: _Task, run_id: str):
     """Per-iteration task over the host-local prepared files. Ships NO
     partition data through the JVM (the input is a cached 8-byte
     marker); yields (pid, pickled result) or (pid, None) when the file
@@ -245,35 +269,19 @@ def _make_file_iter_fn(
     the scan, or the direct Arrow path)."""
 
     def fn(markers) -> Iterator[tuple]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
+        pid = _partition_id()
         path = os.path.join(_prep_cache_dir(run_id), f"p{pid}.pkl")
         if not os.path.exists(path):
             yield (pid, None)
             return
         with open(path, "rb") as f:
             data = pickle.load(f)
-        ctx = WorkerContext(
-            current_iteration=iteration,
-            total_iteration=total_iteration,
-            last_master_result=bc_master.get(),
-            props=props,
-            partition_id=pid,
+        yield (
+            pid,
+            _run_task(
+                task, pid, lambda ctx: task.worker.compute_prepared(ctx, data)
+            ),
         )
-        if iteration == 1:
-            for icpt in worker_interceptors:
-                icpt.pre_application(ctx)
-        for icpt in worker_interceptors:
-            icpt.pre_iteration(ctx)
-        worker.init(ctx)
-        result = worker.compute_prepared(ctx, data)
-        for icpt in reversed(worker_interceptors):
-            icpt.post_iteration(ctx)
-        if iteration == total_iteration:
-            for icpt in reversed(worker_interceptors):
-                icpt.post_application(ctx)
-        halt = bool(getattr(result, "halt", False))
-        yield (pid, pickle.dumps((result, halt), protocol=pickle.HIGHEST_PROTOCOL))
 
     return fn
 
@@ -289,8 +297,6 @@ def _make_cleanup_fn(run_id: str):
     directories an operator can reap by age."""
 
     def fn(markers) -> Iterator[int]:
-        import shutil
-
         shutil.rmtree(_prep_cache_dir(run_id), ignore_errors=True)
         yield 0
 
@@ -298,189 +304,20 @@ def _make_cleanup_fn(run_id: str):
 
 
 def _make_prepared_iter_fn(
-    worker: WorkerComputable,
-    iteration: int,
-    total_iteration: int,
-    props: dict[str, Any],
-    bc_master,
-    worker_interceptors: Sequence["WorkerInterceptor"] = (),
+    task: _Task,
 ) -> Callable[[Iterator[bytes]], Iterator[bytes]]:
-    """Per-iteration task over the persisted prepared blobs — same
-    lifecycle-hook contract as _make_worker_fn, but the partition data
-    arrives as one pickle.loads (memcpy for numpy) instead of an Arrow
-    decode."""
+    """Per-iteration task over the persisted prepared blobs: the
+    partition data arrives as one pickle.loads (memcpy for numpy)
+    instead of an Arrow decode."""
 
     def fn(blobs: Iterator[bytes]) -> Iterator[bytes]:
-        tc = TaskContext.get()
-        ctx = WorkerContext(
-            current_iteration=iteration,
-            total_iteration=total_iteration,
-            last_master_result=bc_master.get(),
-            props=props,
-            partition_id=tc.partitionId() if tc is not None else -1,
+        yield _run_task(
+            task,
+            _partition_id(),
+            lambda ctx: task.worker.compute_prepared(
+                ctx, pickle.loads(next(iter(blobs)))
+            ),
         )
-        if iteration == 1:
-            for icpt in worker_interceptors:
-                icpt.pre_application(ctx)
-        for icpt in worker_interceptors:
-            icpt.pre_iteration(ctx)
-        worker.init(ctx)
-        data = pickle.loads(next(iter(blobs)))
-        result = worker.compute_prepared(ctx, data)
-        for icpt in reversed(worker_interceptors):
-            icpt.post_iteration(ctx)
-        if iteration == total_iteration:
-            for icpt in reversed(worker_interceptors):
-                icpt.post_application(ctx)
-        halt = bool(getattr(result, "halt", False))
-        yield pickle.dumps((result, halt), protocol=pickle.HIGHEST_PROTOCOL)
-
-    return fn
-
-
-def _make_ipc_blob_fn() -> Callable:
-    """One Arrow-IPC blob per partition — the load-once form for
-    workers WITHOUT a prepare() override on the batched-barrier path:
-    the partition's record batches serialize once, and each inner
-    iteration re-opens the IPC stream (a near-memcpy read) instead of
-    re-running the scan."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sink = pa.BufferOutputStream()
-        writer = None
-        for b in batches:
-            if writer is None:
-                writer = pa.ipc.new_stream(sink, b.schema)
-            writer.write_batch(b)
-        if writer is not None:
-            writer.close()
-        blob = sink.getvalue().to_pybytes()
-        yield pa.record_batch([pa.array([blob], type=pa.binary())], names=["blob"])
-
-    return fn
-
-
-def _make_batched_barrier_fn(
-    master: MasterComputable,
-    worker: WorkerComputable,
-    start_it: int,
-    end_it: int,
-    total_iteration: int,
-    props: dict[str, Any],
-    initial_result: Any,
-    worker_interceptors: Sequence["WorkerInterceptor"],
-    worker_halt_enable: bool,
-    prepared_mode: bool,
-) -> Callable[[Iterator[bytes]], Iterator[bytes]]:
-    """One BARRIER task per partition running iterations
-    [start_it, end_it] in a single Spark job: per inner iteration each
-    task computes its partial, allGathers every partial (the in-job
-    AllReduce), and applies the MASTER REPLICA's update identically —
-    all replicas see the same partials in partition order, so every
-    task holds the identical model at every step and task 0's final
-    state IS the run state. This trades the reference's per-iteration
-    master/worker barrier round-trip (and this engine's ~0.2 s/job
-    scheduling floor) for one job per K iterations — the win is pure
-    latency; the gradient math, fold order (partition order, same as
-    the eager driver path), and halt semantics are unchanged."""
-    import base64
-
-    mpayload = pickle.dumps(master, protocol=pickle.HIGHEST_PROTOCOL)
-    rpayload = pickle.dumps(initial_result, protocol=pickle.HIGHEST_PROTOCOL)
-
-    def fn(blobs: Iterator[bytes]) -> Iterator[bytes]:
-        from pyspark import BarrierTaskContext
-
-        tc = BarrierTaskContext.get()
-        pid = tc.partitionId()
-        n_workers = len(tc.getTaskInfos())
-        m = pickle.loads(mpayload)  # master replica, one per task
-        result = pickle.loads(rpayload)
-        raw = next(iter(blobs), None)
-        if prepared_mode:
-            data = (
-                pickle.loads(raw)
-                if raw is not None
-                else worker.prepare(iter(()))
-            )
-        else:
-            batches = (
-                list(pa.ipc.open_stream(raw)) if raw else []
-            )
-        wctx = WorkerContext(
-            current_iteration=start_it,
-            total_iteration=total_iteration,
-            last_master_result=result,
-            props=props,
-            partition_id=pid,
-        )
-        if start_it == 1:
-            for icpt in worker_interceptors:
-                icpt.pre_application(wctx)
-        worker.init(wctx)
-        mrep = MasterContext(
-            current_iteration=start_it,
-            total_iteration=total_iteration,
-            worker_results=[],
-            master_result=result,
-            props=props,
-            num_workers=n_workers,
-        )
-        halted = False
-        last_it = start_it
-        for it in range(start_it, end_it + 1):
-            last_it = it
-            wctx.current_iteration = it
-            wctx.last_master_result = result
-            for icpt in worker_interceptors:
-                icpt.pre_iteration(wctx)
-            if prepared_mode:
-                partial = worker.compute_prepared(wctx, data)
-            else:
-                partial = worker.compute(wctx, iter(batches))
-            for icpt in reversed(worker_interceptors):
-                icpt.post_iteration(wctx)
-            vote = bool(getattr(partial, "halt", False))
-            msg = base64.b64encode(
-                pickle.dumps(
-                    (pid, partial, vote),
-                    protocol=pickle.HIGHEST_PROTOCOL,
-                )
-            ).decode("ascii")
-            gathered = tc.allGather(msg)
-            triples = sorted(
-                (
-                    pickle.loads(base64.b64decode(g))
-                    for g in gathered
-                ),
-                key=lambda t: t[0],
-            )
-            mrep.current_iteration = it
-            mrep.worker_results = [t[1] for t in triples]
-            mrep.arrived_workers = len(triples)
-            all_halt = bool(triples) and all(t[2] for t in triples)
-            mrep.all_workers_halted = worker_halt_enable and all_halt
-            result = m.compute(mrep)
-            if worker_halt_enable and mrep.all_workers_halted:
-                _force_halt(result)
-            mrep.master_result = result
-            if is_halt(result):
-                halted = True
-                break
-        if last_it == total_iteration:
-            for icpt in reversed(worker_interceptors):
-                icpt.post_application(wctx)
-        if pid == 0:
-            yield pickle.dumps(
-                {
-                    "master": m,
-                    "result": result,
-                    "last_iteration": last_it,
-                    "halted": halted,
-                    "all_workers_halted": mrep.all_workers_halted,
-                },
-                protocol=pickle.HIGHEST_PROTOCOL,
-            )
 
     return fn
 
@@ -533,8 +370,6 @@ class _LazyWorkerResults:
     )
 
     def __init__(self, partials) -> None:
-        import tempfile
-
         self._iter = iter(partials)
         self._spill = tempfile.TemporaryFile(prefix="guagua_results_")
         self._offsets: list[tuple[int, int]] = []
@@ -640,11 +475,7 @@ class IterativeEngine:
 
     def _collect_file_cached(
         self,
-        worker: WorkerComputable,
-        iteration: int,
-        total_iteration: int,
-        bc,
-        worker_interceptors: Sequence["WorkerInterceptor"],
+        task: _Task,
         run_id: str,
         marker_rdd,
         ensure_rdd,
@@ -658,17 +489,14 @@ class IterativeEngine:
         still missing computes via the direct Arrow path — always
         correct, just not cached."""
         sc = self.spark.sparkContext
-        ffn = _make_file_iter_fn(
-            worker, iteration, total_iteration, self.props, bc,
-            worker_interceptors, run_id,
-        )
+        ffn = _make_file_iter_fn(task, run_id)
         raw = marker_rdd.mapPartitions(ffn).collect()
         got = {pid: payload for pid, payload in raw if payload is not None}
         missing = sorted(set(range(num_partitions)) - set(got))
         if missing:
             log.warning(
                 "prepared files missing for partitions %s at iteration "
-                "%d; re-preparing", missing, iteration,
+                "%d; re-preparing", missing, task.iteration,
             )
             sc.runJob(ensure_rdd, lambda it: list(it), missing)
             retried = sc.runJob(
@@ -679,11 +507,7 @@ class IterativeEngine:
                     got[pid] = payload
             still = sorted(set(range(num_partitions)) - set(got))
             if still:
-                arrow_fn = _make_worker_fn(
-                    worker, iteration, total_iteration, self.props, bc,
-                    worker_interceptors,
-                )
-                out = df.mapInArrow(arrow_fn, "result binary")
+                out = df.mapInArrow(_make_worker_fn(task), "result binary")
                 # this is a FRESH realization of the plan: under AQE
                 # even an equal partition count doesn't prove the same
                 # row→partition assignment as the pinned realization
@@ -791,131 +615,6 @@ class IterativeEngine:
                     time.sleep(0.02)
         return arrived
 
-    def _run_batched(
-        self,
-        master: MasterComputable,
-        worker: WorkerComputable,
-        df: DataFrame,
-        total_iteration: int,
-        interceptors: Sequence[MasterInterceptor],
-        worker_interceptors: Sequence["WorkerInterceptor"],
-        worker_halt_enable: bool,
-        storage_level: StorageLevel,
-        k: int,
-    ) -> Any:
-        """The iterations_per_job engine loop: ceil(total/K) barrier
-        jobs, each running K iterations with the AllReduce done by
-        ``BarrierTaskContext.allGather`` and the master update applied
-        by an identical replica in every task (see
-        _make_batched_barrier_fn). Load-once holds: prepared workers'
-        partitions persist as pickled blobs, plain workers' as Arrow
-        IPC blobs — either way each inner iteration re-reads from
-        process memory, never the scan. Task 0 returns the evolved
-        master + result, which the driver adopts between batches (so
-        checkpoints, interceptors, and a later resume see the same
-        state a K=1 run would have at batch boundaries)."""
-        sc = self.spark.sparkContext
-        from guagua_spark.shipping import ensure_shipped
-
-        ensure_shipped(sc)
-        master_result: Any = None
-        start_iteration = 1
-        ckpt = self._load_checkpoint()
-        if ckpt is not None:
-            start_iteration, master_result = ckpt[0] + 1, ckpt[1]
-            log.info(
-                "resuming from checkpoint at iteration %d", start_iteration
-            )
-        prepared_mode = (
-            type(worker).prepare is not WorkerComputable.prepare
-        )
-        if prepared_mode:
-            blob_rdd = (
-                df.mapInArrow(_make_prepare_fn(worker), "blob binary")
-                .rdd.map(lambda row: bytes(row.blob))
-                .persist(storage_level)
-            )
-        else:
-            blob_rdd = (
-                df.mapInArrow(_make_ipc_blob_fn(), "blob binary")
-                .rdd.map(lambda row: bytes(row.blob))
-                .persist(storage_level)
-            )
-        num_partitions = blob_rdd.getNumPartitions()
-        mctx = MasterContext(
-            current_iteration=0,
-            total_iteration=total_iteration,
-            worker_results=[],
-            master_result=master_result,
-            props=self.props,
-            num_workers=num_partitions,
-        )
-        master.init(mctx)
-        if master_result is None:
-            initial = getattr(master, "initial_result", None)
-            if callable(initial):
-                master_result = initial(mctx)
-                mctx.master_result = master_result
-        for icpt in interceptors:
-            icpt.pre_application(mctx)
-        try:
-            it = start_iteration
-            while it <= total_iteration:
-                t0 = time.monotonic()
-                batch_end = min(it + k - 1, total_iteration)
-                mctx.current_iteration = it
-                for icpt in interceptors:
-                    icpt.pre_iteration(mctx)
-                sc.setJobDescription(
-                    f"guagua iterations {it}-{batch_end}"
-                    f"/{total_iteration} (batched)"
-                )
-                fn = _make_batched_barrier_fn(
-                    master,
-                    worker,
-                    it,
-                    batch_end,
-                    total_iteration,
-                    self.props,
-                    master_result,
-                    worker_interceptors,
-                    worker_halt_enable,
-                    prepared_mode,
-                )
-                outs = blob_rdd.barrier().mapPartitions(fn).collect()
-                state = pickle.loads(outs[0])
-                # adopt the replica: the driver's master object must
-                # carry the evolved optimizer state (momentum etc.)
-                # into the next batch and any checkpoint/resume
-                master.__dict__.update(state["master"].__dict__)
-                master_result = state["result"]
-                done = state["last_iteration"]
-                mctx.master_result = master_result
-                mctx.current_iteration = done
-                mctx.arrived_workers = num_partitions
-                mctx.all_workers_halted = state["all_workers_halted"]
-                for icpt in reversed(interceptors):
-                    icpt.post_iteration(mctx)
-                if self.checkpoint_interval and (
-                    done % self.checkpoint_interval == 0
-                    or batch_end != done
-                ):
-                    self._save_checkpoint(done, master_result)
-                secs = time.monotonic() - t0
-                n_inner = done - it + 1
-                self.iteration_seconds.extend(
-                    [secs / n_inner] * n_inner
-                )
-                if state["halted"]:
-                    log.info("halt signalled at iteration %d", done)
-                    break
-                it = batch_end + 1
-        finally:
-            for icpt in reversed(interceptors):
-                icpt.post_application(mctx)
-            blob_rdd.unpersist()
-        return master_result
-
     def run(
         self,
         master: MasterComputable,
@@ -931,31 +630,8 @@ class IterativeEngine:
         min_workers_ratio: float = 1.0,
         min_workers_timeout: float = 60.0,
         result_bytes_budget: int = DEFAULT_RESULT_BYTES_BUDGET,
-        iterations_per_job: int = 1,
     ) -> Any:
         """Iterate to convergence; return the final master result.
-
-        ``iterations_per_job`` > 1 (opt-in) batches K iterations into
-        ONE barrier-mode Spark job: each task loops
-        compute → allGather → master-replica update, so a 50-round
-        trainer pays the per-job cost 50/K times instead of 50.
-        MEASURED TRADEOFF (local[32], pyspark 4.1.2): allGather has a
-        ~1.0 s/sync floor (BarrierCoordinator poll, independent of
-        task count), ABOVE this engine's ~0.2 s/job floor — so K>1 is
-        a pessimization in local mode and on lightly-loaded clusters.
-        It wins where a job round-trip costs multiple seconds (busy
-        shared schedulers, dynamic-allocation executor ramp, very
-        large task counts), which is why it ships opt-in and never by
-        default. Requirements (ValueError/fallback otherwise): the
-        master must be picklable and deterministic (every task applies
-        the identical update to the identical gathered partials — fold
-        order is partition order, same as the eager driver path, so
-        values match the K=1 run bit-for-bit), the full barrier
-        (min_workers_ratio == 1.0), and cluster slots ≥ partitions
-        (else it logs and falls back to K=1). Driver-side master
-        interceptors/checkpoints fire at BATCH granularity, and worker
-        results never ship to the driver (mctx.worker_results is empty
-        in post_iteration hooks). See _run_batched.
 
         ``worker_halt_enable`` mirrors guagua.worker.halt.enable
         (GuaguaConstants.java:112-117): when True and every worker result
@@ -985,41 +661,6 @@ class IterativeEngine:
         reference's lazy master-side consumption
         (AbstractMasterCoordinator.java:243-310).
         """
-        if iterations_per_job > 1:
-            if min_workers_ratio < 1.0:
-                raise ValueError(
-                    "iterations_per_job requires the full barrier "
-                    "(min_workers_ratio == 1.0): the partial barrier "
-                    "drops stragglers per iteration, which a single "
-                    "barrier job cannot express"
-                )
-            n_parts = df.rdd.getNumPartitions()
-            slots = self.spark.sparkContext.defaultParallelism
-            if n_parts > slots:
-                # barrier scheduling needs every task concurrently;
-                # oversubscribed inputs fall back to the per-iteration
-                # loop (at that scale compute dominates the ~0.2 s/job
-                # floor batching exists to amortize, so nothing is lost)
-                log.warning(
-                    "iterations_per_job=%d requested but %d partitions"
-                    " > %d slots: barrier cannot schedule — falling"
-                    " back to one job per iteration",
-                    iterations_per_job,
-                    n_parts,
-                    slots,
-                )
-            else:
-                return self._run_batched(
-                    master,
-                    worker,
-                    df,
-                    total_iteration,
-                    interceptors,
-                    worker_interceptors,
-                    worker_halt_enable,
-                    storage_level,
-                    iterations_per_job,
-                )
         sc = self.spark.sparkContext
         from guagua_spark.shipping import ensure_shipped
 
@@ -1148,20 +789,19 @@ class IterativeEngine:
                     bc = _ModelRef(payload=payload)
                 else:
                     bc = _ModelRef(bc=sc.broadcast(payload))
+                task = _Task(
+                    worker, iteration, total_iteration, self.props, bc,
+                    worker_interceptors,
+                )
                 if prepared_mode and not use_file_cache:
                     out_rdd = prep_rdd.mapPartitions(
-                        _make_prepared_iter_fn(
-                            worker, iteration, total_iteration, self.props,
-                            bc, worker_interceptors,
-                        )
+                        _make_prepared_iter_fn(task)
                     )
                     partials_rdd = out_rdd.map(_unwrap_partial)
                 elif not prepared_mode:
-                    fn = _make_worker_fn(
-                        worker, iteration, total_iteration, self.props, bc,
-                        worker_interceptors,
+                    out = df.mapInArrow(
+                        _make_worker_fn(task), "result binary"
                     )
-                    out = df.mapInArrow(fn, "result binary")
                     out_rdd = None
                     partials_rdd = None
                 else:  # file-cache variant: handled in the collect branch
@@ -1209,9 +849,8 @@ class IterativeEngine:
                     # compounds over a 50-round training loop
                     if use_file_cache:
                         collected = self._collect_file_cached(
-                            worker, iteration, total_iteration, bc,
-                            worker_interceptors, run_id, marker_rdd,
-                            ensure_rdd, df, num_partitions,
+                            task, run_id, marker_rdd, ensure_rdd, df,
+                            num_partitions,
                         )
                         results = [p.result for p in collected]
                         all_halt = bool(collected) and all(
@@ -1432,11 +1071,11 @@ class IterativeEngine:
                     except Exception:  # noqa: BLE001 — must not mask
                         pass
                 marker_rdd.unpersist()
-                # on local mode the driver shares the host: rmtree alone
-                # removes every file with zero extra Spark jobs
-                import shutil
-
-                shutil.rmtree(_prep_cache_dir(run_id), ignore_errors=True)
+                # on local mode the driver shares the executors' host:
+                # removing the run's directories here reclaims every file
+                # with zero extra Spark jobs
+                for d in _driver_prep_dirs(sc, run_id):
+                    shutil.rmtree(d, ignore_errors=True)
             sc.setJobDescription(None)
         return master_result
 

@@ -186,10 +186,6 @@ def lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         total_iteration=5,
         persist=False,
-        # iterations_per_job=5 measured SLOWER here: Spark's barrier
-        # allGather carries a ~1.0 s/sync floor (BarrierCoordinator
-        # poll), above this engine's ~0.2 s/job floor on local[32] —
-        # see engine._run_batched's docstring for when batching wins
     )
     # round 6dp on BOTH sides (see _lr_train_oracle): the engine sums
     # gradients via treeReduce (partition order), DuckDB sequentially —

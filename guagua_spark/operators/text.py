@@ -1845,8 +1845,8 @@ def text_probe_freq_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same relation, replacing a second corpus-wide tokenize pass);
     the shared tokenize+partial-agg subtree plans a single corpus scan
     with the second consumer served by exchange reuse. Outputs
-    row-identical (scripts/r13_probe_cm.py); full query A/B at sf0.1:
-    ~3.8 s → ~1.5 s."""
+    row-identical (OPTIMIZATION_r13.md, "text_probe_freq_cm"); full
+    query A/B at sf0.1: ~3.8 s → ~1.5 s."""
     from guagua_spark.functions.sketch import (
         cm_counters_weighted,
         cm_estimates,

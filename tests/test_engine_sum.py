@@ -189,12 +189,18 @@ def test_interceptor_ordering(spark):
 
 def test_worker_interceptor_ordering(spark, tmp_path):
     """Executor-side hooks: FIFO pre, FILO post, application hooks on the
-    first/last iteration's task (worker/WorkerInterceptor.java:33-38).
-    Single partition + local mode ⇒ tasks share the driver filesystem and
-    run one-at-a-time, so an append-only trace file observes exact order."""
+    first/last iteration's task (worker/WorkerInterceptor.java:33-38), on
+    every worker-task path: Arrow, prepared blob RDD (executor-side
+    combine) and host-local file cache. The paths run inside one test so
+    its id stays stable. Single partition + local mode ⇒ tasks share the
+    driver filesystem and run one-at-a-time, so an append-only trace file
+    observes exact order."""
+    from guagua_spark.algorithms.gradient import (
+        GradientDescentMaster,
+        LogisticGradientWorker,
+    )
     from guagua_spark.api import WorkerInterceptor
-
-    trace = str(tmp_path / "trace.log")
+    from guagua_spark.engine import FILE_CACHE_MIN_ROUNDS
 
     class Tracker(WorkerInterceptor):
         def __init__(self, name: str, path: str) -> None:
@@ -217,21 +223,43 @@ def test_worker_interceptor_ordering(spark, tmp_path):
         def post_application(self, ctx):
             self._mark("postApp", ctx)
 
-    rdd = spark.sparkContext.parallelize([(1,), (2,), (3,)], 1)
-    df = spark.createDataFrame(rdd, "value long")
-    IterativeEngine(spark).run(
-        SumMaster(), SumWorker(), df, total_iteration=2,
-        worker_interceptors=[Tracker("a", trace), Tracker("b", trace)],
+    sc = spark.sparkContext
+    sum_df = spark.createDataFrame(
+        sc.parallelize([(1,), (2,), (3,)], 1), "value long"
     )
-    calls = open(trace).read().splitlines()
-    assert calls == [
-        "preApp:a:it1", "preApp:b:it1",
-        "preIter:a:it1", "preIter:b:it1",
-        "postIter:b:it1", "postIter:a:it1",
-        "preIter:a:it2", "preIter:b:it2",
-        "postIter:b:it2", "postIter:a:it2",
-        "postApp:b:it2", "postApp:a:it2",
-    ]
+    lr_df = spark.createDataFrame(
+        sc.parallelize([(0.1, 0.0), (0.5, 1.0), (0.9, 1.0)], 1),
+        "f1 double, label double",
+    )
+    paths = {
+        "arrow": (SumMaster(), SumWorker(), sum_df, 2, {}),
+        "blob": (
+            GradientDescentMaster(dim=1, learning_rate=0.5),
+            LogisticGradientWorker(("f1",), "label"),
+            lr_df, FILE_CACHE_MIN_ROUNDS, {"combine_executor_side": True},
+        ),
+        "file_cache": (
+            GradientDescentMaster(dim=1, learning_rate=0.5),
+            LogisticGradientWorker(("f1",), "label"),
+            lr_df, FILE_CACHE_MIN_ROUNDS, {},
+        ),
+    }
+    for name, (master, worker, df, rounds, kwargs) in paths.items():
+        trace = str(tmp_path / f"{name}.log")
+        IterativeEngine(spark).run(
+            master, worker, df, total_iteration=rounds,
+            worker_interceptors=[Tracker("a", trace), Tracker("b", trace)],
+            **kwargs,
+        )
+        calls = open(trace).read().splitlines()
+        expected = ["preApp:a:it1", "preApp:b:it1"]
+        for it in range(1, rounds + 1):
+            expected += [
+                f"preIter:a:it{it}", f"preIter:b:it{it}",
+                f"postIter:b:it{it}", f"postIter:a:it{it}",
+            ]
+        expected += [f"postApp:b:it{rounds}", f"postApp:a:it{rounds}"]
+        assert calls == expected, name
 
 
 def test_iteration_latency_budget(spark):

@@ -270,14 +270,3 @@ def test_probe_survives_tiny_first_partition(spark, caplog):
     assert r.value == 1 + 1024 * 7
     assert any("streaming partials" in m for m in caplog.messages)
 
-
-def test_iterations_per_job_rejects_partial_barrier(spark):
-    with pytest.raises(ValueError, match="full barrier"):
-        IterativeEngine(spark).run(
-            SumMaster(),
-            SumWorker(),
-            _df(spark, 2),
-            total_iteration=4,
-            iterations_per_job=2,
-            min_workers_ratio=0.5,
-        )

@@ -6,8 +6,8 @@ MemoryDiskList memory/disk residency)."""
 from __future__ import annotations
 
 import glob
+import logging
 import os
-import shutil
 import tempfile
 
 import numpy as np
@@ -32,6 +32,38 @@ def _train_df(spark, partitions=4):
             ((F.col("id") % 3) == 0).cast("double").alias("label"),
         )
     )
+
+
+def _prep_paths() -> set[str]:
+    """Every prepared-file directory and ``p*.pkl`` file under the
+    driver's Spark local dirs (SPARK_LOCAL_DIRS, else the temp dir).
+    Searched recursively: Python workers write them below the block
+    manager's ``blockmgr-*`` dirs, not at the root."""
+    roots = os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()
+    dirs = {
+        d
+        for root in roots.split(",")
+        for d in glob.glob(
+            os.path.join(root, "**", "guagua-prep-*"), recursive=True
+        )
+    }
+    files = {f for d in dirs for f in glob.glob(os.path.join(d, "p*.pkl"))}
+    return dirs | files
+
+
+class _PrepSpy(MasterInterceptor):
+    """Records after every round the prepared files this run wrote:
+    whatever appeared under the local dirs since construction."""
+
+    def __init__(self) -> None:
+        self.before = _prep_paths()
+        self.seen: set[str] = set()
+
+    def new_files(self) -> set[str]:
+        return {p for p in _prep_paths() - self.before if p.endswith(".pkl")}
+
+    def post_iteration(self, context) -> None:
+        self.seen |= self.new_files()
 
 
 def _run(spark, rounds, interceptors=()):
@@ -87,12 +119,11 @@ def test_blob_path_matches_arrow_semantics(spark):
 
 def test_short_runs_stay_on_arrow_path(spark):
     """< FILE_CACHE_MIN_ROUNDS rounds must not engage any load-once
-    variant (fixed costs dominate — measured): no prep scratch dir is
-    created."""
-    _run(spark, FILE_CACHE_MIN_ROUNDS - 1)
-    assert glob.glob(
-        os.path.join(tempfile.gettempdir(), "guagua-prep-*")
-    ) == []
+    variant (fixed costs dominate — measured): no prepared file is
+    written during the run."""
+    spy = _PrepSpy()
+    _run(spark, FILE_CACHE_MIN_ROUNDS - 1, interceptors=(spy,))
+    assert spy.seen == set()
 
 
 def test_file_cache_long_run_correct(spark):
@@ -100,7 +131,8 @@ def test_file_cache_long_run_correct(spark):
     result must equal the short-path math extended to the same rounds
     (verified against a driver-side numpy replay)."""
     rounds = FILE_CACHE_MIN_ROUNDS + 2
-    model = _run(spark, rounds)
+    spy = _PrepSpy()
+    model = _run(spark, rounds, interceptors=(spy,))
 
     pdf = _train_df(spark).toPandas()
     x = np.column_stack(
@@ -113,28 +145,35 @@ def test_file_cache_long_run_correct(spark):
         err = pred - y
         w = w - 0.5 * (x.T @ err) / len(y)
     np.testing.assert_allclose(model.weights, w, rtol=1e-9)
-    # the run's scratch dir must be gone after cleanup
-    leftover = glob.glob(
-        os.path.join(tempfile.gettempdir(), "guagua-prep-*")
-    )
-    assert leftover == []
+    # the file cache was engaged, and neither the run's directories nor
+    # its files outlive run()
+    assert spy.seen
+    assert _prep_paths() - spy.before == set()
 
 
-class _DropCacheFiles(MasterInterceptor):
+class _DropCacheFiles(_PrepSpy):
     """Fault injection: after round 2 the hosts 'lose' every prepared
     file — the next round must recover via the re-prepare ladder."""
 
+    def __init__(self) -> None:
+        super().__init__()
+        self.removed = 0
+
     def post_iteration(self, context) -> None:
+        super().post_iteration(context)
         if context.current_iteration == 2:
-            for d in glob.glob(
-                os.path.join(tempfile.gettempdir(), "guagua-prep-*")
-            ):
-                shutil.rmtree(d, ignore_errors=True)
+            for f in self.new_files():
+                os.remove(f)
+                self.removed += 1
 
 
-def test_file_cache_miss_recovers(spark):
+def test_file_cache_miss_recovers(spark, caplog):
     rounds = FILE_CACHE_MIN_ROUNDS + 2
-    broken = _run(spark, rounds, interceptors=(_DropCacheFiles(),))
+    drop = _DropCacheFiles()
+    with caplog.at_level(logging.WARNING, logger="guagua_spark.engine"):
+        broken = _run(spark, rounds, interceptors=(drop,))
+    assert drop.removed >= 1
+    assert any("re-preparing" in m for m in caplog.messages)
     clean = _run(spark, rounds)
     np.testing.assert_array_equal(broken.weights, clean.weights)
 
