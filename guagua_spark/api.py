@@ -19,9 +19,13 @@ Differences from the reference, by design (Spark-first):
   (columnar, zero-copy from the JVM) instead of a line-record reader
   (reference hadoop/io/GuaguaLineRecordReader.java). Convert with
   ``batch.to_pandas()`` for numpy work.
-- Spark tasks are stateless between iterations; anything a guagua worker
-  kept in instance fields across iterations must live in the broadcast
-  master result or be recomputed (SURVEY.md §7 "hard parts" #2).
+- On the Arrow and blob paths every iteration is a new Spark task, so
+  workers are stateless between iterations. On the resident path one
+  task per partition serves the whole run and the worker object lives
+  that long. The engine picks the path at run time and falls back from
+  resident to blob mid-run, so anything a guagua worker kept in instance
+  fields across iterations must still live in the master result or be
+  recomputed (SURVEY.md §7 "hard parts" #2).
 """
 
 from __future__ import annotations
@@ -146,19 +150,21 @@ class WorkerComputable(abc.ABC):
 
     Implementations MUST handle an empty batch iterator (a partition can
     be empty) and MUST NOT rely on instance state surviving between
-    iterations.
+    iterations (it does on the resident path, not on the others).
 
-    LOAD-ONCE FAST PATH: a worker may additionally override ``prepare``
+    LOAD-ONCE PATHS: a worker may additionally override ``prepare``
     (one-time Arrow→anything conversion per partition) and
-    ``compute_prepared``. The engine then scans the input ONCE, persists
-    each partition's prepared object (pickled, block manager,
-    MEMORY_AND_DISK), and every iteration calls ``compute_prepared``
-    with that object instead of re-decoding rows→Arrow→numpy per round.
-    This is the faithful analogue of the reference's load-once worker
-    cache (worker/AbstractWorkerComputable.java:66-104,
-    util/MemoryDiskList.java): data crosses the JVM→Python boundary as
-    one opaque blob per round (memcpy-speed pickle of e.g. numpy
-    arrays), not as rows to re-convert.
+    ``compute_prepared``. The engine then scans the input ONCE and every
+    iteration calls ``compute_prepared`` with the prepared object instead
+    of re-decoding rows→Arrow→numpy per round — the analogue of the
+    reference's load-once worker cache
+    (worker/AbstractWorkerComputable.java:66-104,
+    util/MemoryDiskList.java). On the resident path the object stays in
+    the memory of the task that prepared it for the whole run; on the
+    blob path it is persisted once (pickled, block manager,
+    MEMORY_AND_DISK) and crosses the JVM→Python boundary as one opaque
+    blob per round. ``compute_prepared`` must not modify it: the
+    resident path hands the same object to every iteration.
     """
 
     def init(self, context: WorkerContext) -> None:  # noqa: B027
@@ -213,16 +219,19 @@ class WorkerInterceptor:
     described at WorkerInterceptor.java:33-38, same as the master side
     at GuaguaMasterService.java:63-65).
 
-    Spark mapping (tasks are stateless between iterations, see module
-    docstring): a worker's "application" span is tied to the iteration
+    Spark mapping (see the module docstring on task lifetime): a
+    worker's "application" span is tied to the iteration
     counter — ``pre_application`` fires in the first iteration's task
     (before ``pre_iteration``), ``post_application`` in the
     ``total_iteration``-th task (after ``post_iteration``). When the
     master halts the loop EARLY, executor-side ``post_application``
     cannot fire (a task can't see the future); guaranteed end-of-run
     cleanup belongs in a driver-side ``MasterInterceptor``. Interceptors
-    are pickled into the task closure — keep them small and stateless
-    (state written to instance fields does not survive the task).
+    are pickled into the task closure — keep them small and stateless:
+    state written to instance fields lasts one iteration on the Arrow
+    and blob paths and the whole run on the resident path, and a hook
+    may run again for an iteration that is retried (a failed resident
+    job is finished on the blob path from the failed iteration).
     """
 
     def pre_application(self, context: WorkerContext) -> None:  # noqa: B027

@@ -1,35 +1,53 @@
 """The iterative BSP engine: driver = master, executors = workers.
 
-One Spark job per iteration over the (load-once) partition data:
-
     prepare/persist input → loop:
-        ship(master_result)                     # inline pickle | broadcast
-        per-partition fold                      # Arrow | blob | local file
+        ship(master_result)                     # socket | inline | broadcast
+        per-partition fold                      # resident | blob | Arrow
         treeReduce(combine) | collect           # AllReduce up
         master.compute(worker_results)          # model update, driver-side
         halt? → break
-    unpersist / cleanup
+    stop the resident tasks / unpersist
 
-Per-iteration latency model (measured, local[32], pyspark 4.1.2): any
-job that executes Python tasks carries a fixed ~0.2 s scheduling floor
-regardless of task count (1-32); on top of that, data movement per
-round is (a) Arrow re-decode of the persisted rows (default path), (b)
-a pickled-numpy blob ship (~270 ms per 3×5 MB, blob path), or (c) zero
-(host-local file cache — marker job + page-cache read). The engine
-picks per workload: see the prepared-mode comments in run().
+Per-iteration latency model (measured on 4 cores, local[4], pyspark
+4.1.2): any Spark job that runs Python tasks carries a fixed ~0.2 s
+scheduling floor whatever its task count, while a superstep over a
+socket to tasks that are already running costs well under a
+millisecond. The engine reaches the workers one of three ways and logs
+its choice, with the reason, once per run at INFO:
+
+- resident: ONE gang-scheduled (barrier) Spark job per run. Each task
+  prepares its partition once, keeps it in memory and connects back to
+  a per-run listener on the driver; every superstep is a socket frame
+  down (the master result) and one up (the partial). Taken by a worker
+  that overrides ``prepare``, for ≥ LOAD_ONCE_MIN_ROUNDS rounds, with
+  the full barrier, no executor-side combine, ≤ 32 partitions, no more
+  partitions than the scheduler has task slots, and no dynamic
+  allocation (Spark rejects barrier stages under it). If the job dies,
+  the run finishes on the blob path from the failed iteration. The
+  tasks hold their slots until run() returns: a Spark job that a master
+  or master interceptor waits on mid-run gets only the other slots, and
+  none when the partitions fill the cluster, so it would never finish.
+- blob: the other long prepared runs. Each partition's prepared object
+  is persisted as one pickled blob; each iteration is one job over them.
+- Arrow: workers without ``prepare``, and short runs. Each iteration is
+  one job that re-reads the persisted rows as Arrow batches.
 
 This single loop replaces the reference's entire coordination layer
 (~4,000 LoC of ZooKeeper/Netty master-worker barriers — SURVEY.md §2.6):
 GuaguaMasterService.run's iteration loop (master/GuaguaMasterService.java:
 185-293), the worker mirror loop (worker/GuaguaWorkerService.java:209-341),
 znode publish/poll broadcast (master/AbstractMasterCoordinator.java:58-113),
-and the Netty result transport (master/NettyMasterCoordinator.java).
+and the Netty result transport (master/NettyMasterCoordinator.java), which
+the resident path brings back as a plain socket; Spark still does
+placement, gang scheduling and failure detection.
 
 Scale notes (100 TB / 1000 executors):
-- Input is persisted MEMORY_AND_DISK before the loop — the analogue of the
-  reference's load-once worker cache (worker/AbstractWorkerComputable.java:
-  66-104, util/MemoryDiskList.java); re-reads hit the block manager, and
-  partitions that don't fit in memory spill instead of recomputing.
+- Input is read once before the loop — the analogue of the reference's
+  load-once worker cache (worker/AbstractWorkerComputable.java: 66-104,
+  util/MemoryDiskList.java): resident tasks hold their prepared partition
+  in memory; the other paths persist MEMORY_AND_DISK, so re-reads hit
+  the block manager and partitions that don't fit in memory spill
+  instead of recomputing.
 - Worker→master traffic is one small result per partition. With a
   Combinable result the engine pre-merges executor-side via treeReduce
   (depth 2), so the driver sees O(sqrt(P)) results, not O(P) — the
@@ -37,26 +55,30 @@ Scale notes (100 TB / 1000 executors):
   (master/NettyMasterCoordinator.java:160-200) without its disk-spill
   machinery (BytableMemoryDiskList), which distributed reduction makes
   unnecessary.
-- Master→worker traffic is TorrentBroadcast (BitTorrent-style chunks);
-  the reference's 1 MB ZK chunking (GuaguaConstants.java:140-142) has no
-  analogue because broadcast already scales. Previous iterations'
-  broadcasts are destroyed eagerly (analogue of iter−2 znode GC,
+- Master→worker traffic off the resident path is TorrentBroadcast
+  (BitTorrent-style chunks) above INLINE_MODEL_BYTES; the reference's
+  1 MB ZK chunking (GuaguaConstants.java:140-142) has no analogue
+  because broadcast already scales. Previous iterations' broadcasts are
+  destroyed eagerly (analogue of iter−2 znode GC,
   AbstractMasterCoordinator.java:92-107).
 """
 
 from __future__ import annotations
 
-import glob
+import hmac
 import logging
 import os
 import pickle
-import shutil
+import secrets
+import socket
+import struct
 import tempfile
 import time
+import uuid
 from typing import Any, Callable, Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
-from pyspark import TaskContext
+from pyspark import BarrierTaskContext, InheritableThread, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -85,10 +107,12 @@ DEFAULT_TOTAL_ITERATION = 50
 #: because an inlined model is shipped once PER TASK via the scheduler.
 INLINE_MODEL_BYTES = 256 * 1024
 
-#: minimum (remaining) iterations before the host-local file cache pays
-#: for its fixed prepare/cleanup jobs — see the file-cache comment in
-#: IterativeEngine.run
-FILE_CACHE_MIN_ROUNDS = 8
+#: minimum (remaining) iterations before a worker's ``prepare`` is used:
+#: shorter runs stay on the Arrow path, where the prepared paths' fixed
+#: costs (a prepare pass; for the blob path also a persisted copy) did
+#: not pay for themselves in earlier measurements. Whether the resident
+#: path should also take short runs is open until measured.
+LOAD_ONCE_MIN_ROUNDS = 8
 
 
 class _ModelRef:
@@ -210,99 +234,6 @@ def _make_prepare_fn(
     return fn
 
 
-def _prep_cache_dir(run_id: str) -> str:
-    """Host-local directory for prepared-partition files — the direct
-    analogue of the reference's MemoryDiskList (util/MemoryDiskList.java:
-    42-155): hot data lives in the OS page cache, cold spills to disk.
-    Rooted in the executor's Spark scratch space when available (Python
-    workers see SPARK_LOCAL_DIRS as the block manager's dirs)."""
-    base = os.environ.get("SPARK_LOCAL_DIRS")
-    base = base.split(",")[0] if base else tempfile.gettempdir()
-    return os.path.join(base, f"guagua-prep-{run_id}")
-
-
-def _driver_prep_dirs(sc, run_id: str) -> list[str]:
-    """This run's prepared-file directories on the driver's host. The
-    driver resolves Spark's local-dir roots (SPARK_LOCAL_DIRS, else
-    spark.local.dir, else the temp dir) and globs one level below each,
-    where the block manager's ``blockmgr-*`` dirs live; the run id is a
-    fresh uuid, so only this run's directories match."""
-    roots = (
-        os.environ.get("SPARK_LOCAL_DIRS")
-        or sc.getConf().get("spark.local.dir")
-        or tempfile.gettempdir()
-    )
-    name = f"guagua-prep-{run_id}"
-    return [
-        d
-        for root in roots.split(",")
-        for d in glob.glob(os.path.join(root, "*", name))
-    ]
-
-
-def _make_prepare_write_fn(
-    worker: WorkerComputable, run_id: str
-) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """Prepare + persist to a host-local file; emit only the partition
-    id. Atomic tmp+rename so concurrent (speculative) attempts can't
-    interleave partial writes."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = _partition_id()
-        data = worker.prepare(batches)
-        d = _prep_cache_dir(run_id)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f"p{pid}.pkl.tmp.{os.getpid()}")
-        with open(tmp, "wb") as f:
-            pickle.dump(data, f, protocol=pickle.HIGHEST_PROTOCOL)
-        os.replace(tmp, os.path.join(d, f"p{pid}.pkl"))
-        yield pa.RecordBatch.from_pydict({"pid": [pid]})
-
-    return fn
-
-
-def _make_file_iter_fn(task: _Task, run_id: str):
-    """Per-iteration task over the host-local prepared files. Ships NO
-    partition data through the JVM (the input is a cached 8-byte
-    marker); yields (pid, pickled result) or (pid, None) when the file
-    is absent on this host — the driver then falls back (re-prepare via
-    the scan, or the direct Arrow path)."""
-
-    def fn(markers) -> Iterator[tuple]:
-        pid = _partition_id()
-        path = os.path.join(_prep_cache_dir(run_id), f"p{pid}.pkl")
-        if not os.path.exists(path):
-            yield (pid, None)
-            return
-        with open(path, "rb") as f:
-            data = pickle.load(f)
-        yield (
-            pid,
-            _run_task(
-                task, pid, lambda ctx: task.worker.compute_prepared(ctx, data)
-            ),
-        )
-
-    return fn
-
-
-def _make_cleanup_fn(run_id: str):
-    """Best-effort removal of this run's prepared files on the host that
-    executes each cleanup task: locality routes tasks to the hosts that
-    wrote the files, and each task removes the ENTIRE run directory on
-    its host (not just its own partition's file), so one task landing on
-    a host reclaims everything that host stored. A task landing on a
-    host with no files is a no-op. Residual risk — a host that stored
-    files but receives no cleanup task — is bounded by run_id-scoped
-    directories an operator can reap by age."""
-
-    def fn(markers) -> Iterator[int]:
-        shutil.rmtree(_prep_cache_dir(run_id), ignore_errors=True)
-        yield 0
-
-    return fn
-
-
 def _make_prepared_iter_fn(
     task: _Task,
 ) -> Callable[[Iterator[bytes]], Iterator[bytes]]:
@@ -320,6 +251,335 @@ def _make_prepared_iter_fn(
         )
 
     return fn
+
+
+def _prepared_blobs(df: DataFrame, worker: WorkerComputable, level):
+    """The blob path's input: one persisted pickled prepare() output per
+    partition. Take the run's partition count from this RDD: under AQE a
+    shuffle-rooted ``df`` can re-plan with a different partition count
+    on every ``.rdd`` call (observed: a groupBy-rooted vocabulary flips
+    between 1 and 8)."""
+    return (
+        df.mapInArrow(_make_prepare_fn(worker), "blob binary")
+        .rdd.map(lambda row: bytes(row.blob))
+        .persist(level)
+    )
+
+
+# -- resident path ---------------------------------------------------------
+# Wire format, all big-endian. Driver → task: _DOWN (iteration, payload
+# length) + the pickled master result; iteration 0 tells the task to
+# stop. Task → driver: first the raw run token + _HELLO (partition id,
+# tasks in the stage), then per superstep _UP (length) + the pickled
+# (result, halt vote) of _run_task.
+_DOWN = struct.Struct("!qQ")
+_HELLO = struct.Struct("!qq")
+_UP = struct.Struct("!Q")
+_STOP = _DOWN.pack(0, 0)
+_TOKEN_BYTES = 32
+#: driver-side socket poll: how often a wait re-checks that the job lives
+_POLL_S = 0.1
+#: how long a new connection may take to send its token and hello
+_HELLO_TIMEOUT_S = 10.0
+
+
+class _ResidentLost(Exception):
+    """The resident job cannot serve supersteps any more. The message
+    is the class and first line of the error that showed it."""
+
+    def __init__(self, cause: BaseException) -> None:
+        first = (str(cause).strip().splitlines() or [""])[0]
+        super().__init__(f"{type(cause).__name__}: {first}")
+
+
+def _recv_exact(
+    sock: socket.socket, n: int, check: Callable[[], None] | None = None
+) -> bytearray:
+    """Read exactly ``n`` bytes. On a socket with a timeout, ``check``
+    runs at every timeout and raises once waiting is pointless."""
+    buf = bytearray(n)
+    view = memoryview(buf)
+    got = 0
+    while got < n:
+        try:
+            k = sock.recv_into(view[got:])
+        except TimeoutError:
+            check()
+            continue
+        if k == 0:
+            raise EOFError(f"connection closed after {got} of {n} bytes")
+        got += k
+    return buf
+
+
+def _send_all(
+    sock: socket.socket, data: bytes, check: Callable[[], None]
+) -> None:
+    """sendall on a socket with a timeout, running ``check`` at every
+    timeout (a timed-out send() has sent nothing)."""
+    view = memoryview(data)
+    while view:
+        try:
+            view = view[sock.send(view):]
+        except TimeoutError:
+            check()
+
+
+def _serve_resident(
+    batches: Iterator[pa.RecordBatch],
+    worker: WorkerComputable,
+    total_iteration: int,
+    props: dict[str, Any],
+    interceptors: Sequence[WorkerInterceptor],
+    addr: tuple[str, int],
+    token: bytes,
+) -> None:
+    """Body of a resident task: prepare the partition once, connect to
+    the driver, then run one _run_task per superstep frame until the
+    stop frame. The worker and interceptor objects live for the whole
+    run. Module-level, so task closures pickle it by reference."""
+    pid = _partition_id()
+    tasks = len(BarrierTaskContext.get().getTaskInfos())
+    data = worker.prepare(batches)
+
+    def compute(ctx: WorkerContext) -> Any:
+        return worker.compute_prepared(ctx, data)
+
+    with socket.create_connection(addr) as sock:
+        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        sock.sendall(token + _HELLO.pack(pid, tasks))
+        while True:
+            iteration, size = _DOWN.unpack(_recv_exact(sock, _DOWN.size))
+            if iteration == 0:
+                return
+            model = _ModelRef(payload=_recv_exact(sock, size))
+            task = _Task(
+                worker, iteration, total_iteration, props, model,
+                interceptors,
+            )
+            out = _run_task(task, pid, compute)
+            sock.sendall(_UP.pack(len(out)) + out)
+
+
+def _make_resident_fn(
+    worker: WorkerComputable,
+    total_iteration: int,
+    props: dict[str, Any],
+    interceptors: Sequence[WorkerInterceptor],
+    addr: tuple[str, int],
+    token: bytes,
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """mapInArrow function of the resident job; it yields no rows."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _serve_resident(
+            batches, worker, total_iteration, props, interceptors, addr,
+            token,
+        )
+        return iter(())
+
+    return fn
+
+
+class _Listener:
+    """The per-run socket resident tasks connect back to, bound to the
+    driver's host. A connection's first bytes must be the run's raw
+    token; any other connection is closed unread, so nothing a stranger
+    sends is ever unpickled. The first hello fixes the run's task count
+    (the stage as Spark realized it, which under AQE can differ from an
+    earlier ``getNumPartitions()``); every other hello must agree."""
+
+    def __init__(self, host: str) -> None:
+        self.token = secrets.token_bytes(_TOKEN_BYTES)
+        self.tasks: int | None = None
+        self.conns: dict[int, socket.socket] = {}
+        self.sock = socket.create_server((host, 0))
+        self.sock.settimeout(_POLL_S)
+        self.addr = self.sock.getsockname()[:2]
+
+    def accept(self, check: Callable[[], None]) -> None:
+        """Accept until every task of the stage said hello; ``check``
+        raises _ResidentLost once the job is gone."""
+        while self.tasks is None or len(self.conns) < self.tasks:
+            check()
+            try:
+                conn, _ = self.sock.accept()
+            except TimeoutError:
+                continue
+            conn.settimeout(_POLL_S)
+            pid = None
+            try:
+                pid = self._hello(conn, check)
+            except (OSError, EOFError):  # timed out or hung up mid-hello
+                pass
+            finally:
+                if pid is None:
+                    conn.close()
+            if pid is not None:
+                self.conns[pid] = conn
+
+    def _hello(self, conn: socket.socket, check: Callable[[], None]):
+        deadline = time.monotonic() + _HELLO_TIMEOUT_S
+
+        def waiting() -> None:
+            check()
+            if time.monotonic() > deadline:
+                raise TimeoutError("no hello")
+
+        token = bytes(_recv_exact(conn, _TOKEN_BYTES, waiting))
+        if not hmac.compare_digest(token, self.token):
+            log.warning(
+                "resident listener: closed a connection with a wrong token"
+            )
+            return None
+        pid, tasks = _HELLO.unpack(_recv_exact(conn, _HELLO.size, waiting))
+        if self.tasks is None:
+            self.tasks = tasks
+        if tasks != self.tasks or pid in self.conns or not 0 <= pid < tasks:
+            raise _ResidentLost(
+                ValueError(f"hello from task {pid} of {tasks} after "
+                           f"{sorted(self.conns)} of {self.tasks}")
+            )
+        conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        return pid
+
+    def close(self) -> None:
+        for conn in self.conns.values():
+            conn.close()
+        self.sock.close()
+
+
+class _Resident:
+    """Driver end of a resident run. The barrier job starts at the first
+    superstep, from an InheritableThread so it keeps the caller's job
+    group and scheduler pool, under a per-run job tag that cancels it
+    without touching the caller's group."""
+
+    def __init__(
+        self,
+        sc,
+        df: DataFrame,
+        worker: WorkerComputable,
+        total_iteration: int,
+        props: dict[str, Any],
+        interceptors: Sequence[WorkerInterceptor],
+    ) -> None:
+        self.sc = sc
+        self.args = (df, worker, total_iteration, props, interceptors)
+        self.tag = f"guagua-resident-{uuid.uuid4().hex[:12]}"
+        self.listener: _Listener | None = None
+        self.thread: InheritableThread | None = None
+        self.error: BaseException | None = None
+
+    def _start(self) -> None:
+        df, worker, total_iteration, props, interceptors = self.args
+        self.listener = _Listener(self.sc.getConf().get("spark.driver.host"))
+        job = df.mapInArrow(
+            _make_resident_fn(
+                worker, total_iteration, props, interceptors,
+                self.listener.addr, self.listener.token,
+            ),
+            "done boolean",
+            barrier=True,
+        )
+
+        def run_job() -> None:
+            try:
+                self.sc.addJobTag(self.tag)
+                self.sc.setJobDescription("guagua resident run")
+                job.collect()
+            except Exception as exc:  # noqa: BLE001 — raised by _check
+                self.error = exc
+
+        self.thread = InheritableThread(target=run_job, daemon=True)
+        self.thread.start()
+        self.listener.accept(self._check)
+
+    def _check(self) -> None:
+        if not self.thread.is_alive():
+            raise _ResidentLost(
+                self.error or EOFError("the resident job ended")
+            )
+
+    def superstep(self, iteration: int, payload: bytes) -> list[bytearray]:
+        """Send the master result to every task; return the pickled
+        partials in partition order."""
+        try:
+            if self.thread is None:
+                self._start()
+            conns = [self.listener.conns[p] for p in sorted(self.listener.conns)]
+            frame = _DOWN.pack(iteration, len(payload)) + payload
+            for conn in conns:
+                _send_all(conn, frame, self._check)
+            out = []
+            for conn in conns:
+                (size,) = _UP.unpack(_recv_exact(conn, _UP.size, self._check))
+                out.append(_recv_exact(conn, size, self._check))
+            return out
+        except (OSError, EOFError) as exc:
+            raise _ResidentLost(exc) from exc
+
+    def close(self, cancel: bool = False) -> None:
+        """Release the run's task slots: send every task the stop frame,
+        or cancel the job when asked to or when some task cannot be
+        told; then join the job thread, which also lands the tasks'
+        accumulator updates on the driver."""
+        if self.thread is None:
+            if self.listener is not None:
+                self.listener.close()
+            return
+        told = 0
+        if not cancel:
+            for conn in self.listener.conns.values():
+                try:
+                    _send_all(conn, _STOP, self._check)
+                    told += 1
+                except (OSError, _ResidentLost):
+                    pass
+        self.listener.close()
+        if told != self.listener.tasks:  # None: no task ever said hello
+            # repeat: a job that was not yet submitted at the first cancel
+            # is caught by the next
+            while self.thread.is_alive():
+                self.sc.cancelJobsWithTag(self.tag)
+                self.thread.join(_POLL_S * 10)
+        self.thread.join()
+
+
+def _task_slots(sc) -> int:
+    """How many tasks the scheduler can run at once under the default
+    resource profile; a barrier stage needs one slot per task."""
+    jsc = sc._jsc.sc()
+    return jsc.maxNumConcurrentTasks(
+        jsc.resourceProfileManager().defaultResourceProfile()
+    )
+
+
+def _resident_blocker(
+    sc,
+    num_partitions: int,
+    min_workers_ratio: float,
+    combine_executor_side: bool | None,
+) -> str | None:
+    """Why a long prepared run cannot take the resident path, or None
+    when it can. The slot check runs before any job is submitted: a
+    barrier stage wider than the cluster is retried by Spark's slot
+    check for minutes before it fails."""
+    if num_partitions == 0:
+        return "no partitions"
+    if min_workers_ratio < 1.0:
+        return "partial barrier"
+    if combine_executor_side is True:
+        return "executor-side combine"
+    if num_partitions > 32:
+        return f"{num_partitions} partitions > 32"
+    conf = sc.getConf()
+    if conf.get("spark.dynamicAllocation.enabled", "false").lower() == "true":
+        return "dynamic allocation"
+    slots = _task_slots(sc)
+    if num_partitions > slots:
+        return f"{num_partitions} partitions > {slots} task slots"
+    return None
 
 
 #: non-combinable master path: above this estimated total result size
@@ -473,62 +733,6 @@ class IterativeEngine:
         with open(path, "rb") as f:
             return pickle.load(f)
 
-    def _collect_file_cached(
-        self,
-        task: _Task,
-        run_id: str,
-        marker_rdd,
-        ensure_rdd,
-        df: DataFrame,
-        num_partitions: int,
-    ) -> list[_Partial]:
-        """One iteration over host-local prepared files (see the
-        file-cache comments in run()). Miss ladder when a host lost its
-        file: (1) re-run prepare for the missing partitions (rewrites
-        the file where the task lands), retry once; (2) any partition
-        still missing computes via the direct Arrow path — always
-        correct, just not cached."""
-        sc = self.spark.sparkContext
-        ffn = _make_file_iter_fn(task, run_id)
-        raw = marker_rdd.mapPartitions(ffn).collect()
-        got = {pid: payload for pid, payload in raw if payload is not None}
-        missing = sorted(set(range(num_partitions)) - set(got))
-        if missing:
-            log.warning(
-                "prepared files missing for partitions %s at iteration "
-                "%d; re-preparing", missing, task.iteration,
-            )
-            sc.runJob(ensure_rdd, lambda it: list(it), missing)
-            retried = sc.runJob(
-                marker_rdd, lambda it: list(ffn(it)), missing
-            )
-            for pid, payload in retried:
-                if payload is not None:
-                    got[pid] = payload
-            still = sorted(set(range(num_partitions)) - set(got))
-            if still:
-                out = df.mapInArrow(_make_worker_fn(task), "result binary")
-                # this is a FRESH realization of the plan: under AQE
-                # even an equal partition count doesn't prove the same
-                # row→partition assignment as the pinned realization
-                # (coalesce boundaries are stats-dependent), so partial
-                # reuse could double count rows — recompute the WHOLE
-                # iteration from this one realization instead
-                # (complete cover, no overlap; correctness over cache
-                # thrift on an already-rare double-miss path).
-                # Interceptor semantics here are AT-LEAST-ONCE: the
-                # partitions that already produced file-cached results
-                # ran their worker hooks in ffn above, and this full
-                # recompute runs them a second time — the same contract
-                # a reference worker has under a Hadoop task reattempt
-                # (WorkerInterceptor hooks re-fire on the new attempt,
-                # GuaguaMapper re-runs the iteration wholesale), so
-                # side-effectful interceptors must be idempotent per
-                # (run_id, iteration) just as they must be on YARN.
-                rows = out.rdd.collect()
-                got = {pid: bytes(r.result) for pid, r in enumerate(rows)}
-        return [_unwrap_partial(got[pid]) for pid in sorted(got)]
-
     def _collect_partial_barrier(
         self,
         partials,
@@ -649,8 +853,9 @@ class IterativeEngine:
         unfinished groups at the deadline — bounded scheduling overhead
         (≤64 jobs/iteration at any partition count), but a cancelled
         straggler drops its whole batch (≈ partitions/64 workers). The
-        extra scheduling cost keeps it opt-in; the default path is a
-        single job per iteration.
+        extra scheduling cost keeps it opt-in; the default paths run one
+        job per iteration, or one job per run on the resident path (see
+        the module docstring), which the partial barrier never takes.
 
         ``result_bytes_budget`` bounds DRIVER memory on the
         non-combinable path: partition 0's pickled result size is
@@ -672,78 +877,44 @@ class IterativeEngine:
             start_iteration, master_result = ckpt[0] + 1, ckpt[1]
             log.info("resuming from checkpoint at iteration %d", start_iteration)
 
-        # LOAD-ONCE FAST PATH (reference MemoryDiskList parity — see
+        # LOAD-ONCE PATHS (reference MemoryDiskList parity — see
         # WorkerComputable.prepare): scan + convert each partition once;
         # every iteration then reuses the converted form instead of
-        # re-decoding rows→Arrow→numpy.
-        prepared_mode = (
-            type(worker).prepare is not WorkerComputable.prepare
-        )
-        # Short runs stay on the persisted-Arrow path: bench A/B at
-        # sf0.1 showed the load-once variants' fixed costs (prepare
-        # pass, blob materialization, cleanup) outweigh their per-round
-        # savings below ~8 rounds, while the reference's actual training
-        # jobs (50-200 rounds) amortize them many times over.
-        if prepared_mode and (
-            total_iteration - start_iteration + 1 < FILE_CACHE_MIN_ROUNDS
-        ):
-            prepared_mode = False
+        # re-decoding rows→Arrow→numpy. Short runs stay on the Arrow
+        # path (see LOAD_ONCE_MIN_ROUNDS).
+        remaining = total_iteration - start_iteration + 1
         prep_rdd = None
-        marker_rdd = None
-        ensure_df = None
-        ensure_rdd = None
-        run_id = None
-        use_file_cache = False
-        if prepared_mode:
-            num_partitions = df.rdd.getNumPartitions()
-            # FILE-CACHE variant: rounds ship ZERO partition data — the
-            # job maps over an 8-byte cached marker per partition and
-            # reads the prepared file from the host-local page cache.
-            # Its fixed costs (a prepare+write first round, a cleanup
-            # pass) only amortize on long runs: measured on local[32],
-            # ~+0.4 s fixed vs ~0.05-0.1 s saved per round, so it wins
-            # beyond ~FILE_CACHE_MIN_ROUNDS rounds (the reference's real
-            # training jobs run 50-200). Short runs and the treeReduce
-            # (>32 partitions) / partial-barrier paths use the blob RDD,
-            # which has no fixed-job overhead.
-            remaining = total_iteration - start_iteration + 1
-            use_file_cache = (
-                min_workers_ratio >= 1.0
-                and num_partitions <= 32
-                and combine_executor_side is not True
-                and remaining >= FILE_CACHE_MIN_ROUNDS
+        resident = None
+        if type(worker).prepare is WorkerComputable.prepare:
+            path, why = "arrow", "the worker does not override prepare"
+        elif remaining < LOAD_ONCE_MIN_ROUNDS:
+            path, why = "arrow", (
+                f"{remaining} rounds < {LOAD_ONCE_MIN_ROUNDS}"
             )
-            if use_file_cache:
-                import uuid
-
-                run_id = uuid.uuid4().hex[:12]
-                ensure_df = df.mapInArrow(
-                    _make_prepare_write_fn(worker, run_id), "pid long"
-                )
-                # realize the plan ONCE and derive everything from that
-                # realization: under AQE a shuffle-rooted input can
-                # re-plan with a DIFFERENT partition count on every
-                # .rdd call, so a fresh realization in the retry path
-                # would make the cached markers' partition ids dangle
-                # (observed: repeated runs over a groupBy-rooted vocab
-                # flip between 1 and 2 post-AQE partitions)
-                ensure_rdd = ensure_df.rdd
-                marker_rdd = ensure_rdd.map(
-                    lambda row: row.pid
-                ).persist(storage_level)
-                num_partitions = marker_rdd.getNumPartitions()
-            else:
-                prep_fn = _make_prepare_fn(worker)
-                prep_rdd = (
-                    df.mapInArrow(prep_fn, "blob binary")
-                    .rdd.map(lambda row: bytes(row.blob))
-                    .persist(storage_level)
-                )
-            persist = False  # raw df no longer re-read after prepare
         else:
+            num_partitions = df.rdd.getNumPartitions()
+            why = _resident_blocker(
+                sc, num_partitions, min_workers_ratio, combine_executor_side
+            )
+            if why is None:
+                path, why = "resident", (
+                    f"{remaining} rounds, {num_partitions} partitions fit "
+                    "the task slots"
+                )
+                resident = _Resident(
+                    sc, df, worker, total_iteration, self.props,
+                    worker_interceptors,
+                )
+            else:
+                path = "blob"
+                prep_rdd = _prepared_blobs(df, worker, storage_level)
+                num_partitions = prep_rdd.getNumPartitions()
+            persist = False  # raw df no longer re-read after prepare
+        if path == "arrow":
             if persist:
                 df = df.persist(storage_level)
             num_partitions = df.rdd.getNumPartitions()
+        log.info("%s path: %s", path, why)
 
         mctx = MasterContext(
             current_iteration=0,
@@ -785,34 +956,61 @@ class IterativeEngine:
                 payload = pickle.dumps(
                     master_result, protocol=pickle.HIGHEST_PROTOCOL
                 )
-                if len(payload) <= INLINE_MODEL_BYTES:
-                    bc = _ModelRef(payload=payload)
-                else:
-                    bc = _ModelRef(bc=sc.broadcast(payload))
-                task = _Task(
-                    worker, iteration, total_iteration, self.props, bc,
-                    worker_interceptors,
-                )
-                if prepared_mode and not use_file_cache:
-                    out_rdd = prep_rdd.mapPartitions(
-                        _make_prepared_iter_fn(task)
+                from_resident = None
+                if resident is not None:
+                    try:
+                        from_resident = [
+                            _unwrap_partial(b)
+                            for b in resident.superstep(iteration, payload)
+                        ]
+                    except _ResidentLost as lost:
+                        # hooks of this iteration may have run on some
+                        # tasks already; they run again on the blob path
+                        # (at-least-once, as under any task retry)
+                        log.warning(
+                            "resident job lost at iteration %d (%s); "
+                            "finishing the run on the blob path",
+                            iteration, lost,
+                        )
+                        resident.close(cancel=True)
+                        resident = None
+                        prep_rdd = _prepared_blobs(df, worker, storage_level)
+                        num_partitions = prep_rdd.getNumPartitions()
+                        mctx.num_workers = num_partitions
+                if from_resident is None:
+                    if len(payload) <= INLINE_MODEL_BYTES:
+                        bc = _ModelRef(payload=payload)
+                    else:
+                        bc = _ModelRef(bc=sc.broadcast(payload))
+                    task = _Task(
+                        worker, iteration, total_iteration, self.props, bc,
+                        worker_interceptors,
                     )
-                    partials_rdd = out_rdd.map(_unwrap_partial)
-                elif not prepared_mode:
-                    out = df.mapInArrow(
-                        _make_worker_fn(task), "result binary"
-                    )
-                    out_rdd = None
-                    partials_rdd = None
-                else:  # file-cache variant: handled in the collect branch
-                    out_rdd = None
-                    partials_rdd = None
+                    if prep_rdd is not None:
+                        out_rdd = prep_rdd.mapPartitions(
+                            _make_prepared_iter_fn(task)
+                        )
+                        partials_rdd = out_rdd.map(_unwrap_partial)
+                    else:
+                        out = df.mapInArrow(
+                            _make_worker_fn(task), "result binary"
+                        )
+                        out_rdd = None
+                        partials_rdd = None
 
                 combinable = combine_executor_side
                 if combinable is None:
                     combinable = num_partitions > 32
                 results: list[Any]
-                if min_workers_ratio < 1.0:
+                if from_resident is not None:
+                    results = [p.result for p in from_resident]
+                    all_halt = bool(from_resident) and all(
+                        p.all_halt for p in from_resident
+                    )
+                    # the stage as Spark realized it (see _Listener)
+                    num_partitions = mctx.num_workers = len(from_resident)
+                    mctx.arrived_workers = num_partitions
+                elif min_workers_ratio < 1.0:
                     if partials_rdd is None:
                         partials_rdd = out.rdd.map(
                             lambda row: _unwrap_partial(row.result)
@@ -847,172 +1045,107 @@ class IterativeEngine:
                     # df.rdd conversion's extra serializer stage —
                     # measured ~25% lower per-iteration latency, which
                     # compounds over a 50-round training loop
-                    if use_file_cache:
-                        collected = self._collect_file_cached(
-                            task, run_id, marker_rdd, ensure_rdd, df,
-                            num_partitions,
+                    raw_rdd = (
+                        out_rdd
+                        if prep_rdd is not None
+                        else out.rdd.map(
+                            lambda row: bytes(row.result)
                         )
-                        results = [p.result for p in collected]
-                        all_halt = bool(collected) and all(
-                            p.all_halt for p in collected
+                    )
+                    if lazy_mode is None and num_partitions == 0:
+                        lazy_mode = False  # nothing to probe
+                    if lazy_mode is None:
+                        # one-time probe: MAX pickled-RESULT size
+                        # over K spread sample partitions (first /
+                        # middle / last) sizes the full collect —
+                        # max-of-K so a skewed (tiny or huge) first
+                        # partition cannot misclassify the whole
+                        # run (round-9 advice: the old partition-0
+                        # probe did exactly that). Fetching the
+                        # bytes (not just a length) makes the probe
+                        # these partitions' one and only execution
+                        # this iteration — no duplicated worker
+                        # side effects — and the rest of iteration
+                        # 1 runs over the unprobed partitions.
+                        # Later iterations skip the probe entirely.
+                        probe_pids = sorted(
+                            {
+                                0,
+                                num_partitions // 2,
+                                num_partitions - 1,
+                            }
                         )
-                        mctx.arrived_workers = num_partitions
-                    else:
-                        raw_rdd = (
-                            out_rdd
-                            if prepared_mode
-                            else out.rdd.map(
-                                lambda row: bytes(row.result)
-                            )
+                        probe_raw = sc.runJob(
+                            raw_rdd,
+                            lambda it: [list(it)],
+                            probe_pids,
                         )
-                        if lazy_mode is None and num_partitions == 0:
-                            lazy_mode = False  # nothing to probe
-                        if lazy_mode is None:
-                            # one-time probe: MAX pickled-RESULT size
-                            # over K spread sample partitions (first /
-                            # middle / last) sizes the full collect —
-                            # max-of-K so a skewed (tiny or huge) first
-                            # partition cannot misclassify the whole
-                            # run (round-9 advice: the old partition-0
-                            # probe did exactly that). Fetching the
-                            # bytes (not just a length) makes the probe
-                            # these partitions' one and only execution
-                            # this iteration — no duplicated worker
-                            # side effects — and the rest of iteration
-                            # 1 runs over the unprobed partitions.
-                            # Later iterations skip the probe entirely.
-                            probe_pids = sorted(
-                                {
-                                    0,
-                                    num_partitions // 2,
-                                    num_partitions - 1,
-                                }
+                        probed_chunks = dict(
+                            zip(probe_pids, probe_raw)
+                        )
+                        max_bytes = max(
+                            sum(len(b) for b in chunk)
+                            for chunk in probe_raw
+                        )
+                        lazy_mode = (
+                            max_bytes * num_partitions
+                            > result_bytes_budget
+                        )
+                        if lazy_mode:
+                            log.info(
+                                "non-combinable results estimated at"
+                                " %d bytes (> budget %d): streaming"
+                                " partials via toLocalIterator",
+                                max_bytes * num_partitions,
+                                result_bytes_budget,
                             )
-                            probe_raw = sc.runJob(
-                                raw_rdd,
-                                lambda it: [list(it)],
-                                probe_pids,
-                            )
-                            probed_chunks = dict(
-                                zip(probe_pids, probe_raw)
-                            )
-                            max_bytes = max(
-                                sum(len(b) for b in chunk)
-                                for chunk in probe_raw
-                            )
-                            lazy_mode = (
-                                max_bytes * num_partitions
-                                > result_bytes_budget
-                            )
-                            if lazy_mode:
-                                log.info(
-                                    "non-combinable results estimated at"
-                                    " %d bytes (> budget %d): streaming"
-                                    " partials via toLocalIterator",
-                                    max_bytes * num_partitions,
-                                    result_bytes_budget,
-                                )
-                            rest = [
-                                p
-                                for p in range(num_partitions)
-                                if p not in probed_chunks
-                            ]
-                            if lazy_mode:
-                                # walk pids IN ORDER, serving probed
-                                # partitions from the driver cache —
-                                # the stream order matches the eager
-                                # path's partition order exactly
+                        rest = [
+                            p
+                            for p in range(num_partitions)
+                            if p not in probed_chunks
+                        ]
+                        if lazy_mode:
+                            # walk pids IN ORDER, serving probed
+                            # partitions from the driver cache —
+                            # the stream order matches the eager
+                            # path's partition order exactly
 
-                                def _first_iter_partials(
-                                    cached=probed_chunks,
-                                    n=num_partitions,
-                                    rdd=raw_rdd,
-                                ):
-                                    for pid in range(n):
-                                        chunk = cached.pop(pid, None)
-                                        if chunk is None:
-                                            (chunk,) = sc.runJob(
-                                                rdd,
-                                                lambda it: [list(it)],
-                                                [pid],
-                                            )
-                                        for b in chunk:
-                                            yield _unwrap_partial(b)
-
-                                results = _LazyWorkerResults(
-                                    _first_iter_partials()
-                                )
-                                all_halt = False
-                            else:
-                                if rest:
-                                    for pid, chunk in zip(
-                                        rest,
-                                        sc.runJob(
-                                            raw_rdd,
+                            def _first_iter_partials(
+                                cached=probed_chunks,
+                                n=num_partitions,
+                                rdd=raw_rdd,
+                            ):
+                                for pid in range(n):
+                                    chunk = cached.pop(pid, None)
+                                    if chunk is None:
+                                        (chunk,) = sc.runJob(
+                                            rdd,
                                             lambda it: [list(it)],
-                                            rest,
-                                        ),
-                                    ):
-                                        probed_chunks[pid] = chunk
-                                raws = [
-                                    b
-                                    for pid in range(num_partitions)
-                                    for b in probed_chunks[pid]
-                                ]
-                                collected = [
-                                    _unwrap_partial(b) for b in raws
-                                ]
-                                results = [p.result for p in collected]
-                                all_halt = bool(collected) and all(
-                                    p.all_halt for p in collected
-                                )
-                            mctx.arrived_workers = num_partitions
-                        elif lazy_mode:
+                                            [pid],
+                                        )
+                                    for b in chunk:
+                                        yield _unwrap_partial(b)
+
                             results = _LazyWorkerResults(
-                                _unwrap_partial(b)
-                                for b in raw_rdd.toLocalIterator(
-                                    prefetchPartitions=True
-                                )
+                                _first_iter_partials()
                             )
-                            # halt votes fold as the master drains the
-                            # stream — evaluated post-compute below
                             all_halt = False
-                            mctx.arrived_workers = num_partitions
                         else:
-                            # steady-state eager path: DataFrame-level
-                            # collect (skips the df.rdd conversion's
-                            # extra serializer stage — the ~25% noted
-                            # above); raw_rdd is only ever EXECUTED by
-                            # the probe and lazy paths
-                            if prepared_mode:
-                                raws = [
-                                    bytes(b) for b in out_rdd.collect()
-                                ]
-                            else:
-                                raws = [
-                                    bytes(r.result)
-                                    for r in out.collect()
-                                ]
-                            # results can GROW across iterations
-                            # (typical of training loops with growing
-                            # models) past the iteration-1 probe's
-                            # verdict — the growth is observable, and
-                            # a persistent breach flips to streaming
-                            # from the NEXT iteration (safe now that
-                            # _LazyWorkerResults is re-iterable, so the
-                            # master-facing contract doesn't change)
-                            observed = sum(len(b) for b in raws)
-                            if observed > result_bytes_budget:
-                                log.warning(
-                                    "eager-collected worker results"
-                                    " (%d bytes) exceeded the budget"
-                                    " (%d) at iteration %d; switching"
-                                    " to streamed master consumption",
-                                    observed,
-                                    result_bytes_budget,
-                                    iteration,
-                                )
-                                lazy_mode = True
+                            if rest:
+                                for pid, chunk in zip(
+                                    rest,
+                                    sc.runJob(
+                                        raw_rdd,
+                                        lambda it: [list(it)],
+                                        rest,
+                                    ),
+                                ):
+                                    probed_chunks[pid] = chunk
+                            raws = [
+                                b
+                                for pid in range(num_partitions)
+                                for b in probed_chunks[pid]
+                            ]
                             collected = [
                                 _unwrap_partial(b) for b in raws
                             ]
@@ -1020,7 +1153,61 @@ class IterativeEngine:
                             all_halt = bool(collected) and all(
                                 p.all_halt for p in collected
                             )
-                            mctx.arrived_workers = num_partitions
+                        mctx.arrived_workers = num_partitions
+                    elif lazy_mode:
+                        results = _LazyWorkerResults(
+                            _unwrap_partial(b)
+                            for b in raw_rdd.toLocalIterator(
+                                prefetchPartitions=True
+                            )
+                        )
+                        # halt votes fold as the master drains the
+                        # stream — evaluated post-compute below
+                        all_halt = False
+                        mctx.arrived_workers = num_partitions
+                    else:
+                        # steady-state eager path: DataFrame-level
+                        # collect (skips the df.rdd conversion's
+                        # extra serializer stage — the ~25% noted
+                        # above); raw_rdd is only ever EXECUTED by
+                        # the probe and lazy paths
+                        if prep_rdd is not None:
+                            raws = [
+                                bytes(b) for b in out_rdd.collect()
+                            ]
+                        else:
+                            raws = [
+                                bytes(r.result)
+                                for r in out.collect()
+                            ]
+                        # results can GROW across iterations
+                        # (typical of training loops with growing
+                        # models) past the iteration-1 probe's
+                        # verdict — the growth is observable, and
+                        # a persistent breach flips to streaming
+                        # from the NEXT iteration (safe now that
+                        # _LazyWorkerResults is re-iterable, so the
+                        # master-facing contract doesn't change)
+                        observed = sum(len(b) for b in raws)
+                        if observed > result_bytes_budget:
+                            log.warning(
+                                "eager-collected worker results"
+                                " (%d bytes) exceeded the budget"
+                                " (%d) at iteration %d; switching"
+                                " to streamed master consumption",
+                                observed,
+                                result_bytes_budget,
+                                iteration,
+                            )
+                            lazy_mode = True
+                        collected = [
+                            _unwrap_partial(b) for b in raws
+                        ]
+                        results = [p.result for p in collected]
+                        all_halt = bool(collected) and all(
+                            p.all_halt for p in collected
+                        )
+                        mctx.arrived_workers = num_partitions
 
                 mctx.worker_results = results
                 mctx.all_workers_halted = worker_halt_enable and all_halt
@@ -1052,6 +1239,8 @@ class IterativeEngine:
                     log.info("halt signalled at iteration %d", iteration)
                     break
         finally:
+            if resident is not None:
+                resident.close()
             for icpt in reversed(interceptors):
                 icpt.post_application(mctx)
             if bc is not None:
@@ -1060,22 +1249,6 @@ class IterativeEngine:
                 df.unpersist()
             if prep_rdd is not None:
                 prep_rdd.unpersist()
-            if marker_rdd is not None:
-                if not sc.master.startswith("local"):
-                    try:
-                        # locality routes each cleanup task to the host
-                        # that wrote the partition's file; best-effort
-                        marker_rdd.mapPartitions(
-                            _make_cleanup_fn(run_id)
-                        ).collect()
-                    except Exception:  # noqa: BLE001 — must not mask
-                        pass
-                marker_rdd.unpersist()
-                # on local mode the driver shares the executors' host:
-                # removing the run's directories here reclaims every file
-                # with zero extra Spark jobs
-                for d in _driver_prep_dirs(sc, run_id):
-                    shutil.rmtree(d, ignore_errors=True)
             sc.setJobDescription(None)
         return master_result
 

@@ -191,7 +191,7 @@ def test_worker_interceptor_ordering(spark, tmp_path):
     """Executor-side hooks: FIFO pre, FILO post, application hooks on the
     first/last iteration's task (worker/WorkerInterceptor.java:33-38), on
     every worker-task path: Arrow, prepared blob RDD (executor-side
-    combine) and host-local file cache. The paths run inside one test so
+    combine) and resident. The paths run inside one test so
     its id stays stable. Single partition + local mode ⇒ tasks share the
     driver filesystem and run one-at-a-time, so an append-only trace file
     observes exact order."""
@@ -200,7 +200,7 @@ def test_worker_interceptor_ordering(spark, tmp_path):
         LogisticGradientWorker,
     )
     from guagua_spark.api import WorkerInterceptor
-    from guagua_spark.engine import FILE_CACHE_MIN_ROUNDS
+    from guagua_spark.engine import LOAD_ONCE_MIN_ROUNDS
 
     class Tracker(WorkerInterceptor):
         def __init__(self, name: str, path: str) -> None:
@@ -236,12 +236,12 @@ def test_worker_interceptor_ordering(spark, tmp_path):
         "blob": (
             GradientDescentMaster(dim=1, learning_rate=0.5),
             LogisticGradientWorker(("f1",), "label"),
-            lr_df, FILE_CACHE_MIN_ROUNDS, {"combine_executor_side": True},
+            lr_df, LOAD_ONCE_MIN_ROUNDS, {"combine_executor_side": True},
         ),
-        "file_cache": (
+        "resident": (
             GradientDescentMaster(dim=1, learning_rate=0.5),
             LogisticGradientWorker(("f1",), "label"),
-            lr_df, FILE_CACHE_MIN_ROUNDS, {},
+            lr_df, LOAD_ONCE_MIN_ROUNDS, {},
         ),
     }
     for name, (master, worker, df, rounds, kwargs) in paths.items():

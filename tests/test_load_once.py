@@ -1,14 +1,19 @@
-"""Load-once fast paths (WorkerComputable.prepare): blob RDD for short
-runs, host-local file cache for long runs, and the file-miss recovery
-ladder (reference parity: AbstractWorkerComputable load-once +
-MemoryDiskList memory/disk residency)."""
+"""Load-once paths (WorkerComputable.prepare): the resident job for long
+runs that fit the task slots, the blob RDD for the other long runs, the
+fallback from a lost resident job to the blob path, and the resident
+listener's token check (reference parity: AbstractWorkerComputable
+load-once + MemoryDiskList memory/disk residency)."""
 
 from __future__ import annotations
 
 import glob
 import logging
 import os
+import pickle
+import re
+import socket
 import tempfile
+import time
 
 import numpy as np
 import pytest
@@ -18,8 +23,10 @@ from guagua_spark.algorithms.gradient import (
     GradientDescentMaster,
     LogisticGradientWorker,
 )
-from guagua_spark.api import MasterInterceptor
-from guagua_spark.engine import FILE_CACHE_MIN_ROUNDS, IterativeEngine
+from guagua_spark.api import MasterInterceptor, WorkerInterceptor
+from guagua_spark.engine import LOAD_ONCE_MIN_ROUNDS, IterativeEngine
+
+ENGINE_LOG = "guagua_spark.engine"
 
 
 def _train_df(spark, partitions=4):
@@ -34,48 +41,40 @@ def _train_df(spark, partitions=4):
     )
 
 
-def _prep_paths() -> set[str]:
-    """Every prepared-file directory and ``p*.pkl`` file under the
-    driver's Spark local dirs (SPARK_LOCAL_DIRS, else the temp dir).
-    Searched recursively: Python workers write them below the block
-    manager's ``blockmgr-*`` dirs, not at the root."""
-    roots = os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()
-    dirs = {
-        d
-        for root in roots.split(",")
-        for d in glob.glob(
-            os.path.join(root, "**", "guagua-prep-*"), recursive=True
-        )
-    }
-    files = {f for d in dirs for f in glob.glob(os.path.join(d, "p*.pkl"))}
-    return dirs | files
-
-
-class _PrepSpy(MasterInterceptor):
-    """Records after every round the prepared files this run wrote:
-    whatever appeared under the local dirs since construction."""
-
-    def __init__(self) -> None:
-        self.before = _prep_paths()
-        self.seen: set[str] = set()
-
-    def new_files(self) -> set[str]:
-        return {p for p in _prep_paths() - self.before if p.endswith(".pkl")}
-
-    def post_iteration(self, context) -> None:
-        self.seen |= self.new_files()
-
-
-def _run(spark, rounds, interceptors=()):
+def _run(spark, rounds, master=None, **kwargs):
     engine = IterativeEngine(spark)
     model = engine.run(
-        GradientDescentMaster(dim=2, learning_rate=0.5),
+        master or GradientDescentMaster(dim=2, learning_rate=0.5),
         LogisticGradientWorker(("f1", "f2"), "label"),
         _train_df(spark),
         total_iteration=rounds,
-        interceptors=interceptors,
+        **kwargs,
     )
     return model
+
+
+def _replay(spark, rounds):
+    """Driver-side numpy replay of the same logistic GD."""
+    pdf = _train_df(spark).toPandas()
+    x = np.column_stack(
+        [np.ones(len(pdf)), pdf["f1"].to_numpy(), pdf["f2"].to_numpy()]
+    )
+    y = pdf["label"].to_numpy()
+    w = np.zeros(3)
+    for _ in range(rounds):
+        pred = 1.0 / (1.0 + np.exp(-(x @ w)))
+        err = pred - y
+        w = w - 0.5 * (x.T @ err) / len(y)
+    return w
+
+
+def _paths(caplog) -> list[str]:
+    """The path each run() chose, from its INFO line."""
+    return [
+        m.split(" path: ")[0]
+        for m in caplog.messages
+        if re.match(r"(arrow|blob|resident) path: ", m)
+    ]
 
 
 def test_blob_path_matches_arrow_semantics(spark):
@@ -98,7 +97,7 @@ def test_blob_path_matches_arrow_semantics(spark):
                 _features_matrix(batches, self.feature_cols, self.label_col),
             )
 
-    rounds = FILE_CACHE_MIN_ROUNDS + 2
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
     engine = IterativeEngine(spark)
     blob = engine.run(
         GradientDescentMaster(dim=2, learning_rate=0.5),
@@ -117,81 +116,199 @@ def test_blob_path_matches_arrow_semantics(spark):
     np.testing.assert_allclose(blob.weights, arrow.weights, rtol=1e-9)
 
 
-def test_short_runs_stay_on_arrow_path(spark):
-    """< FILE_CACHE_MIN_ROUNDS rounds must not engage any load-once
-    variant (fixed costs dominate — measured): no prepared file is
-    written during the run."""
-    spy = _PrepSpy()
-    _run(spark, FILE_CACHE_MIN_ROUNDS - 1, interceptors=(spy,))
-    assert spy.seen == set()
+def test_short_runs_stay_on_arrow_path(spark, caplog):
+    """< LOAD_ONCE_MIN_ROUNDS rounds must not engage any load-once
+    path (fixed costs dominate — measured)."""
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        _run(spark, LOAD_ONCE_MIN_ROUNDS - 1)
+    assert _paths(caplog) == ["arrow"]
 
 
-def test_file_cache_long_run_correct(spark):
-    """≥ FILE_CACHE_MIN_ROUNDS rounds engage the host-local file cache;
-    result must equal the short-path math extended to the same rounds
-    (verified against a driver-side numpy replay)."""
-    rounds = FILE_CACHE_MIN_ROUNDS + 2
-    spy = _PrepSpy()
-    model = _run(spark, rounds, interceptors=(spy,))
-
-    pdf = _train_df(spark).toPandas()
-    x = np.column_stack(
-        [np.ones(len(pdf)), pdf["f1"].to_numpy(), pdf["f2"].to_numpy()]
-    )
-    y = pdf["label"].to_numpy()
-    w = np.zeros(3)
-    for _ in range(rounds):
-        pred = 1.0 / (1.0 + np.exp(-(x @ w)))
-        err = pred - y
-        w = w - 0.5 * (x.T @ err) / len(y)
-    np.testing.assert_allclose(model.weights, w, rtol=1e-9)
-    # the file cache was engaged, and neither the run's directories nor
-    # its files outlive run()
-    assert spy.seen
-    assert _prep_paths() - spy.before == set()
-
-
-class _DropCacheFiles(_PrepSpy):
-    """Fault injection: after round 2 the hosts 'lose' every prepared
-    file — the next round must recover via the re-prepare ladder."""
+class _PrepFileWatch(MasterInterceptor):
+    """After every round, records any ``guagua-prep-*`` path (the old
+    host-local file cache's) that appeared under the driver's Spark
+    local dirs (SPARK_LOCAL_DIRS, else the temp dir) since construction."""
 
     def __init__(self) -> None:
-        super().__init__()
-        self.removed = 0
+        self.before = self._scan()
+        self.seen: set[str] = set()
+
+    @staticmethod
+    def _scan() -> set[str]:
+        roots = os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()
+        return {
+            p
+            for root in roots.split(",")
+            for p in glob.glob(
+                os.path.join(root, "**", "guagua-prep-*"), recursive=True
+            )
+        }
 
     def post_iteration(self, context) -> None:
-        super().post_iteration(context)
-        if context.current_iteration == 2:
-            for f in self.new_files():
-                os.remove(f)
-                self.removed += 1
+        self.seen |= self._scan() - self.before
 
 
-def test_file_cache_miss_recovers(spark, caplog):
-    rounds = FILE_CACHE_MIN_ROUNDS + 2
-    drop = _DropCacheFiles()
-    with caplog.at_level(logging.WARNING, logger="guagua_spark.engine"):
-        broken = _run(spark, rounds, interceptors=(drop,))
-    assert drop.removed >= 1
-    assert any("re-preparing" in m for m in caplog.messages)
+def test_file_cache_long_run_correct(spark, caplog):
+    """≥ LOAD_ONCE_MIN_ROUNDS rounds on 4 partitions (4 task slots) run
+    as one resident job; the model equals a driver-side numpy replay and
+    no prepared file is ever written."""
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    watch = _PrepFileWatch()
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        model = _run(spark, rounds, interceptors=(watch,))
+    assert _paths(caplog) == ["resident"]
+    np.testing.assert_allclose(model.weights, _replay(spark, rounds), rtol=1e-9)
+    assert watch.seen == set()
+
+
+class _KillOnce(WorkerInterceptor):
+    """Fault injection: the Python worker running partition 1 exits in
+    iteration 3. An O_EXCL marker file makes it fire once, so the
+    fallback's own iteration-3 task survives."""
+
+    def __init__(self, marker: str) -> None:
+        self.marker = marker
+
+    def pre_iteration(self, context) -> None:
+        if context.current_iteration != 3 or context.partition_id != 1:
+            return
+        try:
+            fd = os.open(self.marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            return
+        os.close(fd)
+        os._exit(1)
+
+
+def test_file_cache_miss_recovers(spark, caplog, tmp_path):
+    """A worker killed mid-run: the driver sees its socket close, cancels
+    the resident job and finishes on the blob path from iteration 3 with
+    the last master result. Both paths sum partials in partition order
+    over the same prepare() output, so the model is bit-identical."""
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    marker = str(tmp_path / "killed")
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        broken = _run(
+            spark, rounds, worker_interceptors=[_KillOnce(marker)]
+        )
+    assert os.path.exists(marker)
+    assert _paths(caplog) == ["resident"]
+    lost = [
+        re.match(r"resident job lost at iteration 3 \((\w+):", m)
+        for m in caplog.messages
+    ]
+    classes = [m.group(1) for m in lost if m]
+    assert len(classes) == 1, caplog.messages
+    assert classes[0].endswith(("Error", "Exception")), classes
     clean = _run(spark, rounds)
     np.testing.assert_array_equal(broken.weights, clean.weights)
 
 
-def test_prepare_handles_empty_partitions(spark):
+class _FailAt(GradientDescentMaster):
+    def compute(self, context):
+        if context.current_iteration == 3:
+            raise RuntimeError("master failed at iteration 3")
+        return super().compute(context)
+
+
+class _HaltAt(GradientDescentMaster):
+    def compute(self, context):
+        out = super().compute(context)
+        out.halt = context.current_iteration >= 2
+        return out
+
+
+def test_resident_master_error_releases_slots(spark):
+    """An exception from master.compute stops the resident tasks before
+    it leaves run(): the next run needs all 4 task slots of this
+    session again, and would wait forever if they leaked."""
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    with pytest.raises(RuntimeError, match="iteration 3"):
+        _run(spark, rounds, master=_FailAt(dim=2, learning_rate=0.5))
+    model = _run(spark, rounds)
+    np.testing.assert_allclose(model.weights, _replay(spark, rounds), rtol=1e-9)
+
+
+def test_resident_early_halt_releases_slots(spark):
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    engine = IterativeEngine(spark)
+    halted = engine.run(
+        _HaltAt(dim=2, learning_rate=0.5),
+        LogisticGradientWorker(("f1", "f2"), "label"),
+        _train_df(spark),
+        total_iteration=rounds,
+    )
+    assert len(engine.iteration_seconds) == 2
+    np.testing.assert_allclose(halted.weights, _replay(spark, 2), rtol=1e-9)
+    model = _run(spark, rounds)
+    np.testing.assert_allclose(model.weights, _replay(spark, rounds), rtol=1e-9)
+
+
+def test_prepare_handles_empty_partitions(spark, caplog):
+    """8 partitions on 4 task slots: the run takes the blob path (a
+    barrier stage wider than the slots would never be scheduled)."""
     df = spark.range(10).repartition(8).select(
         (F.col("id") / 10.0).alias("f1"),
         (F.col("id") / 20.0).alias("f2"),
         F.lit(1.0).alias("label"),
     )
     engine = IterativeEngine(spark)
-    model = engine.run(
-        GradientDescentMaster(dim=2, learning_rate=0.5),
-        LogisticGradientWorker(("f1", "f2"), "label"),
-        df,
-        total_iteration=FILE_CACHE_MIN_ROUNDS,
-    )
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        model = engine.run(
+            GradientDescentMaster(dim=2, learning_rate=0.5),
+            LogisticGradientWorker(("f1", "f2"), "label"),
+            df,
+            total_iteration=LOAD_ONCE_MIN_ROUNDS,
+        )
     assert np.all(np.isfinite(model.weights))
+    assert "blob path: 8 partitions > 4 task slots" in caplog.messages
+
+
+_LOADED: list[bool] = []
+
+
+def _trip() -> None:
+    _LOADED.append(True)
+
+
+class _Tripwire:
+    """Unpickling this sets a flag."""
+
+    def __reduce__(self):
+        return (_trip, ())
+
+
+def test_resident_listener_rejects_wrong_token():
+    """A connection whose first bytes are not the run token is closed
+    before anything it sent is unpickled; a task with the right token
+    is still accepted after it."""
+    from guagua_spark.engine import _HELLO, _Listener, _ResidentLost
+
+    listener = _Listener("127.0.0.1")
+    deadline = time.monotonic() + 30
+
+    def check() -> None:
+        if time.monotonic() > deadline:
+            raise _ResidentLost(TimeoutError("test deadline"))
+
+    wrong = bytes(b ^ 0xFF for b in listener.token)
+    stranger = socket.create_connection(listener.addr)
+    task = socket.create_connection(listener.addr)
+    try:
+        stranger.sendall(wrong + pickle.dumps(_Tripwire()))
+        task.sendall(listener.token + _HELLO.pack(0, 1))
+        listener.accept(check)
+        assert sorted(listener.conns) == [0]
+        stranger.settimeout(10)
+        try:
+            assert stranger.recv(1) == b""
+        except ConnectionResetError:
+            pass
+    finally:
+        stranger.close()
+        task.close()
+        listener.close()
+    assert _LOADED == []
 
 
 def test_noprep_worker_class_unaffected():
@@ -204,10 +321,10 @@ def test_noprep_worker_class_unaffected():
 
 
 def test_partial_barrier_with_prepared_worker(spark):
-    """min_workers_ratio < 1 excludes the file cache but rides the blob
-    RDD for long prepared runs — the barrier must deliver the same model
+    """min_workers_ratio < 1 keeps a long prepared run off the resident
+    path and on the blob RDD — the barrier must deliver the same model
     as the full-barrier run when nobody straggles."""
-    rounds = FILE_CACHE_MIN_ROUNDS + 1
+    rounds = LOAD_ONCE_MIN_ROUNDS + 1
     engine = IterativeEngine(spark)
     barrier = engine.run(
         GradientDescentMaster(dim=2, learning_rate=0.5),
