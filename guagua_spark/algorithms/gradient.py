@@ -94,14 +94,20 @@ def _features_matrix(
 
 
 def sigmoid(z: np.ndarray) -> np.ndarray:
-    # numerically-stable split form (reference sigmoid:
+    # Stable form without boolean masks (reference sigmoid:
     # lr/LogisticRegressionWorker.java:133-139 uses 1/(1+e^-z); the naive
-    # form overflows float64 for |z|>709)
-    out = np.empty_like(z)
-    pos = z >= 0
-    out[pos] = 1.0 / (1.0 + np.exp(-z[pos]))
-    ez = np.exp(z[~pos])
-    out[~pos] = ez / (1.0 + ez)
+    # form overflows float64 for |z|>709). With e = exp(-|z|) ≤ 1 this is
+    # 1/(1+e) for z ≥ 0 and e/(1+e) for z < 0, the same operations on the
+    # same operands as the split form 1/(1+exp(-z)) | exp(z)/(1+exp(z)),
+    # so every output (±0, ±inf, NaN included) is bit-identical to it and
+    # exp never overflows. -|z| is taken as min(z, -z), which returns a
+    # NaN z itself and so keeps its sign bit. Computed in place; the
+    # split form's mask gather/scatter cost ~3× this whole function.
+    e = np.negative(z)
+    np.exp(np.minimum(z, e, out=e), out=e)
+    out = np.where(z >= 0, 1.0, e)
+    e += 1.0
+    out /= e
     return out
 
 

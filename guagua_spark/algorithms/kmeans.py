@@ -93,6 +93,24 @@ def _batch_matrix(
     return np.concatenate(mats)
 
 
+#: rows per distance block: the rows × k distance matrix is built this
+#: many rows at a time, so a worker holds _BLOCK_ROWS × k floats of it.
+_BLOCK_ROWS = 1024
+
+
+def _nearest_centroid(x: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid, one row block at a time.
+
+    Squared L2 to each centroid is |x|² − 2x·c + |c|²; argmin ignores
+    |x|²."""
+    c2 = np.sum(centroids**2, axis=1)
+    tags = [
+        np.argmin(-2.0 * (x[lo : lo + _BLOCK_ROWS] @ centroids.T) + c2, axis=1)
+        for lo in range(0, x.shape[0], _BLOCK_ROWS)
+    ]
+    return np.concatenate(tags) if tags else np.zeros(0, dtype=np.intp)
+
+
 class KMeansWorker(WorkerComputable):
     """Assign rows to nearest centroid; emit per-cluster sums+counts.
 
@@ -135,9 +153,7 @@ class KMeansWorker(WorkerComputable):
         k, dim = centroids.shape
         if x.shape[0] == 0:
             return KMeansPartial(np.zeros((k, dim)), np.zeros(k))
-        # squared L2 to each centroid: |x|² − 2x·c + |c|² (argmin ignores |x|²)
-        d2 = -2.0 * (x @ centroids.T) + np.sum(centroids**2, axis=1)
-        tags = np.argmin(d2, axis=1)
+        tags = _nearest_centroid(x, centroids)
         sums = np.zeros((k, dim))
         np.add.at(sums, tags, x)
         counts = np.bincount(tags, minlength=k).astype(np.float64)

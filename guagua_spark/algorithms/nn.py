@@ -5,7 +5,9 @@ numpy, gradient AllReduce through the engine, weight update on the driver.
 Reference parity map (guagua-examples):
 - worker per-record backprop + train/test error accumulation →
   ``NNWorker`` (nn/NNWorker.java, per-record gradient nn/Gradient.java:
-  165-230 — here one matrix pass per Arrow batch instead of per-record);
+  165-230 — here one matrix pass per block of ``_BLOCK_ROWS`` rows
+  instead of per-record, so a worker holds at most ``_BLOCK_ROWS ×
+  max(hidden)`` floats per activation, whatever its partition's size);
 - master gradient accumulate + weight update → ``NNMaster``
   (nn/NNMaster.java:65-120, accumulate :91, update :109);
 - weight-update strategies → ``OPTIMIZERS`` (nn/Weight.java:66-89,
@@ -14,7 +16,8 @@ Reference parity map (guagua-examples):
   as a probe/candidate state machine over engine iterations (each
   AllReduce delivers one (E, E') evaluation; one SCG step consumes two).
 - train/validation split by crossValidationRate (NNWorker.java:96-98) →
-  deterministic per-row hash split.
+  deterministic per-row hash split, made once per partition in
+  ``NNWorker.prepare``.
 """
 
 from __future__ import annotations
@@ -35,6 +38,10 @@ from guagua_spark.algorithms.gradient import sigmoid
 
 
 # -- network ----------------------------------------------------------------
+
+#: rows per forward/backward block. 256–1024 rows keep a [20,64,32,1]
+#: block's activations in cache and time alike; 4096 was slower.
+_BLOCK_ROWS = 1024
 
 
 def init_weights(
@@ -69,19 +76,44 @@ def backprop(
     x: np.ndarray,
     y: np.ndarray,
 ) -> tuple[list[tuple[np.ndarray, np.ndarray]], float]:
-    """Batch gradient of squared error; returns (grads, sum sq error)."""
-    acts = forward(weights, x)
-    out = acts[-1]
-    err = out - y
-    sse = float(np.sum(err * err))
-    delta = err * out * (1 - out)  # sigmoid'
-    grads: list[tuple[np.ndarray, np.ndarray]] = [None] * len(weights)  # type: ignore[list-item]
-    for li in range(len(weights) - 1, -1, -1):
-        grads[li] = (acts[li].T @ delta, delta.sum(axis=0))
-        if li > 0:
-            a = acts[li]
-            delta = (delta @ weights[li][0].T) * a * (1 - a)
+    """Batch gradient of squared error; returns (grads, sum sq error).
+
+    Runs forward, error and backward over ``_BLOCK_ROWS`` rows at a time
+    and sums grads and error across blocks, so the activations held at
+    once are ``_BLOCK_ROWS × max(hidden)`` whatever the row count. Only
+    the summation order differs from one pass over all rows."""
+    grads = [(np.zeros_like(w), np.zeros_like(b)) for w, b in weights]
+    sse = 0.0
+    for lo in range(0, x.shape[0], _BLOCK_ROWS):
+        hi = lo + _BLOCK_ROWS
+        acts = forward(weights, x[lo:hi])
+        out = acts[-1]
+        err = out - y[lo:hi]
+        sse += float(np.sum(err * err))
+        delta = err * out * (1 - out)  # sigmoid'
+        for li in range(len(weights) - 1, -1, -1):
+            gw, gb = grads[li]
+            gw += acts[li].T @ delta
+            gb += delta.sum(axis=0)
+            if li > 0:
+                a = acts[li]
+                delta = (delta @ weights[li][0].T) * a * (1 - a)
     return grads, sse
+
+
+def squared_error(
+    weights: list[tuple[np.ndarray, np.ndarray]],
+    x: np.ndarray,
+    y: np.ndarray,
+) -> float:
+    """Sum of squared output error, over the same row blocks as
+    ``backprop``."""
+    sse = 0.0
+    for lo in range(0, x.shape[0], _BLOCK_ROWS):
+        hi = lo + _BLOCK_ROWS
+        err = forward(weights, x[lo:hi])[-1] - y[lo:hi]
+        sse += float(np.sum(err * err))
+    return sse
 
 
 # -- engine plumbing --------------------------------------------------------
@@ -145,10 +177,11 @@ class NNWorker(WorkerComputable):
 
     def prepare(
         self, batches: Iterator[pa.RecordBatch]
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Load-once fast path: (X, y) matrices converted once per
-        partition (direct column→numpy, no pandas hop — see gradient.py
-        _features_matrix for the per-iteration latency rationale)."""
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """Load-once fast path: (X_train, y_train, X_test, y_test),
+        converted and split once per partition (direct column→numpy, no
+        pandas hop — see gradient.py _features_matrix for the
+        per-iteration latency rationale)."""
         xs, ys = [], []
         for batch in batches:
             cols = [
@@ -161,9 +194,17 @@ class NNWorker(WorkerComputable):
                 .to_numpy(zero_copy_only=False)
                 .astype(np.float64, copy=False)
             )
-        if not xs:
-            return np.zeros((0, len(self.feature_cols))), np.zeros((0, 1))
-        return np.concatenate(xs), np.concatenate(ys).reshape(-1, 1)
+        if xs:
+            x, y = np.concatenate(xs), np.concatenate(ys).reshape(-1, 1)
+        else:
+            x, y = np.zeros((0, len(self.feature_cols))), np.zeros((0, 1))
+        if self.validation_rate <= 0:
+            return x, y, x[:0], y[:0]
+        # deterministic split: row-index hash, stable across iterations
+        # for a cached (thus stable) partition
+        idx = np.arange(x.shape[0])
+        is_test = (idx * 2654435761 % 1000) < self.validation_rate * 1000
+        return x[~is_test], y[~is_test], x[is_test], y[is_test]
 
     def compute(
         self, context: WorkerContext, batches: Iterator[pa.RecordBatch]
@@ -171,31 +212,20 @@ class NNWorker(WorkerComputable):
         return self.compute_prepared(context, self.prepare(batches))
 
     def compute_prepared(
-        self, context: WorkerContext, data: tuple[np.ndarray, np.ndarray]
+        self,
+        context: WorkerContext,
+        data: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
     ) -> NNGradient:
         model: NNModel = context.last_master_result
-        x, y = data
-        if x.shape[0] == 0:
+        xtr, ytr, xte, yte = data
+        if xtr.shape[0] + xte.shape[0] == 0:
             return NNGradient(grads=[])
-        if self.validation_rate > 0:
-            # deterministic split: row-index hash, stable across iterations
-            # for a cached (thus stable) partition
-            idx = np.arange(x.shape[0])
-            is_test = (idx * 2654435761 % 1000) < self.validation_rate * 1000
-        else:
-            is_test = np.zeros(x.shape[0], dtype=bool)
-        xtr, ytr = x[~is_test], y[~is_test]
-        xte, yte = x[is_test], y[is_test]
         grads, train_sse = backprop(model.weights, xtr, ytr)
-        test_sse = 0.0
-        if xte.shape[0]:
-            out = forward(model.weights, xte)[-1]
-            test_sse = float(np.sum((out - yte) ** 2))
         return NNGradient(
             grads=grads,
             train_sse=train_sse,
             train_count=int(xtr.shape[0]),
-            test_sse=test_sse,
+            test_sse=squared_error(model.weights, xte, yte),
             test_count=int(xte.shape[0]),
         )
 
