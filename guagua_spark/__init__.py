@@ -34,6 +34,13 @@ from guagua_spark.api import (
 from guagua_spark.engine import IterativeEngine
 from guagua_spark.monitor import ComputeTimeout, computable_monitor
 from guagua_spark.session import get_spark
+from guagua_spark.shipping import install_zip_check
+
+# executor Python workers import this package when they unpickle a
+# guagua task; from then on their per-task cache invalidation stops
+# re-reading pyspark's zip archives (see shipping.install_zip_check)
+install_zip_check()
+
 
 def clear_all_caches() -> None:
     """Unpersist and drop every session index memo across the package

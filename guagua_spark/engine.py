@@ -9,11 +9,18 @@
     stop the resident tasks / unpersist
 
 Per-iteration latency model (measured on 4 cores, local[4], pyspark
-4.1.2): any Spark job that runs Python tasks carries a fixed ~0.2 s
-scheduling floor whatever its task count, while a superstep over a
-socket to tasks that are already running costs well under a
-millisecond. The engine reaches the workers one of three ways and logs
-its choice, with the reason, once per run at INFO:
+4.1.2, Python 3.11): a Spark job of trivial Python tasks costs ~0.1 s
+with one task, ~0.15 s with 4 and ~0.3 s with 16, while a superstep
+over a socket to tasks that are already running costs well under a
+millisecond. Most of a job's cost is per task, not scheduling. At the
+start of every task PySpark re-reads pyspark's zip archives, ~0.25 s,
+unless shipping.install_zip_check is in place (importing guagua_spark
+installs it); without it the same jobs cost ~0.2, ~0.35 and ~1.0 s.
+And PySpark reuses a Python worker only for tasks that read their
+whole input, so every engine task does (see _drain); a task that stops
+early makes the next one fork a fresh worker. The engine reaches the
+workers one of three ways and logs its choice, with the reason, once
+per run at INFO:
 
 - resident: ONE gang-scheduled (barrier) Spark job per run. Each task
   prepares its partition once, keeps it in memory and connects back to
@@ -163,6 +170,15 @@ class _Task(NamedTuple):
     interceptors: Sequence[WorkerInterceptor]
 
 
+def _drain(it: Iterator[Any]) -> None:
+    """Read a task's input to its end. PySpark reuses a Python worker
+    for the next task only if the task read its whole input stream;
+    otherwise the worker exits and the next task forks a fresh process
+    that pays the interpreter's start-up and imports again."""
+    for _ in it:
+        pass
+
+
 def _partition_id() -> int:
     tc = TaskContext.get()
     return tc.partitionId() if tc is not None else -1
@@ -212,6 +228,7 @@ def _make_worker_fn(
             _partition_id(),
             lambda ctx: task.worker.compute(ctx, batches),
         )
+        _drain(batches)
         yield pa.RecordBatch.from_pydict({"result": [payload]})
 
     return fn
@@ -227,6 +244,7 @@ def _make_prepare_fn(
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         data = worker.prepare(batches)
+        _drain(batches)
         yield pa.RecordBatch.from_pydict(
             {"blob": [pickle.dumps(data, protocol=pickle.HIGHEST_PROTOCOL)]}
         )
@@ -242,12 +260,11 @@ def _make_prepared_iter_fn(
     instead of an Arrow decode."""
 
     def fn(blobs: Iterator[bytes]) -> Iterator[bytes]:
+        (blob,) = blobs  # reads the stream to its end; see _drain
         yield _run_task(
             task,
             _partition_id(),
-            lambda ctx: task.worker.compute_prepared(
-                ctx, pickle.loads(next(iter(blobs)))
-            ),
+            lambda ctx: task.worker.compute_prepared(ctx, pickle.loads(blob)),
         )
 
     return fn
@@ -341,6 +358,7 @@ def _serve_resident(
     pid = _partition_id()
     tasks = len(BarrierTaskContext.get().getTaskInfos())
     data = worker.prepare(batches)
+    _drain(batches)
 
     def compute(ctx: WorkerContext) -> Any:
         return worker.compute_prepared(ctx, data)
@@ -473,7 +491,8 @@ class _Resident:
 
     def _start(self) -> None:
         df, worker, total_iteration, props, interceptors = self.args
-        self.listener = _Listener(self.sc.getConf().get("spark.driver.host"))
+        # one key over py4j: getConf() would copy the whole conf
+        self.listener = _Listener(self.sc._conf.get("spark.driver.host"))
         job = df.mapInArrow(
             _make_resident_fn(
                 worker, total_iteration, props, interceptors,
@@ -573,8 +592,8 @@ def _resident_blocker(
         return "executor-side combine"
     if num_partitions > 32:
         return f"{num_partitions} partitions > 32"
-    conf = sc.getConf()
-    if conf.get("spark.dynamicAllocation.enabled", "false").lower() == "true":
+    dyn = sc._conf.get("spark.dynamicAllocation.enabled", "false")
+    if dyn.lower() == "true":
         return "dynamic allocation"
     slots = _task_slots(sc)
     if num_partitions > slots:
