@@ -18,9 +18,15 @@ unless shipping.install_zip_check is in place (importing guagua_spark
 installs it); without it the same jobs cost ~0.2, ~0.35 and ~1.0 s.
 And PySpark reuses a Python worker only for tasks that read their
 whole input, so every engine task does (see _drain); a task that stops
-early makes the next one fork a fresh worker. The engine reaches the
-workers one of three ways and logs its choice, with the reason, once
-per run at INFO:
+early makes the next one fork a fresh worker. A resident run's first
+iteration is its one job's launch plus the slowest task's input and
+``prepare``. On perfbench's lr_long (4 tasks of 75k rows x 21
+doubles) a task enters 70-100 ms after run() starts; its input plus
+``prepare`` then takes ~0.2 s when the JVM streams it the cached rows
+as Arrow batches, and ~0.07 s when it reads the same rows from its own
+parquet file, so the first iteration is ~0.30 s over the rows and
+~0.12 s over parquet splits. The engine reaches the workers one of
+three ways and logs its choice, with the reason, once per run at INFO:
 
 - resident: ONE gang-scheduled (barrier) Spark job per run. Each task
   prepares its partition once, keeps it in memory and connects back to
@@ -29,11 +35,19 @@ per run at INFO:
   that overrides ``prepare``, for ≥ LOAD_ONCE_MIN_ROUNDS rounds, with
   the full barrier, no executor-side combine, ≤ 32 partitions, no more
   partitions than the scheduler has task slots, and no dynamic
-  allocation (Spark rejects barrier stages under it). If the job dies,
-  the run finishes on the blob path from the failed iteration. The
-  tasks hold their slots until run() returns: a Spark job that a master
-  or master interceptor waits on mid-run gets only the other slots, and
-  none when the partitions fill the cluster, so it would never finish.
+  allocation (Spark rejects barrier stages under it). Its input: when
+  ``df`` is a bare parquet scan of whole local files (at most a
+  projection of its columns, cached or not), the job is a barrier RDD
+  over Spark's own file partitions and each task reads its files with
+  pyarrow (sources/splits.py), so the stage width is the split plan's,
+  fixed before submit; otherwise it is a barrier mapInArrow job over
+  ``df``'s rows, and the INFO line names the reason. If the job dies
+  (a task also fails it on a file whose size or mtime changed since
+  planning), the run finishes on the blob path over ``df`` from the
+  failed iteration. The tasks hold their slots until run() returns: a
+  Spark job that a master or master interceptor waits on mid-run gets
+  only the other slots, and none when the partitions fill the cluster,
+  so it would never finish.
 - blob: the other long prepared runs. Each partition's prepared object
   is persisted as one pickled blob; each iteration is one job over them.
 - Arrow: workers without ``prepare``, and short runs. Each iteration is
@@ -99,6 +113,7 @@ from guagua_spark.api import (
     WorkerInterceptor,
     is_halt,
 )
+from guagua_spark.sources.splits import SplitPlan, plan_splits
 
 log = logging.getLogger("guagua_spark.engine")
 
@@ -386,10 +401,18 @@ def _make_resident_fn(
     interceptors: Sequence[WorkerInterceptor],
     addr: tuple[str, int],
     token: bytes,
-) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """mapInArrow function of the resident job; it yields no rows."""
+    splits: SplitPlan | None,
+) -> Callable[[Iterator[Any]], Iterator[Any]]:
+    """Function of the resident job; it yields nothing. Without
+    ``splits`` it is the mapInArrow function over ``df``'s rows; with
+    them, a task of a barrier RDD job that reads its own files and
+    drains its one-number input."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(rows: Iterator[Any]) -> Iterator[Any]:
+        batches = rows
+        if splits is not None:
+            _drain(rows)
+            batches = splits.read(_partition_id())
         _serve_resident(
             batches, worker, total_iteration, props, interceptors, addr,
             token,
@@ -404,8 +427,9 @@ class _Listener:
     driver's host. A connection's first bytes must be the run's raw
     token; any other connection is closed unread, so nothing a stranger
     sends is ever unpickled. The first hello fixes the run's task count
-    (the stage as Spark realized it, which under AQE can differ from an
-    earlier ``getNumPartitions()``); every other hello must agree."""
+    (the stage as Spark realized it: over ``df``'s rows under AQE it can
+    differ from an earlier ``getNumPartitions()``; over parquet splits
+    it is the plan's); every other hello must agree."""
 
     def __init__(self, host: str) -> None:
         self.token = secrets.token_bytes(_TOKEN_BYTES)
@@ -481,9 +505,11 @@ class _Resident:
         total_iteration: int,
         props: dict[str, Any],
         interceptors: Sequence[WorkerInterceptor],
+        splits: SplitPlan | None,
     ) -> None:
         self.sc = sc
         self.args = (df, worker, total_iteration, props, interceptors)
+        self.splits = splits
         self.tag = f"guagua-resident-{uuid.uuid4().hex[:12]}"
         self.listener: _Listener | None = None
         self.thread: InheritableThread | None = None
@@ -493,14 +519,15 @@ class _Resident:
         df, worker, total_iteration, props, interceptors = self.args
         # one key over py4j: getConf() would copy the whole conf
         self.listener = _Listener(self.sc._conf.get("spark.driver.host"))
-        job = df.mapInArrow(
-            _make_resident_fn(
-                worker, total_iteration, props, interceptors,
-                self.listener.addr, self.listener.token,
-            ),
-            "done boolean",
-            barrier=True,
+        fn = _make_resident_fn(
+            worker, total_iteration, props, interceptors,
+            self.listener.addr, self.listener.token, self.splits,
         )
+        if self.splits is None:
+            job = df.mapInArrow(fn, "done boolean", barrier=True)
+        else:
+            n = len(self.splits.partitions)
+            job = self.sc.parallelize(range(n), n).barrier().mapPartitions(fn)
 
         def run_job() -> None:
             try:
@@ -911,18 +938,28 @@ class IterativeEngine:
                 f"{remaining} rounds < {LOAD_ONCE_MIN_ROUNDS}"
             )
         else:
-            num_partitions = df.rdd.getNumPartitions()
+            # a split plan fixes the stage width before submit; Spark's
+            # own count can differ from the realized stage under AQE
+            splits = plan_splits(df)
+            if isinstance(splits, str):
+                source, splits = f"Spark rows ({splits})", None
+                num_partitions = df.rdd.getNumPartitions()
+            else:
+                source = "parquet splits"
+                num_partitions = len(splits.partitions)
             why = _resident_blocker(
                 sc, num_partitions, min_workers_ratio, combine_executor_side
             )
             if why is None:
                 path, why = "resident", (
                     f"{remaining} rounds, {num_partitions} partitions fit "
-                    "the task slots"
+                    f"the task slots; input: {source}"
                 )
+                if splits is not None:
+                    log.debug("parquet splits: %s", splits.describe())
                 resident = _Resident(
                     sc, df, worker, total_iteration, self.props,
-                    worker_interceptors,
+                    worker_interceptors, splits,
                 )
             else:
                 path = "blob"

@@ -11,10 +11,12 @@ get subtly wrong per call site:
   scan. Convergence-checked loops checkpoint LAZILY: the convergence
   action (a 1-row sum, a count) materializes the checkpoint in the
   SAME Spark job — an eager checkpoint would cost a second full job
-  per round (each Python-task job carries ~0.2 s fixed scheduling
-  latency — engine.py:13). Fixed-round loops have no per-round action,
-  so they checkpoint EAGERLY (a lazy mark with no action truncates
-  nothing until the caller's terminal action replans the full tree).
+  per round (a Spark job of trivial Python tasks costs ~0.1 s with one
+  task, ~0.15 s with 4 and ~0.3 s with 16 on 4 cores; see the latency
+  model in the engine module docstring). Fixed-round loops have no
+  per-round action, so they checkpoint EAGERLY (a lazy mark with no
+  action truncates nothing until the caller's terminal action replans
+  the full tree).
 - **Convergence runs on the checkpointed frame**, never the raw plan,
   so the fixpoint test and the returned state are the same relation.
 

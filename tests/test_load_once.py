@@ -125,9 +125,10 @@ def test_short_runs_stay_on_arrow_path(spark, caplog):
 
 
 class _PrepFileWatch(MasterInterceptor):
-    """After every round, records any ``guagua-prep-*`` path (the old
-    host-local file cache's) that appeared under the driver's Spark
-    local dirs (SPARK_LOCAL_DIRS, else the temp dir) since construction."""
+    """After every round, records any ``guagua-prep-*`` path that
+    appeared under the driver's Spark local dirs (SPARK_LOCAL_DIRS, else
+    the temp dir) since construction: a resident run keeps its prepared
+    partitions in task memory and must write no prepared file."""
 
     def __init__(self) -> None:
         self.before = self._scan()
