@@ -103,9 +103,14 @@ def sigmoid(z: np.ndarray) -> np.ndarray:
     # exp never overflows. -|z| is taken as min(z, -z), which returns a
     # NaN z itself and so keeps its sign bit. Computed in place; the
     # split form's mask gather/scatter cost ~3× this whole function.
+    # The numerator is max(e, z ≥ 0): 1 where z ≥ 0 (e ≤ 1 there) and e
+    # elsewhere. np.where(z >= 0, 1.0, e) gave the same bits but took
+    # ~480 of ~640 µs on a 1024×64 block, against ~50 µs for maximum.
+    # maximum returns a NaN operand itself, and the mask (0.0/1.0) is
+    # never NaN, so a NaN e passes through with its sign and payload.
     e = np.negative(z)
     np.exp(np.minimum(z, e, out=e), out=e)
-    out = np.where(z >= 0, 1.0, e)
+    out = np.maximum(e, z >= 0)
     e += 1.0
     out /= e
     return out

@@ -25,8 +25,16 @@ doubles) a task enters 70-100 ms after run() starts; its input plus
 ``prepare`` then takes ~0.2 s when the JVM streams it the cached rows
 as Arrow batches, and ~0.07 s when it reads the same rows from its own
 parquet file, so the first iteration is ~0.30 s over the rows and
-~0.12 s over parquet splits. The engine reaches the workers one of
-three ways and logs its choice, with the reason, once per run at INFO:
+~0.12 s over parquet splits. After it, a resident superstep is the
+slowest worker's compute: numpy, at the speed of the BLAS kernel the
+worker's OpenBLAS loaded. get_spark picks that kernel for local
+sessions (session._openblas_coretype says why); a cluster sets
+``spark.executorEnv.OPENBLAS_CORETYPE`` at deploy time. One nn_backprop
+worker (25k rows, [20,64,32,1], one thread) takes ~95 ms a superstep on
+OpenBLAS's SSE3 ``Prescott`` fallback and ~43 ms on ``SkylakeX``: ~19 ms
+of matmuls, ~11 ms of sigmoid and ~12 ms of other elementwise products
+and sums. The engine reaches the workers one of three ways and logs its
+choice, with the reason, once per run at INFO:
 
 - resident: ONE gang-scheduled (barrier) Spark job per run. Each task
   prepares its partition once, keeps it in memory and connects back to
@@ -90,6 +98,7 @@ import hmac
 import logging
 import os
 import pickle
+import re
 import secrets
 import socket
 import struct
@@ -315,13 +324,28 @@ _POLL_S = 0.1
 _HELLO_TIMEOUT_S = 10.0
 
 
+#: the exception line that ends a Python traceback, module path dropped
+_TRACEBACK_ERROR = re.compile(
+    r"^(?:[\w.]+\.)?(\w+(?:Error|Exception): .*)$", re.MULTILINE
+)
+
+
 class _ResidentLost(Exception):
     """The resident job cannot serve supersteps any more. The message
-    is the class and first line of the error that showed it."""
+    is the class and first line of the error that showed it; when that
+    error carries a task's Python traceback (a failed job's
+    Py4JJavaError), it is the traceback's own last line instead, which
+    names the task's error rather than the driver's py4j call."""
 
     def __init__(self, cause: BaseException) -> None:
-        first = (str(cause).strip().splitlines() or [""])[0]
-        super().__init__(f"{type(cause).__name__}: {first}")
+        text = str(cause)
+        start = text.rfind("Traceback (most recent call last):")
+        found = _TRACEBACK_ERROR.search(text, start) if start >= 0 else None
+        if found:
+            super().__init__(found[1])
+        else:
+            first = (text.strip().splitlines() or [""])[0]
+            super().__init__(f"{type(cause).__name__}: {first}")
 
 
 def _recv_exact(

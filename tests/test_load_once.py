@@ -149,7 +149,7 @@ class _PrepFileWatch(MasterInterceptor):
         self.seen |= self._scan() - self.before
 
 
-def test_file_cache_long_run_correct(spark, caplog):
+def test_resident_long_run_correct(spark, caplog):
     """≥ LOAD_ONCE_MIN_ROUNDS rounds on 4 partitions (4 task slots) run
     as one resident job; the model equals a driver-side numpy replay and
     no prepared file is ever written."""
@@ -181,7 +181,7 @@ class _KillOnce(WorkerInterceptor):
         os._exit(1)
 
 
-def test_file_cache_miss_recovers(spark, caplog, tmp_path):
+def test_resident_lost_worker_recovers(spark, caplog, tmp_path):
     """A worker killed mid-run: the driver sees its socket close, cancels
     the resident job and finishes on the blob path from iteration 3 with
     the last master result. Both paths sum partials in partition order
