@@ -13,8 +13,9 @@ Reproduces the reference's extension points (SURVEY.md §2.8):
 Differences from the reference, by design (Spark-first):
 
 - No ``Bytable``/serializer layer: results are arbitrary picklable Python
-  objects; Spark handles the wire format (reference io/BytableSerializer.java
-  and the GZIP/Bzip2 variants disappear).
+  objects; each task sends its pickled result to the driver as one frame
+  on the run's socket, and Spark carries the rest (reference
+  io/BytableSerializer.java and the GZIP/Bzip2 variants disappear).
 - Workers receive their partition as an iterator of **pyarrow RecordBatches**
   (columnar, zero-copy from the JVM) instead of a line-record reader
   (reference hadoop/io/GuaguaLineRecordReader.java). Convert with
@@ -41,12 +42,17 @@ import pyarrow as pa
 class Combinable(Protocol):
     """Associative partial-merge of two worker results.
 
-    If a worker result implements this, the engine merges results
-    executor-side (treeReduce) before they reach the driver — the Spark
-    analogue of the reference's merge-on-arrival combiner
+    On a full-barrier run with more than 32 partitions, or with
+    ``combine_executor_side=True``, the engine merges results that
+    implement this executor-side (treeReduce) before they reach the
+    driver, which then sees O(sqrt(P)) of them — the Spark analogue of
+    the reference's merge-on-arrival combiner
     (master/NettyMasterCoordinator.java:160-200, threshold
-    guagua.master.result.merge.threshold=10). Must be associative and
-    order-insensitive: results arrive unordered (SURVEY.md §4 last row).
+    guagua.master.result.merge.threshold=10). Every other run hands the
+    master each worker's result and the master merges them (e.g. with
+    ``combine_all``). Must be associative and order-insensitive: how
+    treeReduce groups the results is Spark's choice (SURVEY.md §4 last
+    row).
     """
 
     def combine(self, other: "Combinable") -> "Combinable": ...
@@ -73,24 +79,16 @@ def is_halt(result: Any) -> bool:
 class MasterContext:
     """Driver-side per-iteration context (reference master/MasterContext.java).
 
-    ``worker_results`` is the iterable of (possibly pre-combined)
-    worker results for this iteration; with a Combinable result and
-    executor-side reduction it holds a single element. Usually a list;
-    on the non-combinable path above the engine's result-size budget it
-    is a lazy stream (reference lazy master consumption,
-    AbstractMasterCoordinator.java:243-310) that is RE-ITERABLE — like
-    the reference's disk-backed iterable, a second pass replays the
-    driver-local spill (engine._LazyWorkerResults), so list semantics
-    hold except that ``len()`` is defined only after a full pass.
-
-    Lazy-mode flag timing: in the streamed path the halt votes arrive
-    WITH the results, so ``all_workers_halted`` reads False during
-    ``master.compute`` and is recomputed from the drained votes after
-    compute returns (the engine still applies the halt to this
-    iteration's result). A master that must branch on the flag INSIDE
-    compute should force the drain first — ``list(ctx.worker_results)``
-    — after which the engine's post-compute value is what the eager
-    path would have shown pre-compute.
+    ``worker_results`` holds this iteration's worker results in
+    partition order; on a treeReduce run (see ``Combinable``) it holds
+    the executor-side merge instead. It is a list unless the results
+    exceed the run's ``result_bytes_budget``: then it is a sequence
+    that supports iteration (any number of passes), ``len()`` and
+    indexing, and unpickles one result per access from a driver-local
+    spill, so a master that iterates holds one result at a time (the
+    reference's lazy master consumption over a disk-backed list,
+    AbstractMasterCoordinator.java:243-310, BytableMemoryDiskList).
+    ``all_workers_halted`` is already final when ``compute`` runs.
     """
 
     current_iteration: int
@@ -144,9 +142,9 @@ class WorkerComputable(abc.ABC):
     Reference contract: worker/WorkerComputable.java:60-72 and the
     load-once template AbstractWorkerComputable.java:66-144. On Spark the
     "load-once, iterate many" protocol is the persisted DataFrame: the
-    engine persists the input before the loop, so every iteration's scan
-    hits the block-manager cache, and ``compute`` sees fresh Arrow batches
-    each round.
+    engine persists the input before the loop unless Spark already
+    caches it, so every iteration's scan hits the block-manager cache,
+    and ``compute`` sees fresh Arrow batches each round.
 
     Implementations MUST handle an empty batch iterator (a partition can
     be empty) and MUST NOT rely on instance state surviving between

@@ -3,7 +3,7 @@
     prepare/persist input → loop:
         ship(master_result)                     # socket | inline | broadcast
         per-partition fold                      # resident | blob | Arrow
-        treeReduce(combine) | collect           # AllReduce up
+        partials up the run's socket            # | treeReduce(combine)
         master.compute(worker_results)          # model update, driver-side
         halt? → break
     stop the resident tasks / unpersist
@@ -18,17 +18,18 @@ unless shipping.install_zip_check is in place (importing guagua_spark
 installs it); without it the same jobs cost ~0.2, ~0.35 and ~1.0 s.
 And PySpark reuses a Python worker only for tasks that read their
 whole input, so every engine task does (see _drain); a task that stops
-early makes the next one fork a fresh worker. A resident run's first
-iteration is its one job's launch plus the slowest task's input and
-``prepare``. On perfbench's lr_long (4 tasks of 75k rows x 21
-doubles) a task enters 70-100 ms after run() starts; its input plus
-``prepare`` then takes ~0.2 s when the JVM streams it the cached rows
-as Arrow batches, and ~0.07 s when it reads the same rows from its own
-parquet file, so the first iteration is ~0.30 s over the rows and
-~0.12 s over parquet splits. After it, a resident superstep is the
-slowest worker's compute: numpy, at the speed of the BLAS kernel the
-worker's OpenBLAS loaded. get_spark picks that kernel for local
-sessions (session._openblas_coretype says why); a cluster sets
+early makes the next one fork a fresh worker. An iteration off the
+resident path is ONE such job. A resident run's first iteration is its
+one job's launch plus the slowest task's input and ``prepare``. On
+perfbench's lr_long (4 tasks of 75k rows x 21 doubles) a task enters
+70-100 ms after run() starts; its input plus ``prepare`` then takes
+~0.2 s when the JVM streams it the cached rows as Arrow batches, and
+~0.07 s when it reads the same rows from its own parquet file, so the
+first iteration is ~0.30 s over the rows and ~0.12 s over parquet
+splits. After it, a resident superstep is the slowest worker's
+compute: numpy, at the speed of the BLAS kernel the worker's OpenBLAS
+loaded. get_spark picks that kernel for local sessions
+(session._openblas_coretype says why); a cluster sets
 ``spark.executorEnv.OPENBLAS_CORETYPE`` at deploy time. One nn_backprop
 worker (25k rows, [20,64,32,1], one thread) takes ~95 ms a superstep on
 OpenBLAS's SSE3 ``Prescott`` fallback and ~43 ms on ``SkylakeX``: ~19 ms
@@ -38,37 +39,56 @@ choice, with the reason, once per run at INFO:
 
 - resident: ONE gang-scheduled (barrier) Spark job per run. Each task
   prepares its partition once, keeps it in memory and connects back to
-  a per-run listener on the driver; every superstep is a socket frame
+  the run's listener on the driver; every superstep is a socket frame
   down (the master result) and one up (the partial). Taken by a worker
-  that overrides ``prepare``, for ≥ LOAD_ONCE_MIN_ROUNDS rounds, with
-  the full barrier, no executor-side combine, ≤ 32 partitions, no more
-  partitions than the scheduler has task slots, and no dynamic
-  allocation (Spark rejects barrier stages under it). Its input: when
-  ``df`` is a bare parquet scan of whole local files (at most a
-  projection of its columns, cached or not), the job is a barrier RDD
-  over Spark's own file partitions and each task reads its files with
-  pyarrow (sources/splits.py), so the stage width is the split plan's,
-  fixed before submit; otherwise it is a barrier mapInArrow job over
-  ``df``'s rows, and the INFO line names the reason. If the job dies
-  (a task also fails it on a file whose size or mtime changed since
-  planning), the run finishes on the blob path over ``df`` from the
-  failed iteration. The tasks hold their slots until run() returns: a
-  Spark job that a master or master interceptor waits on mid-run gets
-  only the other slots, and none when the partitions fill the cluster,
-  so it would never finish.
-- blob: the other long prepared runs. Each partition's prepared object
-  is persisted as one pickled blob; each iteration is one job over them.
-- Arrow: workers without ``prepare``, and short runs. Each iteration is
-  one job that re-reads the persisted rows as Arrow batches.
+  that overrides ``prepare``, with no executor-side combine, ≤ 32
+  partitions, no more partitions than the scheduler has task slots,
+  and no dynamic allocation (Spark rejects barrier stages under it).
+  Its input: when ``df`` is a bare parquet scan of whole local files
+  (at most a projection of its columns, cached or not), the job is a
+  barrier RDD over Spark's own file partitions and each task reads its
+  files with pyarrow (sources/splits.py), so the stage width is the
+  split plan's, fixed before submit; otherwise it is a barrier
+  mapInArrow job over ``df``'s rows, and the INFO line names the
+  reason. If the job dies (a task also fails it on a file whose size
+  or mtime changed since planning), the run finishes on the blob path
+  over ``df`` from the failed iteration. The tasks hold their slots
+  until run() returns: a Spark job that a master or master interceptor
+  waits on mid-run gets only the other slots, and none when the
+  partitions fill the cluster, so it would never finish.
+- blob: the other prepared runs of ≥ LOAD_ONCE_MIN_ROUNDS rounds. Each
+  partition's prepared object is persisted as one pickled blob; each
+  iteration is one job over them.
+- Arrow: workers without ``prepare``, and the shorter prepared runs the
+  resident path cannot take. Each iteration is one job that re-reads
+  the persisted rows as Arrow batches.
+
+The way up is the same on every path: a task sends its pickled partial
+to the run's listener as one _UP frame (iteration, length, halt vote)
+after the run token and a hello, and one gather (_Listener.gather)
+reads the frames in arrival order with ``selectors``. It hands the
+master the partials in partition order, keeps the first complete frame
+per partition (task retries, speculation) and drops a frame of an older
+iteration unpickled. Past ``result_bytes_budget`` of raw frames it
+spills the rest to a driver-local temp file (_Partials). Under
+``min_workers_ratio`` < 1 the gather is the partial barrier: at
+``min_workers_timeout`` it proceeds once arrived/total ≥ the ratio and
+cancels the rest of a per-iteration job by its tag; a resident task
+that still owes a frame is sent no superstep until its late frame has
+been read and dropped. The one exception is a full-barrier run with
+more than 32 partitions or ``combine_executor_side=True``: its tasks
+return their partials to Spark, which merges them executor-side with
+treeReduce.
 
 This single loop replaces the reference's entire coordination layer
 (~4,000 LoC of ZooKeeper/Netty master-worker barriers — SURVEY.md §2.6):
 GuaguaMasterService.run's iteration loop (master/GuaguaMasterService.java:
 185-293), the worker mirror loop (worker/GuaguaWorkerService.java:209-341),
 znode publish/poll broadcast (master/AbstractMasterCoordinator.java:58-113),
-and the Netty result transport (master/NettyMasterCoordinator.java), which
-the resident path brings back as a plain socket; Spark still does
-placement, gang scheduling and failure detection.
+and the Netty result transport (master/NettyMasterCoordinator.java:
+160-200), which the listener brings back as a plain socket with the
+partial barrier as a deadline on it (BasicCoordinator.java:649-662);
+Spark still does placement, gang scheduling and failure detection.
 
 Scale notes (100 TB / 1000 executors):
 - Input is read once before the loop — the analogue of the reference's
@@ -77,13 +97,13 @@ Scale notes (100 TB / 1000 executors):
   in memory; the other paths persist MEMORY_AND_DISK, so re-reads hit
   the block manager and partitions that don't fit in memory spill
   instead of recomputing.
-- Worker→master traffic is one small result per partition. With a
-  Combinable result the engine pre-merges executor-side via treeReduce
-  (depth 2), so the driver sees O(sqrt(P)) results, not O(P) — the
-  analogue of the reference's merge-on-arrival combiner
-  (master/NettyMasterCoordinator.java:160-200) without its disk-spill
-  machinery (BytableMemoryDiskList), which distributed reduction makes
-  unnecessary.
+- Worker→master traffic is one frame per partition per iteration, read
+  as it arrives. The driver holds at most ``result_bytes_budget`` of
+  them in memory and spills the rest to disk, where the master reads
+  them one at a time (the reference's BytableMemoryDiskList). With a
+  Combinable result and more than 32 partitions the engine pre-merges
+  executor-side via treeReduce (depth 2) instead, so the driver sees
+  O(sqrt(P)) results, not O(P).
 - Master→worker traffic off the resident path is TorrentBroadcast
   (BitTorrent-style chunks) above INLINE_MODEL_BYTES; the reference's
   1 MB ZK chunking (GuaguaConstants.java:140-142) has no analogue
@@ -100,12 +120,14 @@ import os
 import pickle
 import re
 import secrets
+import selectors
 import socket
 import struct
 import tempfile
 import time
 import uuid
-from typing import Any, Callable, Iterator, NamedTuple, Sequence
+from collections.abc import Sequence
+from typing import Any, Callable, Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark import BarrierTaskContext, InheritableThread, TaskContext
@@ -138,12 +160,23 @@ DEFAULT_TOTAL_ITERATION = 50
 #: because an inlined model is shipped once PER TASK via the scheduler.
 INLINE_MODEL_BYTES = 256 * 1024
 
-#: minimum (remaining) iterations before a worker's ``prepare`` is used:
-#: shorter runs stay on the Arrow path, where the prepared paths' fixed
-#: costs (a prepare pass; for the blob path also a persisted copy) did
-#: not pay for themselves in earlier measurements. Whether the resident
-#: path should also take short runs is open until measured.
+#: a prepared run the resident path cannot take (more partitions than
+#: task slots, > 32 partitions, executor-side combine, dynamic
+#: allocation) uses the blob path from this many remaining rounds on,
+#: the Arrow path below it. Measured on 4 cores, local[4], lr_long's
+#: 300k x 20 input cached in 8 partitions: the blob path's first
+#: iteration (its prepare pass and persisted copy) took ~1.47 s against
+#: ~0.63 s for an Arrow iteration, its steady iteration 0.144 s against
+#: 0.49 s, so runs of 1/2/8 rounds took 1.62/1.64/2.58 s on the blob
+#: path and 0.76/1.17/4.02 s on the Arrow path. With iteration 1 as one
+#: job (no result-size probe) the blob path's first iteration read
+#: ~1.1 s, which moves the break-even to ~3 rounds; 8 is kept until
+#: the blob path itself is deleted.
 LOAD_ONCE_MIN_ROUNDS = 8
+
+#: partials a run may hold in driver memory, in raw pickled bytes, per
+#: iteration; the gather spills the rest to a temp file (_Partials)
+DEFAULT_RESULT_BYTES_BUDGET = 256 * 1024 * 1024
 
 
 class _ModelRef:
@@ -169,8 +202,8 @@ class _ModelRef:
 
 
 class _Partial:
-    """Internal wrapper combined executor-side: carries the user result,
-    the AND of worker halt votes, and the partition count."""
+    """Internal wrapper combined executor-side by treeReduce: carries the
+    user result, the AND of worker halt votes, and the partition count."""
 
     __slots__ = ("result", "all_halt", "n")
 
@@ -184,7 +217,8 @@ class _Task(NamedTuple):
     """What one iteration's worker task needs besides its partition data.
     The worker object, props and interceptors are serialized into the
     task closure; the (potentially large) master result rides the
-    _ModelRef."""
+    _ModelRef. ``up`` is the run listener's (address, token); None on a
+    treeReduce run, whose tasks return their partials to Spark."""
 
     worker: WorkerComputable
     iteration: int
@@ -192,6 +226,7 @@ class _Task(NamedTuple):
     props: dict[str, Any]
     model: _ModelRef
     interceptors: Sequence[WorkerInterceptor]
+    up: tuple[tuple[str, int], bytes] | None = None
 
 
 def _drain(it: Iterator[Any]) -> None:
@@ -210,13 +245,13 @@ def _partition_id() -> int:
 
 def _run_task(
     task: _Task, pid: int, compute: Callable[[WorkerContext], Any]
-) -> bytes:
+) -> Any:
     """The one worker-task body every path runs; paths differ only in
     how ``compute`` obtains the partition data. Hook order is the
     reference's call-stack contract (worker/WorkerInterceptor.java:33-38):
     [iter 1: pre_application FIFO] → pre_iteration FIFO → init/compute →
     post_iteration FILO → [iter N: post_application FILO]. Returns the
-    pickled (result, halt vote)."""
+    worker's result."""
     ctx = WorkerContext(
         current_iteration=task.iteration,
         total_iteration=task.total_iteration,
@@ -236,8 +271,27 @@ def _run_task(
     if task.iteration == task.total_iteration:
         for icpt in reversed(task.interceptors):
             icpt.post_application(ctx)
-    halt = bool(getattr(result, "halt", False))
-    return pickle.dumps((result, halt), protocol=pickle.HIGHEST_PROTOCOL)
+    return result
+
+
+def _emit(task: _Task, pid: int, result: Any) -> list[bytes]:
+    """End of a per-iteration task: send the partial up the run's socket
+    and return nothing, or, on a treeReduce run, return it pickled with
+    its halt vote for Spark to carry."""
+    if task.up is None:
+        raw = pickle.dumps(
+            (result, is_halt(result)), protocol=pickle.HIGHEST_PROTOCOL
+        )
+        return [raw]
+    addr, token = task.up
+    with socket.create_connection(addr) as sock:
+        sock.sendall(
+            token + _HELLO.pack(pid, 0) + _up_frame(task.iteration, result)
+        )
+        # the driver closes once it has read the frame, so a finished
+        # task's partial is always at the driver
+        sock.recv(1)
+    return []
 
 
 def _make_worker_fn(
@@ -247,13 +301,13 @@ def _make_worker_fn(
     partition's Arrow batches."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        payload = _run_task(
-            task,
-            _partition_id(),
-            lambda ctx: task.worker.compute(ctx, batches),
+        pid = _partition_id()
+        result = _run_task(
+            task, pid, lambda ctx: task.worker.compute(ctx, batches)
         )
         _drain(batches)
-        yield pa.RecordBatch.from_pydict({"result": [payload]})
+        for raw in _emit(task, pid, result):
+            yield pa.RecordBatch.from_pydict({"result": [raw]})
 
     return fn
 
@@ -285,16 +339,18 @@ def _make_prepared_iter_fn(
 
     def fn(blobs: Iterator[bytes]) -> Iterator[bytes]:
         (blob,) = blobs  # reads the stream to its end; see _drain
-        yield _run_task(
+        pid = _partition_id()
+        result = _run_task(
             task,
-            _partition_id(),
+            pid,
             lambda ctx: task.worker.compute_prepared(ctx, pickle.loads(blob)),
         )
+        yield from _emit(task, pid, result)
 
     return fn
 
 
-def _prepared_blobs(df: DataFrame, worker: WorkerComputable, level):
+def _prepared_blobs(df: DataFrame, worker: WorkerComputable):
     """The blob path's input: one persisted pickled prepare() output per
     partition. Take the run's partition count from this RDD: under AQE a
     shuffle-rooted ``df`` can re-plan with a different partition count
@@ -303,25 +359,33 @@ def _prepared_blobs(df: DataFrame, worker: WorkerComputable, level):
     return (
         df.mapInArrow(_make_prepare_fn(worker), "blob binary")
         .rdd.map(lambda row: bytes(row.blob))
-        .persist(level)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
-# -- resident path ---------------------------------------------------------
-# Wire format, all big-endian. Driver → task: _DOWN (iteration, payload
-# length) + the pickled master result; iteration 0 tells the task to
-# stop. Task → driver: first the raw run token + _HELLO (partition id,
-# tasks in the stage), then per superstep _UP (length) + the pickled
-# (result, halt vote) of _run_task.
+# -- the run's socket ------------------------------------------------------
+# Wire format, all big-endian. A task connects and sends the raw run
+# token, then _HELLO (partition id, tasks in the stage; 0 for a
+# per-iteration task), then one _UP frame per superstep: (iteration,
+# payload length, halt vote) + the pickled worker result. A resident
+# task keeps its connection and gets _DOWN (iteration, payload length)
+# + the pickled master result before each superstep; iteration 0 tells
+# it to stop. A per-iteration task sends its one frame and waits for
+# the driver to close the connection.
 _DOWN = struct.Struct("!qQ")
 _HELLO = struct.Struct("!qq")
-_UP = struct.Struct("!Q")
+_UP = struct.Struct("!qQ?")
 _STOP = _DOWN.pack(0, 0)
 _TOKEN_BYTES = 32
 #: driver-side socket poll: how often a wait re-checks that the job lives
 _POLL_S = 0.1
 #: how long a new connection may take to send its token and hello
 _HELLO_TIMEOUT_S = 10.0
+
+
+def _up_frame(iteration: int, result: Any) -> bytes:
+    payload = pickle.dumps(result, protocol=pickle.HIGHEST_PROTOCOL)
+    return _UP.pack(iteration, len(payload), is_halt(result)) + payload
 
 
 #: the exception line that ends a Python traceback, module path dropped
@@ -414,8 +478,7 @@ def _serve_resident(
                 worker, iteration, total_iteration, props, model,
                 interceptors,
             )
-            out = _run_task(task, pid, compute)
-            sock.sendall(_UP.pack(len(out)) + out)
+            sock.sendall(_up_frame(iteration, _run_task(task, pid, compute)))
 
 
 def _make_resident_fn(
@@ -446,43 +509,159 @@ def _make_resident_fn(
     return fn
 
 
-class _Listener:
-    """The per-run socket resident tasks connect back to, bound to the
-    driver's host. A connection's first bytes must be the run's raw
-    token; any other connection is closed unread, so nothing a stranger
-    sends is ever unpickled. The first hello fixes the run's task count
-    (the stage as Spark realized it: over ``df``'s rows under AQE it can
-    differ from an earlier ``getNumPartitions()``; over parquet splits
-    it is the plan's); every other hello must agree."""
+class _Partials(Sequence):
+    """One superstep's partials, kept by partition id: pickled bytes in
+    memory up to ``budget`` raw bytes, and past it in a temp file (the
+    reference's BytableMemoryDiskList). Indexing unpickles one partial,
+    in partition order, so a master that iterates holds one at a time
+    and may iterate again or take len(). Halt votes come from the frame
+    headers."""
 
-    def __init__(self, host: str) -> None:
+    def __init__(self, budget: int) -> None:
+        self.budget = budget
+        self.held = 0
+        self.spill = None
+        self.raw: dict[int, bytes | tuple[int, int]] = {}
+        self.halts: dict[int, bool] = {}
+        self._order: list[int] | None = None
+
+    def add(self, pid: int, halt: bool, payload: bytearray) -> None:
+        self.halts[pid] = halt
+        if self.spill is None and self.held + len(payload) <= self.budget:
+            self.held += len(payload)
+            self.raw[pid] = payload
+            return
+        if self.spill is None:
+            self.spill = tempfile.TemporaryFile(prefix="guagua_results_")
+        self.spill.seek(0, os.SEEK_END)
+        self.raw[pid] = (self.spill.tell(), len(payload))
+        self.spill.write(payload)
+
+    def __len__(self) -> int:
+        return len(self.raw)
+
+    def __getitem__(self, i):
+        if isinstance(i, slice):
+            return [self[j] for j in range(*i.indices(len(self)))]
+        if self._order is None:
+            self._order = sorted(self.raw)
+        raw = self.raw[self._order[i]]
+        if isinstance(raw, tuple):
+            offset, size = raw
+            self.spill.seek(offset)
+            raw = self.spill.read(size)
+        return pickle.loads(raw)
+
+    def results(self) -> Sequence[Any]:
+        """What the master gets: the partials unpickled into a list, or
+        this sequence once some spilled."""
+        if self.spill is not None:
+            return self
+        return [pickle.loads(self.raw[p]) for p in sorted(self.raw)]
+
+    def all_halt(self) -> bool:
+        return bool(self.halts) and all(self.halts.values())
+
+
+class _Job:
+    """One Spark action run from an InheritableThread, so it keeps the
+    caller's job group, description and scheduler pool, under a job tag
+    of its own with interrupt-on-cancel: cancelling it touches no other
+    job of the caller's group and stops its Python workers."""
+
+    def __init__(self, sc, action: Callable[[], Any]) -> None:
+        self.sc = sc
+        self.tag = f"guagua-{uuid.uuid4().hex[:12]}"
+        self.error: BaseException | None = None
+        self.cancelled = False
+
+        def run() -> None:
+            try:
+                sc.addJobTag(self.tag)
+                sc.setInterruptOnCancel(True)
+                action()
+            except Exception as exc:  # noqa: BLE001 — raised by check/finish
+                self.error = exc
+
+        self.thread = InheritableThread(target=run, daemon=True)
+        self.thread.start()
+
+    def check(self) -> None:
+        """Raise once the job has ended: a gather waiting on it for
+        more frames waits in vain."""
+        if not self.thread.is_alive():
+            raise self.error or EOFError(
+                "the job ended before every partial arrived"
+            )
+
+    def cancel(self) -> None:
+        self.cancelled = True
+        # repeat: a job that was not yet submitted at the first cancel
+        # is caught by the next
+        while self.thread.is_alive():
+            self.sc.cancelJobsWithTag(self.tag)
+            self.thread.join(_POLL_S * 10)
+
+    def finish(self) -> None:
+        """Wait for the job; raise its error unless it was cancelled."""
+        self.thread.join()
+        if self.error is not None and not self.cancelled:
+            raise self.error
+
+
+class _Listener:
+    """The run's socket, bound to the driver's host, and the one gather
+    of worker partials. A connection's first bytes must be the run's raw
+    token; any other connection is closed unread, so nothing a stranger
+    sends is ever unpickled. On a resident run the first hello fixes
+    the run's task count (the stage as Spark realized it: over ``df``'s
+    rows under AQE it can differ from an earlier ``getNumPartitions()``;
+    over parquet splits it is the plan's); every other hello must
+    agree."""
+
+    def __init__(
+        self,
+        host: str,
+        ratio: float = 1.0,
+        timeout_s: float = 0.0,
+        budget: int = DEFAULT_RESULT_BYTES_BUDGET,
+    ) -> None:
+        self.ratio = ratio
+        self.timeout_s = timeout_s
+        self.budget = budget
+        self.spilled = False
         self.token = secrets.token_bytes(_TOKEN_BYTES)
         self.tasks: int | None = None
+        #: resident connections by partition id
         self.conns: dict[int, socket.socket] = {}
+        #: resident tasks sent a superstep whose frame is not read yet
+        self.owes: set[int] = set()
         self.sock = socket.create_server((host, 0))
-        self.sock.settimeout(_POLL_S)
+        self.sock.setblocking(False)
         self.addr = self.sock.getsockname()[:2]
+        self.sel = selectors.DefaultSelector()
+        self.sel.register(self.sock, selectors.EVENT_READ)
 
-    def accept(self, check: Callable[[], None]) -> None:
-        """Accept until every task of the stage said hello; ``check``
-        raises _ResidentLost once the job is gone."""
-        while self.tasks is None or len(self.conns) < self.tasks:
-            check()
+    def _greeted(self, check: Callable[[], None]):
+        """Accept every pending connection; yield (conn, partition id,
+        tasks) for each that sends the run token and a hello, and close
+        the others."""
+        while True:
             try:
                 conn, _ = self.sock.accept()
-            except TimeoutError:
-                continue
+            except BlockingIOError:
+                return
             conn.settimeout(_POLL_S)
-            pid = None
+            hello = None
             try:
-                pid = self._hello(conn, check)
+                hello = self._hello(conn, check)
             except (OSError, EOFError):  # timed out or hung up mid-hello
                 pass
-            finally:
-                if pid is None:
-                    conn.close()
-            if pid is not None:
-                self.conns[pid] = conn
+            if hello is None:
+                conn.close()
+                continue
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+            yield (conn, *hello)
 
     def _hello(self, conn: socket.socket, check: Callable[[], None]):
         deadline = time.monotonic() + _HELLO_TIMEOUT_S
@@ -494,32 +673,116 @@ class _Listener:
 
         token = bytes(_recv_exact(conn, _TOKEN_BYTES, waiting))
         if not hmac.compare_digest(token, self.token):
-            log.warning(
-                "resident listener: closed a connection with a wrong token"
-            )
+            log.warning("run listener: closed a connection with a wrong token")
             return None
-        pid, tasks = _HELLO.unpack(_recv_exact(conn, _HELLO.size, waiting))
-        if self.tasks is None:
-            self.tasks = tasks
-        if tasks != self.tasks or pid in self.conns or not 0 <= pid < tasks:
-            raise _ResidentLost(
-                ValueError(f"hello from task {pid} of {tasks} after "
-                           f"{sorted(self.conns)} of {self.tasks}")
+        return _HELLO.unpack(_recv_exact(conn, _HELLO.size, waiting))
+
+    def accept(self, check: Callable[[], None]) -> None:
+        """Accept until every task of the resident stage said hello;
+        ``check`` raises _ResidentLost once the job is gone."""
+        while self.tasks is None or len(self.conns) < self.tasks:
+            check()
+            if not self.sel.select(_POLL_S):
+                continue
+            for conn, pid, tasks in self._greeted(check):
+                if (
+                    tasks != (self.tasks or tasks)
+                    or pid in self.conns
+                    or not 0 <= pid < tasks
+                ):
+                    conn.close()
+                    raise _ResidentLost(
+                        ValueError(f"hello from task {pid} of {tasks} after "
+                                   f"{sorted(self.conns)} of {self.tasks}")
+                    )
+                self.tasks = tasks
+                self.conns[pid] = conn
+                self.sel.register(conn, selectors.EVENT_READ, pid)
+
+    def gather(
+        self,
+        iteration: int,
+        waiting: set[int],
+        total: int,
+        check: Callable[[], None],
+    ) -> _Partials:
+        """Read _UP frames in arrival order until every partition in
+        ``waiting`` sent this iteration's, or, under the partial barrier
+        (reference BasicCoordinator.java:649-662), until the deadline
+        once arrived/total ≥ the ratio. ``check`` runs whenever the
+        sockets are quiet and raises once waiting is pointless."""
+        got = _Partials(self.budget)
+        deadline = time.monotonic() + self.timeout_s
+        while waiting:
+            wait = _POLL_S
+            if self.ratio < 1.0:
+                left = deadline - time.monotonic()
+                if left <= 0 and len(got) / total >= self.ratio:
+                    break
+                if left > 0:
+                    wait = min(wait, left)
+            events = self.sel.select(wait)
+            if not events:
+                check()
+            for key, _ in events:
+                if key.data is not None:  # a resident task's connection
+                    self._read_up(key.fileobj, key.data, iteration,
+                                  waiting, got, check)
+                    continue
+                for conn, pid, tasks in self._greeted(check):
+                    with conn:
+                        try:
+                            if tasks == 0:
+                                self._read_up(conn, pid, iteration, waiting,
+                                              got, check)
+                        except (OSError, EOFError):
+                            pass  # the attempt died mid-frame; a retry resends
+        if got.spill is not None and not self.spilled:
+            self.spilled = True
+            log.info(
+                "worker results past the %d-byte budget at iteration %d: "
+                "spilling partials to disk", self.budget, iteration,
             )
-        conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-        return pid
+        return got
+
+    def _read_up(self, conn, pid, iteration, waiting, got, check) -> None:
+        """Read one _UP frame; keep it if it is this iteration's first
+        from ``pid``. Any other frame is read to its end, so the stream
+        stays in step, and dropped unpickled."""
+        it, size, halt = _UP.unpack(_recv_exact(conn, _UP.size, check))
+        payload = _recv_exact(conn, size, check)
+        self.owes.discard(pid)
+        if it == iteration and pid in waiting:
+            got.add(pid, halt, payload)
+            waiting.discard(pid)
+
+    def gather_job(
+        self, sc, action: Callable[[], Any], iteration: int, partitions: int
+    ) -> _Partials:
+        """Run one per-iteration Spark job and gather its partials;
+        cancel the job if the partial barrier proceeded without some."""
+        job = _Job(sc, action)
+        got = None
+        try:
+            got = self.gather(
+                iteration, set(range(partitions)), partitions, job.check
+            )
+        finally:
+            if got is None or len(got) < partitions:
+                job.cancel()
+        job.finish()
+        return got
 
     def close(self) -> None:
         for conn in self.conns.values():
             conn.close()
+        self.sel.close()
         self.sock.close()
 
 
 class _Resident:
     """Driver end of a resident run. The barrier job starts at the first
-    superstep, from an InheritableThread so it keeps the caller's job
-    group and scheduler pool, under a per-run job tag that cancels it
-    without touching the caller's group."""
+    superstep, as a _Job."""
 
     def __init__(
         self,
@@ -530,19 +793,16 @@ class _Resident:
         props: dict[str, Any],
         interceptors: Sequence[WorkerInterceptor],
         splits: SplitPlan | None,
+        listener: _Listener,
     ) -> None:
         self.sc = sc
         self.args = (df, worker, total_iteration, props, interceptors)
         self.splits = splits
-        self.tag = f"guagua-resident-{uuid.uuid4().hex[:12]}"
-        self.listener: _Listener | None = None
-        self.thread: InheritableThread | None = None
-        self.error: BaseException | None = None
+        self.listener = listener
+        self.job: _Job | None = None
 
     def _start(self) -> None:
         df, worker, total_iteration, props, interceptors = self.args
-        # one key over py4j: getConf() would copy the whole conf
-        self.listener = _Listener(self.sc._conf.get("spark.driver.host"))
         fn = _make_resident_fn(
             worker, total_iteration, props, interceptors,
             self.listener.addr, self.listener.token, self.splits,
@@ -553,53 +813,43 @@ class _Resident:
             n = len(self.splits.partitions)
             job = self.sc.parallelize(range(n), n).barrier().mapPartitions(fn)
 
-        def run_job() -> None:
-            try:
-                self.sc.addJobTag(self.tag)
-                self.sc.setJobDescription("guagua resident run")
-                job.collect()
-            except Exception as exc:  # noqa: BLE001 — raised by _check
-                self.error = exc
+        def action() -> None:
+            self.sc.setJobDescription("guagua resident run")
+            job.collect()
 
-        self.thread = InheritableThread(target=run_job, daemon=True)
-        self.thread.start()
+        self.job = _Job(self.sc, action)
         self.listener.accept(self._check)
 
     def _check(self) -> None:
-        if not self.thread.is_alive():
+        if not self.job.thread.is_alive():
             raise _ResidentLost(
-                self.error or EOFError("the resident job ended")
+                self.job.error or EOFError("the resident job ended")
             )
 
-    def superstep(self, iteration: int, payload: bytes) -> list[bytearray]:
-        """Send the master result to every task; return the pickled
-        partials in partition order."""
+    def superstep(self, iteration: int, payload: bytes) -> _Partials:
+        """Send the master result to every task that owes no frame and
+        gather this iteration's partials. A task that still owes one
+        (dropped at an earlier deadline) sits this superstep out."""
         try:
-            if self.thread is None:
+            if self.job is None:
                 self._start()
-            conns = [self.listener.conns[p] for p in sorted(self.listener.conns)]
+            listener = self.listener
             frame = _DOWN.pack(iteration, len(payload)) + payload
-            for conn in conns:
-                _send_all(conn, frame, self._check)
-            out = []
-            for conn in conns:
-                (size,) = _UP.unpack(_recv_exact(conn, _UP.size, self._check))
-                out.append(_recv_exact(conn, size, self._check))
-            return out
+            sent = set(listener.conns) - listener.owes
+            for pid in sent:
+                _send_all(listener.conns[pid], frame, self._check)
+            listener.owes |= sent
+            return listener.gather(iteration, sent, listener.tasks, self._check)
         except (OSError, EOFError) as exc:
             raise _ResidentLost(exc) from exc
 
     def close(self, cancel: bool = False) -> None:
         """Release the run's task slots: send every task the stop frame,
-        or cancel the job when asked to or when some task cannot be
-        told; then join the job thread, which also lands the tasks'
-        accumulator updates on the driver."""
-        if self.thread is None:
-            if self.listener is not None:
-                self.listener.close()
-            return
+        or cancel the job when asked to, when some task still owes a
+        frame or when some task cannot be told; then wait for the job,
+        which also lands the tasks' accumulator updates on the driver."""
         told = 0
-        if not cancel:
+        if self.job is not None and not cancel and not self.listener.owes:
             for conn in self.listener.conns.values():
                 try:
                     _send_all(conn, _STOP, self._check)
@@ -607,13 +857,11 @@ class _Resident:
                 except (OSError, _ResidentLost):
                     pass
         self.listener.close()
+        if self.job is None:
+            return
         if told != self.listener.tasks:  # None: no task ever said hello
-            # repeat: a job that was not yet submitted at the first cancel
-            # is caught by the next
-            while self.thread.is_alive():
-                self.sc.cancelJobsWithTag(self.tag)
-                self.thread.join(_POLL_S * 10)
-        self.thread.join()
+            self.job.cancel()
+        self.job.thread.join()
 
 
 def _task_slots(sc) -> int:
@@ -626,19 +874,14 @@ def _task_slots(sc) -> int:
 
 
 def _resident_blocker(
-    sc,
-    num_partitions: int,
-    min_workers_ratio: float,
-    combine_executor_side: bool | None,
+    sc, num_partitions: int, combine_executor_side: bool | None
 ) -> str | None:
-    """Why a long prepared run cannot take the resident path, or None
-    when it can. The slot check runs before any job is submitted: a
-    barrier stage wider than the cluster is retried by Spark's slot
-    check for minutes before it fails."""
+    """Why a prepared run cannot take the resident path, or None when
+    it can. The slot check runs before any job is submitted: a barrier
+    stage wider than the cluster is retried by Spark's slot check for
+    minutes before it fails."""
     if num_partitions == 0:
         return "no partitions"
-    if min_workers_ratio < 1.0:
-        return "partial barrier"
     if combine_executor_side is True:
         return "executor-side combine"
     if num_partitions > 32:
@@ -650,109 +893,6 @@ def _resident_blocker(
     if num_partitions > slots:
         return f"{num_partitions} partitions > {slots} task slots"
     return None
-
-
-#: non-combinable master path: above this estimated total result size
-#: (first partition's pickled bytes × partitions, probed once per run)
-#: the driver streams partials through toLocalIterator instead of
-#: collecting all P at once — the reference's lazy master-side
-#: consumption with disk spill (AbstractMasterCoordinator.java:243-310,
-#: NettyMasterCoordinator.java:252-268). Below it, the direct collect
-#: stays (one job per iteration; streaming costs one job per PARTITION
-#: per iteration, only worth it when the collect would blow the driver).
-DEFAULT_RESULT_BYTES_BUDGET = 256 * 1024 * 1024
-
-
-class _LazyWorkerResults:
-    """Lazy, RE-ITERABLE iterable of worker results for the
-    non-combinable master path above the result-size budget: the master
-    consumes partials one at a time while the driver holds O(one
-    partition) of results in MEMORY — the reference's streamed-master
-    semantics. The reference's worker-results iterable is re-iterable
-    (AbstractMasterCoordinator.java hasNext resets the iterator so
-    masters can make two passes over the disk-spilled results); round
-    10 restored that contract here: every result drained from the
-    cluster is teed to a driver-local DISK spill (the MemoryDiskList
-    role, BytableMemoryDiskList.java), and a second ``iter()`` replays
-    the spilled prefix from disk before continuing the live stream —
-    so a master that double-iterates, ``len()``s after a full pass, or
-    abandons a pass and restarts behaves identically at any scale, at
-    disk-IO cost instead of a crash.
-
-    Halt votes fold as the stream is consumed; they are definitive only
-    when SOME pass drained the whole stream (a master that always stops
-    early leaves the remaining votes unknown — treated as
-    not-all-halted). Lazy semantics to know: partitions COMPUTE as the
-    stream is first consumed (toLocalIterator runs one job per
-    partition on demand), so a master that never touches part of the
-    stream skips those partitions' worker compute for that round —
-    harmless for the stateless-task model (no cross-round worker state
-    exists), but worker-interceptor side effects on never-reached
-    partitions are skipped with it."""
-
-    __slots__ = (
-        "_iter",
-        "_spill",
-        "_offsets",
-        "_exhausted",
-        "all_halt",
-        "count",
-    )
-
-    def __init__(self, partials) -> None:
-        self._iter = iter(partials)
-        self._spill = tempfile.TemporaryFile(prefix="guagua_results_")
-        self._offsets: list[tuple[int, int]] = []
-        self._exhausted = False
-        self.all_halt = True
-        self.count = 0
-
-    def _pull_next(self):
-        """Drain one partial from the live stream, tee it to the disk
-        spill, return its result. Raises StopIteration at end."""
-        p = next(self._iter)
-        self.all_halt = self.all_halt and p.all_halt
-        self.count += 1
-        b = pickle.dumps(p.result, protocol=pickle.HIGHEST_PROTOCOL)
-        self._spill.seek(0, os.SEEK_END)
-        off = self._spill.tell()
-        self._spill.write(b)
-        self._offsets.append((off, len(b)))
-        return p.result
-
-    def _read_spilled(self, i: int):
-        off, ln = self._offsets[i]
-        self._spill.seek(off)
-        return pickle.loads(self._spill.read(ln))
-
-    def __iter__(self):
-        i = 0
-        while True:
-            if i < len(self._offsets):
-                # replay what an earlier (or this) pass already drained
-                yield self._read_spilled(i)
-                i += 1
-            elif self._exhausted:
-                return
-            else:
-                try:
-                    r = self._pull_next()
-                except StopIteration:
-                    self._exhausted = True
-                    continue
-                i += 1
-                yield r
-
-    def __len__(self) -> int:
-        """Defined only once the stream has been fully drained (any
-        complete pass) — before that the answer would force a full
-        drain as a hidden side effect, so it raises instead."""
-        if not self._exhausted:
-            raise TypeError(
-                "len(worker_results) before a full pass in lazy mode; "
-                "iterate (or list(...)) first"
-            )
-        return self.count
 
 
 class IterativeEngine:
@@ -803,92 +943,6 @@ class IterativeEngine:
         with open(path, "rb") as f:
             return pickle.load(f)
 
-    def _collect_partial_barrier(
-        self,
-        partials,
-        num_partitions: int,
-        ratio: float,
-        timeout_s: float,
-        iteration: int,
-    ) -> list[_Partial]:
-        """Emulate guagua's partial barrier: a BOUNDED number of Spark
-        jobs (≤ pool width, 64), driver-side gather with a deadline,
-        cancel the straggler job groups.
-
-        Reference semantics (BasicCoordinator.isTerminated,
-        BasicCoordinator.java:649-662): proceed when all workers reported,
-        OR the timeout elapsed AND arrived/total >= ratio. Dropped
-        workers' results simply don't contribute this iteration — the
-        master must tolerate a shorter result list (it already must, since
-        results are unordered and possibly pre-combined).
-
-        Partitions are batched round-robin into ≤64 job groups so the
-        per-iteration scheduling cost is O(pool width), not
-        O(num partitions): at the reference's own scale (thousands of
-        workers, GuaguaMapReduceClient.java split planning) one job per
-        partition would push thousands of jobs through the scheduler
-        every iteration. The tradeoff is cancellation granularity — a
-        straggler drops its whole batch (≈ num_partitions/64 workers)
-        for the iteration, still within the reference's semantics where
-        any subset ≥ ratio may proceed. The arrived/total ratio is
-        accounted in PARTITIONS, not batches.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
-        sc = self.spark.sparkContext
-
-        pool_width = min(num_partitions, 64)
-        batches: list[list[int]] = [[] for _ in range(pool_width)]
-        for p in range(num_partitions):
-            batches[p % pool_width].append(p)
-
-        def run_batch(b: int) -> list[_Partial]:
-            group = f"guagua-barrier-it{iteration}-b{b}"
-            sc.setJobGroup(group, f"iteration {iteration} batch {b}",
-                           interruptOnCancel=True)
-            return sc.runJob(partials, lambda it: list(it), batches[b])
-
-        arrived: list[_Partial] = []
-        arrived_parts = 0
-        with ThreadPoolExecutor(max_workers=pool_width) as ex:
-            futures = {ex.submit(run_batch, b): b for b in range(pool_width)}
-            deadline = time.monotonic() + timeout_s
-            pending = dict(futures)
-            while pending:
-                for f in [f for f in pending if f.done()]:
-                    b = pending.pop(f)
-                    try:
-                        arrived.extend(f.result())
-                        arrived_parts += len(batches[b])
-                    except Exception:  # cancelled or failed batch
-                        log.warning(
-                            "batch %d (%d partitions) dropped this "
-                            "iteration", b, len(batches[b]),
-                        )
-                if not pending:
-                    break
-                if (
-                    time.monotonic() >= deadline
-                    and arrived_parts / num_partitions >= ratio
-                ):
-                    for f, b in pending.items():
-                        sc.cancelJobGroup(f"guagua-barrier-it{iteration}-b{b}")
-                    # cancelled jobs error out their futures promptly; the
-                    # executor shutdown below reaps the threads
-                    for f, b in pending.items():
-                        try:
-                            arrived.extend(f.result(timeout=10))
-                            arrived_parts += len(batches[b])
-                        except Exception:
-                            log.info(
-                                "straggler batch %d cancelled at "
-                                "iteration %d", b, iteration,
-                            )
-                    pending.clear()
-                else:
-                    time.sleep(0.02)
-        return arrived
-
     def run(
         self,
         master: MasterComputable,
@@ -899,8 +953,6 @@ class IterativeEngine:
         worker_interceptors: Sequence[WorkerInterceptor] = (),
         worker_halt_enable: bool = False,
         combine_executor_side: bool | None = None,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        persist: bool = True,
         min_workers_ratio: float = 1.0,
         min_workers_timeout: float = 60.0,
         result_bytes_budget: int = DEFAULT_RESULT_BYTES_BUDGET,
@@ -917,24 +969,17 @@ class IterativeEngine:
         / guagua.min.workers.timeout, BasicCoordinator.java:649-662):
         after ``min_workers_timeout`` seconds the master proceeds once
         ``arrived/total >= ratio``, dropping the stragglers' results for
-        that iteration. Spark stages are all-or-nothing, so this path
-        emulates the barrier by batching partitions round-robin into at
-        most 64 job groups run from driver threads and cancelling
-        unfinished groups at the deadline — bounded scheduling overhead
-        (≤64 jobs/iteration at any partition count), but a cancelled
-        straggler drops its whole batch (≈ partitions/64 workers). The
-        extra scheduling cost keeps it opt-in; the default paths run one
-        job per iteration, or one job per run on the resident path (see
-        the module docstring), which the partial barrier never takes.
+        that iteration. It is a deadline on the gather of every path
+        but treeReduce, which it therefore turns off.
 
-        ``result_bytes_budget`` bounds DRIVER memory on the
-        non-combinable path: partition 0's pickled result size is
-        probed once per run (one extra partition compute); when
-        size×partitions exceeds the budget, every iteration streams
-        partials through ``toLocalIterator`` into a one-shot lazy
-        ``worker_results`` instead of collecting all P at once — the
-        reference's lazy master-side consumption
-        (AbstractMasterCoordinator.java:243-310).
+        ``result_bytes_budget`` bounds the partials the driver holds in
+        memory per iteration, in raw pickled bytes; past it the gather
+        spills them to a temp file and ``worker_results`` unpickles one
+        at a time (see MasterContext).
+
+        ``df`` is persisted for the run only on the Arrow path and only
+        when Spark's cache manager does not hold it already; run()
+        unpersists only what it persisted.
         """
         sc = self.spark.sparkContext
         from guagua_spark.shipping import ensure_shipped
@@ -946,21 +991,24 @@ class IterativeEngine:
         if ckpt is not None:
             start_iteration, master_result = ckpt[0] + 1, ckpt[1]
             log.info("resuming from checkpoint at iteration %d", start_iteration)
+        # one key over py4j: getConf() would copy the whole conf
+        host = sc._conf.get("spark.driver.host")
+
+        def listen() -> _Listener:
+            return _Listener(
+                host, min_workers_ratio, min_workers_timeout,
+                result_bytes_budget,
+            )
 
         # LOAD-ONCE PATHS (reference MemoryDiskList parity — see
         # WorkerComputable.prepare): scan + convert each partition once;
         # every iteration then reuses the converted form instead of
-        # re-decoding rows→Arrow→numpy. Short runs stay on the Arrow
-        # path (see LOAD_ONCE_MIN_ROUNDS).
+        # re-decoding rows→Arrow→numpy.
         remaining = total_iteration - start_iteration + 1
-        prep_rdd = None
-        resident = None
+        prep_rdd = resident = None
+        persisted = False
         if type(worker).prepare is WorkerComputable.prepare:
             path, why = "arrow", "the worker does not override prepare"
-        elif remaining < LOAD_ONCE_MIN_ROUNDS:
-            path, why = "arrow", (
-                f"{remaining} rounds < {LOAD_ONCE_MIN_ROUNDS}"
-            )
         else:
             # a split plan fixes the stage width before submit; Spark's
             # own count can differ from the realized stage under AQE
@@ -971,9 +1019,7 @@ class IterativeEngine:
             else:
                 source = "parquet splits"
                 num_partitions = len(splits.partitions)
-            why = _resident_blocker(
-                sc, num_partitions, min_workers_ratio, combine_executor_side
-            )
+            why = _resident_blocker(sc, num_partitions, combine_executor_side)
             if why is None:
                 path, why = "resident", (
                     f"{remaining} rounds, {num_partitions} partitions fit "
@@ -983,16 +1029,20 @@ class IterativeEngine:
                     log.debug("parquet splits: %s", splits.describe())
                 resident = _Resident(
                     sc, df, worker, total_iteration, self.props,
-                    worker_interceptors, splits,
+                    worker_interceptors, splits, listen(),
+                )
+            elif remaining < LOAD_ONCE_MIN_ROUNDS:
+                path, why = "arrow", (
+                    f"{why}; {remaining} rounds < {LOAD_ONCE_MIN_ROUNDS}"
                 )
             else:
                 path = "blob"
-                prep_rdd = _prepared_blobs(df, worker, storage_level)
+                prep_rdd = _prepared_blobs(df, worker)
                 num_partitions = prep_rdd.getNumPartitions()
-            persist = False  # raw df no longer re-read after prepare
         if path == "arrow":
-            if persist:
-                df = df.persist(storage_level)
+            if df.storageLevel == StorageLevel.NONE:
+                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                persisted = True
             num_partitions = df.rdd.getNumPartitions()
         log.info("%s path: %s", path, why)
 
@@ -1017,8 +1067,7 @@ class IterativeEngine:
         for icpt in interceptors:
             icpt.pre_application(mctx)
 
-        bc = None
-        lazy_mode: bool | None = None  # decided once, first iteration
+        bc = listener = None
         try:
             for iteration in range(start_iteration, total_iteration + 1):
                 t0 = time.monotonic()
@@ -1036,13 +1085,12 @@ class IterativeEngine:
                 payload = pickle.dumps(
                     master_result, protocol=pickle.HIGHEST_PROTOCOL
                 )
-                from_resident = None
+                got = None
                 if resident is not None:
                     try:
-                        from_resident = [
-                            _unwrap_partial(b)
-                            for b in resident.superstep(iteration, payload)
-                        ]
+                        got = resident.superstep(iteration, payload)
+                        # the stage as Spark realized it (see _Listener)
+                        num_partitions = resident.listener.tasks
                     except _ResidentLost as lost:
                         # hooks of this iteration may have run on some
                         # tasks already; they run again on the blob path
@@ -1054,253 +1102,55 @@ class IterativeEngine:
                         )
                         resident.close(cancel=True)
                         resident = None
-                        prep_rdd = _prepared_blobs(df, worker, storage_level)
+                        prep_rdd = _prepared_blobs(df, worker)
                         num_partitions = prep_rdd.getNumPartitions()
-                        mctx.num_workers = num_partitions
-                if from_resident is None:
+                    mctx.num_workers = num_partitions
+                if resident is None:
                     if len(payload) <= INLINE_MODEL_BYTES:
                         bc = _ModelRef(payload=payload)
                     else:
                         bc = _ModelRef(bc=sc.broadcast(payload))
+                    combine = combine_executor_side
+                    if combine is None:
+                        combine = num_partitions > 32
+                    tree = combine and min_workers_ratio >= 1.0
+                    if not tree and listener is None:
+                        listener = listen()
                     task = _Task(
                         worker, iteration, total_iteration, self.props, bc,
                         worker_interceptors,
+                        None if tree else (listener.addr, listener.token),
                     )
                     if prep_rdd is not None:
-                        out_rdd = prep_rdd.mapPartitions(
+                        out = prep_rdd.mapPartitions(
                             _make_prepared_iter_fn(task)
                         )
-                        partials_rdd = out_rdd.map(_unwrap_partial)
                     else:
                         out = df.mapInArrow(
                             _make_worker_fn(task), "result binary"
                         )
-                        out_rdd = None
-                        partials_rdd = None
-
-                combinable = combine_executor_side
-                if combinable is None:
-                    combinable = num_partitions > 32
-                results: list[Any]
-                if from_resident is not None:
-                    results = [p.result for p in from_resident]
-                    all_halt = bool(from_resident) and all(
-                        p.all_halt for p in from_resident
-                    )
-                    # the stage as Spark realized it (see _Listener)
-                    num_partitions = mctx.num_workers = len(from_resident)
-                    mctx.arrived_workers = num_partitions
-                elif min_workers_ratio < 1.0:
-                    if partials_rdd is None:
-                        partials_rdd = out.rdd.map(
-                            lambda row: _unwrap_partial(row.result)
+                    if tree:
+                        if prep_rdd is None:
+                            out = out.rdd.map(lambda row: row.result)
+                        reduced = out.map(_unwrap_partial).treeReduce(
+                            _combine_or_list, depth=2
                         )
-                    collected = self._collect_partial_barrier(
-                        partials_rdd,
-                        num_partitions,
-                        min_workers_ratio,
-                        min_workers_timeout,
-                        iteration,
-                    )
-                    results = [p.result for p in collected]
-                    all_halt = bool(collected) and all(
-                        p.all_halt for p in collected
-                    )
-                    mctx.arrived_workers = len(collected)
-                elif combinable:
-                    # probe combinability lazily: only tree-reduce when the
-                    # user result actually implements combine()
-                    if partials_rdd is None:
-                        partials_rdd = out.rdd.map(
-                            lambda row: _unwrap_partial(row.result)
-                        )
-                    reduced = partials_rdd.treeReduce(
-                        lambda a, b: _combine_or_list(a, b), depth=2
-                    )
-                    results = _flatten_partial(reduced)
-                    all_halt = reduced.all_halt and reduced.n > 0
-                    mctx.arrived_workers = num_partitions
-                else:
-                    # direct collect, driver-side unpickle: skips the
-                    # df.rdd conversion's extra serializer stage —
-                    # measured ~25% lower per-iteration latency, which
-                    # compounds over a 50-round training loop
-                    raw_rdd = (
-                        out_rdd
-                        if prep_rdd is not None
-                        else out.rdd.map(
-                            lambda row: bytes(row.result)
-                        )
-                    )
-                    if lazy_mode is None and num_partitions == 0:
-                        lazy_mode = False  # nothing to probe
-                    if lazy_mode is None:
-                        # one-time probe: MAX pickled-RESULT size
-                        # over K spread sample partitions (first /
-                        # middle / last) sizes the full collect —
-                        # max-of-K so a skewed (tiny or huge) first
-                        # partition cannot misclassify the whole
-                        # run (round-9 advice: the old partition-0
-                        # probe did exactly that). Fetching the
-                        # bytes (not just a length) makes the probe
-                        # these partitions' one and only execution
-                        # this iteration — no duplicated worker
-                        # side effects — and the rest of iteration
-                        # 1 runs over the unprobed partitions.
-                        # Later iterations skip the probe entirely.
-                        probe_pids = sorted(
-                            {
-                                0,
-                                num_partitions // 2,
-                                num_partitions - 1,
-                            }
-                        )
-                        probe_raw = sc.runJob(
-                            raw_rdd,
-                            lambda it: [list(it)],
-                            probe_pids,
-                        )
-                        probed_chunks = dict(
-                            zip(probe_pids, probe_raw)
-                        )
-                        max_bytes = max(
-                            sum(len(b) for b in chunk)
-                            for chunk in probe_raw
-                        )
-                        lazy_mode = (
-                            max_bytes * num_partitions
-                            > result_bytes_budget
-                        )
-                        if lazy_mode:
-                            log.info(
-                                "non-combinable results estimated at"
-                                " %d bytes (> budget %d): streaming"
-                                " partials via toLocalIterator",
-                                max_bytes * num_partitions,
-                                result_bytes_budget,
-                            )
-                        rest = [
-                            p
-                            for p in range(num_partitions)
-                            if p not in probed_chunks
-                        ]
-                        if lazy_mode:
-                            # walk pids IN ORDER, serving probed
-                            # partitions from the driver cache —
-                            # the stream order matches the eager
-                            # path's partition order exactly
-
-                            def _first_iter_partials(
-                                cached=probed_chunks,
-                                n=num_partitions,
-                                rdd=raw_rdd,
-                            ):
-                                for pid in range(n):
-                                    chunk = cached.pop(pid, None)
-                                    if chunk is None:
-                                        (chunk,) = sc.runJob(
-                                            rdd,
-                                            lambda it: [list(it)],
-                                            [pid],
-                                        )
-                                    for b in chunk:
-                                        yield _unwrap_partial(b)
-
-                            results = _LazyWorkerResults(
-                                _first_iter_partials()
-                            )
-                            all_halt = False
-                        else:
-                            if rest:
-                                for pid, chunk in zip(
-                                    rest,
-                                    sc.runJob(
-                                        raw_rdd,
-                                        lambda it: [list(it)],
-                                        rest,
-                                    ),
-                                ):
-                                    probed_chunks[pid] = chunk
-                            raws = [
-                                b
-                                for pid in range(num_partitions)
-                                for b in probed_chunks[pid]
-                            ]
-                            collected = [
-                                _unwrap_partial(b) for b in raws
-                            ]
-                            results = [p.result for p in collected]
-                            all_halt = bool(collected) and all(
-                                p.all_halt for p in collected
-                            )
-                        mctx.arrived_workers = num_partitions
-                    elif lazy_mode:
-                        results = _LazyWorkerResults(
-                            _unwrap_partial(b)
-                            for b in raw_rdd.toLocalIterator(
-                                prefetchPartitions=True
-                            )
-                        )
-                        # halt votes fold as the master drains the
-                        # stream — evaluated post-compute below
-                        all_halt = False
+                        results = _flatten_partial(reduced)
+                        all_halt = reduced.all_halt and reduced.n > 0
                         mctx.arrived_workers = num_partitions
                     else:
-                        # steady-state eager path: DataFrame-level
-                        # collect (skips the df.rdd conversion's
-                        # extra serializer stage — the ~25% noted
-                        # above); raw_rdd is only ever EXECUTED by
-                        # the probe and lazy paths
-                        if prep_rdd is not None:
-                            raws = [
-                                bytes(b) for b in out_rdd.collect()
-                            ]
-                        else:
-                            raws = [
-                                bytes(r.result)
-                                for r in out.collect()
-                            ]
-                        # results can GROW across iterations
-                        # (typical of training loops with growing
-                        # models) past the iteration-1 probe's
-                        # verdict — the growth is observable, and
-                        # a persistent breach flips to streaming
-                        # from the NEXT iteration (safe now that
-                        # _LazyWorkerResults is re-iterable, so the
-                        # master-facing contract doesn't change)
-                        observed = sum(len(b) for b in raws)
-                        if observed > result_bytes_budget:
-                            log.warning(
-                                "eager-collected worker results"
-                                " (%d bytes) exceeded the budget"
-                                " (%d) at iteration %d; switching"
-                                " to streamed master consumption",
-                                observed,
-                                result_bytes_budget,
-                                iteration,
-                            )
-                            lazy_mode = True
-                        collected = [
-                            _unwrap_partial(b) for b in raws
-                        ]
-                        results = [p.result for p in collected]
-                        all_halt = bool(collected) and all(
-                            p.all_halt for p in collected
+                        got = listener.gather_job(
+                            sc, out.collect, iteration, num_partitions
                         )
-                        mctx.arrived_workers = num_partitions
+                if got is not None:
+                    results = got.results()
+                    all_halt = got.all_halt()
+                    mctx.arrived_workers = len(got)
 
                 mctx.worker_results = results
                 mctx.all_workers_halted = worker_halt_enable and all_halt
                 master_result = master.compute(mctx)
-                if worker_halt_enable and isinstance(
-                    results, _LazyWorkerResults
-                ):
-                    mctx.all_workers_halted = (
-                        results.count == num_partitions
-                        and results.count > 0
-                        and results.all_halt
-                    )
-                if worker_halt_enable and mctx.all_workers_halted:
+                if mctx.all_workers_halted:
                     _force_halt(master_result)
                 mctx.master_result = master_result
 
@@ -1321,11 +1171,13 @@ class IterativeEngine:
         finally:
             if resident is not None:
                 resident.close()
+            if listener is not None:
+                listener.close()
             for icpt in reversed(interceptors):
                 icpt.post_application(mctx)
             if bc is not None:
                 bc.destroy()
-            if persist:
+            if persisted:
                 df.unpersist()
             if prep_rdd is not None:
                 prep_rdd.unpersist()
@@ -1336,8 +1188,6 @@ class IterativeEngine:
 def _unwrap_partial(raw: bytes) -> _Partial:
     result, halt = pickle.loads(bytes(raw))
     return _Partial(result, halt)
-
-
 
 
 class _Acc(list):

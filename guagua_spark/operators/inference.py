@@ -116,7 +116,6 @@ def trained_lr_weights(
             LogisticGradientWorker(("l_quantity", "l_discount"), "label"),
             _lr_features(spark, sf_dir),
             total_iteration=5,
-            persist=False,
         )
         return tuple(round(float(x), 6) for x in model.weights)
 
@@ -538,7 +537,6 @@ def trained_nn_model(spark: SparkSession, sf_dir: str):
             ),
             li,
             total_iteration=NN_GD_ROUNDS,
-            persist=False,
         )
         return model.weights
 

@@ -185,10 +185,9 @@ def lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         LogisticGradientWorker(("l_quantity", "l_discount"), "label"),
         li,
         total_iteration=5,
-        persist=False,
     )
-    # round 6dp on BOTH sides (see _lr_train_oracle): the engine sums
-    # gradients via treeReduce (partition order), DuckDB sequentially —
+    # round 6dp on BOTH sides (see _lr_train_oracle): the master sums
+    # the workers' gradients in partition order, DuckDB sequentially —
     # bit-exact equality is not guaranteed, 1e-6 agreement is
     w = [round(float(x), 6) for x in model.weights]
     base = spark.createDataFrame(
@@ -243,8 +242,8 @@ _KMEANS_INIT_CACHE: dict[tuple, "np.ndarray"] = {}
 #: (table fingerprint, DataFrame): the training tables are static, but
 #: each invocation otherwise re-runs the projection (and for NN the
 #: repartition SHUFFLE) and re-materializes the block-manager cache.
-#: The engine is passed persist=False for these so it neither
-#: re-persists nor unpersists the shared DataFrame. ~24 MB pinned per
+#: The engine neither re-persists nor unpersists a DataFrame Spark's
+#: cache manager already holds, so these stay cached. ~24 MB pinned per
 #: (entry, sf) at sf0.1; bounded — one live entry per (entry, sf_dir),
 #: stale fingerprints are unpersisted on replace, and clear_caches()
 #: drops everything.
@@ -470,7 +469,6 @@ def nn_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         NNWorker(("f1", "f2", "f3", "f4"), "target", validation_rate=0.2),
         li,
         total_iteration=5,
-        persist=False,
     )
     return spark.createDataFrame(
         [
@@ -543,7 +541,6 @@ def nn_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         NNWorker(("f1", "f2", "f3", "f4"), "target", validation_rate=0.0),
         li,
         total_iteration=NN_GD_ROUNDS,
-        persist=False,
     )
     (_, _), (w2, b2) = model.weights
     hidden = NN_GD_LAYERS[1]
@@ -750,7 +747,6 @@ def als_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         AlsWorker(n_items),
         ratings,
         total_iteration=ALS_ITERATIONS,
-        persist=False,
     )
     y = model.item_factors
     counts = (
@@ -829,7 +825,6 @@ def gbt_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         GbtWorker(n_features=4),
         rows_df,
         total_iteration=GBT_ITER_BUDGET,
-        persist=False,
     )
     out = []
     for t, nodes in enumerate(model.trees):

@@ -65,7 +65,6 @@ def test_engine_matches_serial_replay(spark):
         AlsWorker(n_items),
         df,
         total_iteration=5,
-        persist=False,
     )
     golden = als_serial_replay(users, items, ratings, n_items, 5)
     assert model.iteration == golden.iteration
@@ -86,14 +85,12 @@ def test_replay_partition_invariance(spark):
         AlsWorker(n_items),
         _as_df(spark, users, items, ratings, partitions=2),
         total_iteration=3,
-        persist=False,
     )
     m8 = IterativeEngine(spark).run(
         AlsMaster(n_items),
         AlsWorker(n_items),
         _as_df(spark, users, items, ratings, partitions=8),
         total_iteration=3,
-        persist=False,
     )
     np.testing.assert_allclose(
         m2.item_factors, m8.item_factors, rtol=1e-8, atol=1e-10
@@ -149,7 +146,6 @@ def test_halt_on_convergence(spark):
         AlsWorker(n_items),
         df,
         total_iteration=40,
-        persist=False,
     )
     golden = als_serial_replay(
         users, items, ratings, n_items, 40, tolerance=1e-3
@@ -171,7 +167,6 @@ def test_partial_barrier_path(spark):
         AlsWorker(n_items),
         df,
         total_iteration=3,
-        persist=False,
         min_workers_ratio=0.5,
         min_workers_timeout=120.0,
     )

@@ -80,7 +80,6 @@ def test_engine_matches_serial_replay(spark):
         GbtWorker(n_features=3),
         _as_df(spark, x, y),
         total_iteration=12,
-        persist=False,
     )
     golden = gbt_serial_replay(x, y)
     assert model.halt and model.phase == "done"
@@ -106,14 +105,12 @@ def test_partition_invariance(spark):
         GbtWorker(n_features=3),
         _as_df(spark, x, y, partitions=2),
         total_iteration=12,
-        persist=False,
     )
     m8 = IterativeEngine(spark).run(
         GbtMaster(n_features=3),
         GbtWorker(n_features=3),
         _as_df(spark, x, y, partitions=8),
         total_iteration=12,
-        persist=False,
     )
     _trees_equal(m2.trees, m8.trees)
     assert m2.rmse == pytest.approx(m8.rmse, rel=1e-10)
@@ -208,7 +205,6 @@ def test_partial_barrier_path(spark):
         GbtWorker(n_features=3),
         _as_df(spark, x, y, partitions=4),
         total_iteration=12,
-        persist=False,
         min_workers_ratio=0.5,
         min_workers_timeout=120.0,
     )
@@ -281,7 +277,6 @@ def test_gbt_failover_resume_equals_uninterrupted(spark, tmp_path):
         GbtWorker(n_features=3),
         df,
         total_iteration=5,
-        persist=False,
     )
     assert not part.halt and len(part.trees) >= 1
     e2 = IterativeEngine(spark, checkpoint_dir=ckpt, checkpoint_interval=1)
@@ -290,7 +285,6 @@ def test_gbt_failover_resume_equals_uninterrupted(spark, tmp_path):
         GbtWorker(n_features=3),
         df,
         total_iteration=12,
-        persist=False,
     )
     assert len(e2.iteration_seconds) < 11  # completed supersteps skipped
     full = IterativeEngine(spark).run(
@@ -298,7 +292,6 @@ def test_gbt_failover_resume_equals_uninterrupted(spark, tmp_path):
         GbtWorker(n_features=3),
         df,
         total_iteration=12,
-        persist=False,
     )
     assert m_res.halt and full.halt
     _trees_equal(m_res.trees, full.trees)

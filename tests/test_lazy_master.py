@@ -1,11 +1,12 @@
-"""Non-combinable master path above the result-size budget: partials
-stream through toLocalIterator into a lazy, disk-spill-backed
-RE-ITERABLE worker_results (reference lazy master-side consumption
-with spill, AbstractMasterCoordinator.java:243-310 /
+"""Worker results past the driver's result-size budget: the gather
+spills the raw frames past ``result_bytes_budget`` to a driver-local
+temp file and the master gets a RE-ITERABLE, len()-able sequence that
+unpickles one partial at a time (reference lazy master-side
+consumption with spill, AbstractMasterCoordinator.java:243-310 /
 NettyMasterCoordinator.java:252-268 / BytableMemoryDiskList.java) —
 driver memory stays bounded by O(one partition result) while the
-golden Sum value is unchanged and a second master pass replays the
-spill exactly."""
+golden Sum value is unchanged and a second master pass reads the same
+partials."""
 
 from __future__ import annotations
 
@@ -13,12 +14,11 @@ import gc
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pytest
 
 from guagua_spark import IterativeEngine
 from guagua_spark.api import MasterComputable, WorkerComputable
 from guagua_spark.algorithms.sum_ import SumMaster, SumState, SumWorker
-from guagua_spark.engine import _LazyWorkerResults
+from guagua_spark.engine import _Partials
 
 PAYLOAD = 1 << 20  # 1 MiB per worker result
 
@@ -84,8 +84,8 @@ def _df(spark, n_partitions: int):
 
 
 def test_golden_sum_unchanged_on_lazy_path(spark, caplog):
-    """budget=0 forces streaming for ANY result size; the reference's
-    golden SumTest value must be bit-identical to the collect path."""
+    """budget=0 spills every partial, whatever its size; the reference's
+    golden SumTest value must be bit-identical to the in-memory path."""
     import logging
 
     rows = [(1,), (2,), (3,), (2,), (3,), (4,)]
@@ -101,7 +101,8 @@ def test_golden_sum_unchanged_on_lazy_path(spark, caplog):
             result_bytes_budget=0,
         )
     assert r.value == 15345  # golden from reference SumTest.java:45-67
-    assert any("streaming partials" in m for m in caplog.messages)
+    spills = [m for m in caplog.messages if "spilling partials" in m]
+    assert len(spills) == 1, caplog.messages  # logged once per run
 
 
 def test_driver_holds_one_result_at_a_time_when_over_budget(spark):
@@ -119,14 +120,14 @@ def test_driver_holds_one_result_at_a_time_when_over_budget(spark):
     )
     assert r.value == 36
     # loop-variable rebinding holds at most the current + next result;
-    # prefetched partitions buffer raw BYTES, not unpickled objects
+    # the partials in memory are raw BYTES, not unpickled objects
     assert max(master.peaks) <= 3, master.peaks
 
 
 def test_collect_path_below_budget_is_unchanged(spark):
-    """Control: under the default budget the eager collect materializes
-    all P results at once (and the counter mechanism demonstrably
-    measures that), so the lazy test's bound is meaningful."""
+    """Control: under the default budget the master gets all P results
+    unpickled at once (and the counter mechanism demonstrably measures
+    that), so the over-budget test's bound is meaningful."""
     BigState.alive = 0
     BigState.peak = 0
     master = StreamSumMaster()
@@ -137,34 +138,43 @@ def test_collect_path_below_budget_is_unchanged(spark):
     assert max(master.peaks) == 8
 
 
-class _Partial:
-    def __init__(self, value, all_halt=True):
-        self.result = value
-        self.all_halt = all_halt
+def _partials(values, halt=True, budget=0) -> _Partials:
+    """A gather's result as the engine builds it, partitions arriving
+    in reverse order."""
+    import pickle
+
+    got = _Partials(budget)
+    for pid in reversed(range(len(values))):
+        got.add(pid, halt, bytearray(pickle.dumps(values[pid])))
+    return got
 
 
 def test_lazy_results_are_reiterable_via_spill():
     """The reference's worker-results iterable is re-iterable (hasNext
     resets over the disk spill); a second pass must replay the same
-    values, and len() is defined after a full pass."""
-    lw = _LazyWorkerResults(_Partial(v) for v in (10, 20, 30))
-    with pytest.raises(TypeError):
-        len(lw)  # would force a hidden full drain
-    assert list(lw) == [10, 20, 30]
-    assert list(lw) == [10, 20, 30]  # replayed from the disk spill
-    assert len(lw) == 3
-    assert lw.all_halt
+    values in partition order, and len() is defined throughout."""
+    got = _partials([10, 20, 30])
+    results = got.results()
+    assert results is got  # spilled: the lazy sequence, not a list
+    assert len(results) == 3
+    assert list(results) == [10, 20, 30]
+    assert list(results) == [10, 20, 30]  # replayed from the disk spill
+    assert results[-1] == 30 and results[1:] == [20, 30]
+    assert got.all_halt()
 
 
 def test_lazy_results_abandoned_pass_then_restart():
-    """A pass abandoned mid-stream must not lose results: the next
-    pass replays the spilled prefix, then continues the live stream."""
-    lw = _LazyWorkerResults(_Partial(v, all_halt=False) for v in range(5))
-    it = iter(lw)
+    """A pass abandoned midway must not lose results, and partials that
+    fit the budget stay in memory while the rest spill."""
+    got = _partials(list(range(5)), halt=False, budget=12)
+    assert got.spill is not None and 0 < got.held <= 12
+    it = iter(got.results())
     assert next(it) == 0 and next(it) == 1
-    assert list(lw) == [0, 1, 2, 3, 4]
-    assert len(lw) == 5
-    assert not lw.all_halt
+    assert list(got.results()) == [0, 1, 2, 3, 4]
+    assert len(got) == 5
+    assert not got.all_halt()
+    under = _partials([1, 2], budget=1 << 20)
+    assert under.spill is None and under.results() == [1, 2]
 
 
 class TwoPassMaster(MasterComputable):
@@ -180,8 +190,8 @@ class TwoPassMaster(MasterComputable):
 
 
 def test_engine_two_pass_master_on_lazy_path(spark):
-    """budget=0 forces streaming; a master that double-iterates must
-    see identical values both passes (disk-spill replay)."""
+    """budget=0 spills every partial; a master that double-iterates
+    must see identical values both passes (disk-spill replay)."""
     BigState.alive = 0
     BigState.peak = 0
     r = IterativeEngine(spark).run(
@@ -198,7 +208,8 @@ class LenTwoPassMaster(MasterComputable):
     """len()s AND double-iterates every iteration — the exact access
     pattern the round-10 ADVICE predicted would crash a one-shot
     stream — and BINDS both observations into the returned value so a
-    silent divergence between the lazy and eager paths cannot pass."""
+    silent divergence between the spilled and in-memory partials
+    cannot pass."""
 
     def compute(self, context) -> SumState:
         first = sum(r.value for r in context.worker_results if r)
@@ -209,11 +220,11 @@ class LenTwoPassMaster(MasterComputable):
 
 
 def test_len_two_pass_master_lazy_equals_eager(spark):
-    """Reference-parity golden (round-10 verdict #7): the disk-spill
-    lazy worker_results must be value-identical to the eager collect
-    path for a master that len()s and double-iterates past the budget
-    threshold (AbstractMasterCoordinator.java:243-310's two-pass
-    contract). budget=0 forces streaming; a huge budget forces eager."""
+    """Reference-parity golden (round-10 verdict #7): the disk-spilled
+    worker_results must be value-identical to the in-memory list for a
+    master that len()s and double-iterates past the budget threshold
+    (AbstractMasterCoordinator.java:243-310's two-pass contract).
+    budget=0 spills everything; a huge budget spills nothing."""
     lazy = IterativeEngine(spark).run(
         LenTwoPassMaster(),
         BigWorker(),
@@ -247,12 +258,10 @@ class SkewWorker(WorkerComputable):
         return st
 
 
-def test_probe_survives_tiny_first_partition(spark, caplog):
-    """Round-9 advice: the old partition-0-only probe extrapolated a
-    skewed first partition over the whole run. With partition 0 tiny
-    (1 KiB) and partitions 1..7 at 1 MiB, a 4 MiB budget must still
-    pick the streamed path (max-of-K sample: 1 MiB × 8 > 4 MiB; the
-    old probe said 1 KiB × 8 = eager and blew the budget)."""
+def test_skewed_partials_spill_past_budget(spark, caplog):
+    """With partition 0 tiny (1 KiB) and partitions 1..7 at 1 MiB, a
+    4 MiB budget holds the first partials that arrive in memory and
+    spills the rest; the master still sums every partition once."""
     import logging
 
     rows = [(1,)] + [(1024,)] * 7  # row i -> partition i
@@ -268,5 +277,4 @@ def test_probe_survives_tiny_first_partition(spark, caplog):
             result_bytes_budget=4 * (1 << 20),
         )
     assert r.value == 1 + 1024 * 7
-    assert any("streaming partials" in m for m in caplog.messages)
-
+    assert any("spilling partials" in m for m in caplog.messages)

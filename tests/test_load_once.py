@@ -1,8 +1,9 @@
-"""Load-once paths (WorkerComputable.prepare): the resident job for long
-runs that fit the task slots, the blob RDD for the other long runs, the
-fallback from a lost resident job to the blob path, and the resident
-listener's token check (reference parity: AbstractWorkerComputable
-load-once + MemoryDiskList memory/disk residency)."""
+"""Load-once paths (WorkerComputable.prepare): the resident job for
+prepared runs that fit the task slots, the blob RDD for the other long
+runs, the fallback from a lost resident job to the blob path, failure
+and checkpoint resume around them, and the run listener's token check
+(reference parity: AbstractWorkerComputable load-once + MemoryDiskList
+memory/disk residency)."""
 
 from __future__ import annotations
 
@@ -116,12 +117,15 @@ def test_blob_path_matches_arrow_semantics(spark):
     np.testing.assert_allclose(blob.weights, arrow.weights, rtol=1e-9)
 
 
-def test_short_runs_stay_on_arrow_path(spark, caplog):
-    """< LOAD_ONCE_MIN_ROUNDS rounds must not engage any load-once
-    path (fixed costs dominate — measured)."""
+def test_short_runs_are_resident(spark, caplog):
+    """A prepared run that fits the task slots is resident at any
+    length, fewer than LOAD_ONCE_MIN_ROUNDS rounds included."""
+    rounds = 2
     with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
-        _run(spark, LOAD_ONCE_MIN_ROUNDS - 1)
-    assert _paths(caplog) == ["arrow"]
+        model = _run(spark, rounds)
+    assert _paths(caplog) == ["resident"]
+    assert any(m.startswith("resident path: 2 rounds") for m in caplog.messages)
+    np.testing.assert_allclose(model.weights, _replay(spark, rounds), rtol=1e-9)
 
 
 class _PrepFileWatch(MasterInterceptor):
@@ -206,9 +210,11 @@ def test_resident_lost_worker_recovers(spark, caplog, tmp_path):
 
 
 class _FailAt(GradientDescentMaster):
+    at = 3
+
     def compute(self, context):
-        if context.current_iteration == 3:
-            raise RuntimeError("master failed at iteration 3")
+        if context.current_iteration == self.at:
+            raise RuntimeError(f"master failed at iteration {self.at}")
         return super().compute(context)
 
 
@@ -321,19 +327,84 @@ def test_noprep_worker_class_unaffected():
         SumWorker().prepare(iter([]))
 
 
-def test_partial_barrier_with_prepared_worker(spark):
-    """min_workers_ratio < 1 keeps a long prepared run off the resident
-    path and on the blob RDD — the barrier must deliver the same model
-    as the full-barrier run when nobody straggles."""
+def test_partial_barrier_with_prepared_worker(spark, caplog):
+    """min_workers_ratio < 1 keeps a prepared run resident — the
+    barrier must deliver the full-barrier model when nobody straggles."""
     rounds = LOAD_ONCE_MIN_ROUNDS + 1
     engine = IterativeEngine(spark)
-    barrier = engine.run(
-        GradientDescentMaster(dim=2, learning_rate=0.5),
-        LogisticGradientWorker(("f1", "f2"), "label"),
-        _train_df(spark),
-        total_iteration=rounds,
-        min_workers_ratio=0.5,
-        min_workers_timeout=120.0,
-    )
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        barrier = engine.run(
+            GradientDescentMaster(dim=2, learning_rate=0.5),
+            LogisticGradientWorker(("f1", "f2"), "label"),
+            _train_df(spark),
+            total_iteration=rounds,
+            min_workers_ratio=0.5,
+            min_workers_timeout=120.0,
+        )
+    assert _paths(caplog) == ["resident"]
     full = _run(spark, rounds)
-    np.testing.assert_allclose(barrier.weights, full.weights, rtol=1e-9)
+    np.testing.assert_array_equal(barrier.weights, full.weights)
+
+
+class _KillAlways(WorkerInterceptor):
+    """Fault injection: the Python worker running partition 1 exits in
+    iteration 2, on every attempt."""
+
+    def pre_iteration(self, context) -> None:
+        if context.current_iteration == 2 and context.partition_id == 1:
+            os._exit(1)
+
+
+def test_worker_dying_on_every_attempt_ends_run(spark, caplog):
+    """A worker that always dies: the resident job is lost, the blob
+    job that finishes the run fails too, and run() raises that error
+    with its class — in bounded time, neither hanging nor looping. The
+    next resident run still gets its task slots."""
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    t0 = time.monotonic()
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        with pytest.raises(Exception) as failed:
+            _run(spark, rounds, worker_interceptors=[_KillAlways()])
+    assert time.monotonic() - t0 < 120
+    assert _paths(caplog) == ["resident"]
+    lost = [
+        m for m in caplog.messages
+        if re.match(r"resident job lost at iteration 2 \(\w+(Error|Exception):", m)
+    ]
+    assert len(lost) == 1, caplog.messages
+    assert type(failed.value).__name__.endswith(("Error", "Exception"))
+    assert "Python worker exited unexpectedly" in str(failed.value)
+    model = _run(spark, rounds)
+    np.testing.assert_allclose(model.weights, _replay(spark, rounds), rtol=1e-9)
+
+
+def test_checkpoint_resume_into_resident_run(spark, caplog, tmp_path):
+    """A run stopped by a master error at iteration 6 resumes from its
+    iteration-5 checkpoint with 5 rounds left, fewer than
+    LOAD_ONCE_MIN_ROUNDS, on the resident path, and ends with the model
+    of an uninterrupted run, bit for bit."""
+    rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    ckpt = str(tmp_path / "ckpt")
+
+    class _FailAt6(_FailAt):
+        at = 6
+
+    with pytest.raises(RuntimeError, match="iteration 6"):
+        IterativeEngine(spark, checkpoint_dir=ckpt, checkpoint_interval=1).run(
+            _FailAt6(dim=2, learning_rate=0.5),
+            LogisticGradientWorker(("f1", "f2"), "label"),
+            _train_df(spark),
+            total_iteration=rounds,
+        )
+    engine = IterativeEngine(spark, checkpoint_dir=ckpt, checkpoint_interval=1)
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        resumed = engine.run(
+            GradientDescentMaster(dim=2, learning_rate=0.5),
+            LogisticGradientWorker(("f1", "f2"), "label"),
+            _train_df(spark),
+            total_iteration=rounds,
+        )
+    assert "resuming from checkpoint at iteration 6" in caplog.messages
+    assert any(m.startswith("resident path: 5 rounds") for m in caplog.messages)
+    assert len(engine.iteration_seconds) == 5
+    np.testing.assert_array_equal(resumed.weights, _run(spark, rounds).weights)

@@ -19,7 +19,7 @@ from guagua_spark.api import (
     WorkerComputable,
     WorkerContext,
 )
-from guagua_spark.algorithms.sum_ import SumMaster, SumWorker
+from guagua_spark.algorithms.sum_ import SumMaster, SumState, SumWorker
 from guagua_spark.engine import IterativeEngine
 
 
@@ -69,6 +69,12 @@ def _df(spark, partitions: int = 4, rows_per: int = 10):
 
 
 def test_straggler_dropped_and_loop_completes(spark):
+    # the deadline is strict and the fast partitions must meet it: warm
+    # the Python workers first (a cold session's first Python job alone
+    # can take longer than the 3 s timeout below)
+    IterativeEngine(spark).run(
+        CountMaster(), FastWorker(), _df(spark), total_iteration=1
+    )
     master = CountMaster()
     result = IterativeEngine(spark).run(
         master,
@@ -85,9 +91,10 @@ def test_straggler_dropped_and_loop_completes(spark):
 
 
 def test_many_partitions_batched_into_bounded_jobs(spark):
-    """256 partitions flow through ≤64 batched job groups with the same
-    semantics as the per-partition path (reference scale: thousands of
-    workers per job, GuaguaMapReduceClient split planning)."""
+    """256 partitions under the partial barrier run as ONE job per
+    iteration whose 256 tasks each send their partial to the driver's
+    gather (reference scale: thousands of workers per job,
+    GuaguaMapReduceClient split planning)."""
     master = CountMaster()
     result = IterativeEngine(spark).run(
         master,
@@ -141,11 +148,12 @@ class RecordingSumMaster(SumMaster):
 
 
 def test_sum_golden_under_real_timeout_drop(spark):
-    """End-to-end §2.5 drop semantics on the REFERENCE workload: with
-    the SumTest partitions {1,2,3} / {2,3,4} and partition 0 cancelled
-    at the deadline every iteration, each round the master sees ONE
-    result carrying prev_sum + 9, so Mₙ = Mₙ₋₁ + 9 — the golden under
-    drop is 9·iterations, not the full-barrier 15·(2ⁿ−1)."""
+    """End-to-end §2.5 drop semantics on the REFERENCE workload, on a
+    per-iteration (Arrow) path: with the SumTest partitions {1,2,3} /
+    {2,3,4} and partition 0 cancelled at the deadline every iteration,
+    each round the master sees ONE result carrying prev_sum + 9, so
+    Mₙ = Mₙ₋₁ + 9 — the golden under drop is 9·iterations, not the
+    full-barrier 15·(2ⁿ−1)."""
     from guagua_spark.engine import IterativeEngine
 
     rdd = spark.sparkContext.parallelize(
@@ -163,6 +171,63 @@ def test_sum_golden_under_real_timeout_drop(spark):
     )
     assert master.arrived_history == [1, 1, 1]
     assert result.value == 27  # 9 * 3 iterations
+
+
+class PreparedSumWorker(SumWorker):
+    """The reference SUM worker with ``prepare``, so that it runs
+    resident: a partition's sum is taken once, and every superstep adds
+    the previous master sum to it."""
+
+    def prepare(self, batches: Iterator[pa.RecordBatch]) -> int:
+        import pyarrow.compute as pc
+
+        return sum(pc.sum(b.column(self.column)).as_py() or 0 for b in batches)
+
+    def compute_prepared(self, context: WorkerContext, data: int) -> Any:
+        prev = context.last_master_result
+        return SumState(value=data + (prev.value if prev is not None else 0))
+
+
+class SlowPreparedSumWorker(PreparedSumWorker):
+    """Partition 0's resident task sleeps far past the deadline in its
+    first superstep, so it owes that frame for the rest of the run."""
+
+    def compute_prepared(self, context: WorkerContext, data: int) -> Any:
+        if context.partition_id == 0:
+            time.sleep(30)
+        return super().compute_prepared(context, data)
+
+
+def test_sum_golden_under_resident_straggler(spark, caplog):
+    """The same drop on the RESIDENT path: partition 0 misses the first
+    deadline, is sent no later superstep while it still owes its frame,
+    and the master sees partition 1 alone each round (9·iterations).
+    run() then cancels the job (a task still owes a frame), and the
+    next resident run gets its slots and the full-barrier golden."""
+    import logging
+
+    rdd = spark.sparkContext.parallelize(
+        [(1,), (2,), (3,), (2,), (3,), (4,)], 2
+    )
+    df = spark.createDataFrame(rdd, "value long")
+    master = RecordingSumMaster()
+    with caplog.at_level(logging.INFO, logger="guagua_spark.engine"):
+        result = IterativeEngine(spark).run(
+            master,
+            SlowPreparedSumWorker(),
+            df,
+            total_iteration=3,
+            min_workers_ratio=0.5,
+            min_workers_timeout=2.0,
+        )
+        full = IterativeEngine(spark).run(
+            SumMaster(), PreparedSumWorker(), df, total_iteration=10
+        )
+    paths = [m.split(" path:")[0] for m in caplog.messages if " path: " in m]
+    assert paths == ["resident", "resident"], caplog.messages
+    assert master.arrived_history == [1, 1, 1]
+    assert result.value == 27  # 9 * 3 iterations
+    assert full.value == 15345
 
 
 def test_straggler_at_bench_scale_converges_close(spark):
@@ -220,7 +285,6 @@ def test_straggler_at_bench_scale_converges_close(spark):
         LogisticGradientWorker(("l_quantity", "l_discount"), "label"),
         li,
         total_iteration=5,
-        persist=False,
     )
     base_secs = time.monotonic() - t0
 
@@ -231,7 +295,6 @@ def test_straggler_at_bench_scale_converges_close(spark):
         StragglerLR(("l_quantity", "l_discount"), "label"),
         li,
         total_iteration=5,
-        persist=False,
         min_workers_ratio=0.8,
         min_workers_timeout=2.0,
     )
