@@ -23,25 +23,46 @@ Catalyst; the iterative engine is reserved for genuinely iterative
 algorithms (LR, k-means, NN) where per-partition numpy is the idiom.
 """
 
-from guagua_spark.api import (
-    Combinable,
-    HaltableResult,
-    MasterComputable,
-    MasterContext,
-    MasterInterceptor,
-    WorkerComputable,
-    WorkerContext,
-    WorkerInterceptor,
-)
-from guagua_spark.engine import IterativeEngine
-from guagua_spark.monitor import ComputeTimeout, computable_monitor
-from guagua_spark.session import get_spark
+import importlib
+
 from guagua_spark.shipping import install_zip_check
 
 # executor Python workers import this package when they unpickle a
-# guagua task; from then on their per-task cache invalidation stops
+# guagua task (or, in a local session's worker daemon, before they
+# fork); from then on their per-task cache invalidation stops
 # re-reading pyspark's zip archives (see shipping.install_zip_check)
 install_zip_check()
+
+#: public name -> the submodule that defines it. They load on first use
+#: (PEP 562), so importing the package loads neither pyspark nor
+#: pyarrow: the worker daemon (_daemon.py) imports it before pyspark.
+_LAZY = {
+    **dict.fromkeys(
+        (
+            "Combinable",
+            "HaltableResult",
+            "MasterComputable",
+            "MasterContext",
+            "MasterInterceptor",
+            "WorkerComputable",
+            "WorkerContext",
+            "WorkerInterceptor",
+        ),
+        "api",
+    ),
+    "IterativeEngine": "engine",
+    "ComputeTimeout": "monitor",
+    "computable_monitor": "monitor",
+    "get_spark": "session",
+}
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_LAZY[name]}"), name)
+    globals()[name] = value
+    return value
 
 
 def clear_all_caches() -> None:
@@ -49,8 +70,6 @@ def clear_all_caches() -> None:
     (pair graph, IVF quantizer/cells, LSH buckets, media assets, LR/NN
     features, k-means init, certificate scalars) — the one-call hook
     for data-regeneration paths and cold-path benchmarking."""
-    import importlib
-
     for mod in (
         "operators.dedup",
         "operators.similarity",

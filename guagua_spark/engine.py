@@ -13,11 +13,19 @@ Per-iteration latency model (measured on 4 cores, local[4], pyspark
 with one task, ~0.15 s with 4 and ~0.3 s with 16, while a superstep
 over a socket to tasks that are already running costs well under a
 millisecond. Most of a job's cost is per task, not scheduling. At the
-start of every task PySpark re-reads pyspark's zip archives, ~0.25 s,
-unless shipping.install_zip_check is in place (importing guagua_spark
-installs it); without it the same jobs cost ~0.2, ~0.35 and ~1.0 s.
-And PySpark reuses a Python worker only for tasks that read their
-whole input, so every engine task does (see _drain); a task that stops
+start of every task PySpark re-reads the zip archives on the worker's
+sys.path, ~0.25 s, unless shipping.install_zip_check is in place
+(importing guagua_spark installs it: a local session's workers have it
+from their daemon, others from their first guagua task); without it
+the same jobs cost ~0.2, ~0.35 and ~1.0 s. A session's first Python
+job also starts the worker daemon. Spark puts pyspark.zip first on the
+workers' path, and zipimport caches no bytecode, so PySpark's own
+daemon compiles pyspark from source in every session: that first
+4-task job took 1.6-2.1 s in a warm JVM, against ~0.6 s with
+guagua_spark._daemon, which get_spark selects for local sessions and
+which imports the installed pyspark from its cached bytecode. And
+PySpark reuses a Python worker only for tasks that read their whole
+input, so every engine task does (see _drain); a task that stops
 early makes the next one fork a fresh worker. An iteration off the
 resident path is ONE such job. A resident run's first iteration is its
 one job's launch plus the slowest task's input and ``prepare``. On
@@ -75,10 +83,11 @@ spills the rest to a driver-local temp file (_Partials). Under
 ``min_workers_timeout`` it proceeds once arrived/total ≥ the ratio and
 cancels the rest of a per-iteration job by its tag; a resident task
 that still owes a frame is sent no superstep until its late frame has
-been read and dropped. The one exception is a full-barrier run with
-more than 32 partitions or ``combine_executor_side=True``: its tasks
-return their partials to Spark, which merges them executor-side with
-treeReduce.
+been read and dropped, and run() ends such a job by cancelling it and
+waiting until its tasks have ended (_Job.wait_for_tasks). The one
+exception is a full-barrier run with more than 32 partitions or
+``combine_executor_side=True``: its tasks return their partials to
+Spark, which merges them executor-side with treeReduce.
 
 This single loop replaces the reference's entire coordination layer
 (~4,000 LoC of ZooKeeper/Netty master-worker barriers — SURVEY.md §2.6):
@@ -164,15 +173,13 @@ INLINE_MODEL_BYTES = 256 * 1024
 #: task slots, > 32 partitions, executor-side combine, dynamic
 #: allocation) uses the blob path from this many remaining rounds on,
 #: the Arrow path below it. Measured on 4 cores, local[4], lr_long's
-#: 300k x 20 input cached in 8 partitions: the blob path's first
-#: iteration (its prepare pass and persisted copy) took ~1.47 s against
-#: ~0.63 s for an Arrow iteration, its steady iteration 0.144 s against
-#: 0.49 s, so runs of 1/2/8 rounds took 1.62/1.64/2.58 s on the blob
-#: path and 0.76/1.17/4.02 s on the Arrow path. With iteration 1 as one
-#: job (no result-size probe) the blob path's first iteration read
-#: ~1.1 s, which moves the break-even to ~3 rounds; 8 is kept until
-#: the blob path itself is deleted.
-LOAD_ONCE_MIN_ROUNDS = 8
+#: 300k x 20 input cached in 8 partitions, 4 interleaved runs each: the
+#: blob path's first iteration (its prepare pass and persisted copy)
+#: took ~1.07 s against ~0.47 s for an Arrow iteration, its steady
+#: iteration ~0.16 s against ~0.46 s, so runs of 2/3/5 rounds took
+#: 1.31/1.44/1.69 s on the blob path and 0.95/1.43/2.30 s on the Arrow
+#: path: they meet at 3 rounds.
+LOAD_ONCE_MIN_ROUNDS = 3
 
 #: partials a run may hold in driver memory, in raw pickled bytes, per
 #: iteration; the gather spills the rest to a temp file (_Partials)
@@ -381,6 +388,8 @@ _TOKEN_BYTES = 32
 _POLL_S = 0.1
 #: how long a new connection may take to send its token and hello
 _HELLO_TIMEOUT_S = 10.0
+#: how long closing a cancelled resident job waits for its tasks to end
+_TASK_END_TIMEOUT_S = 30.0
 
 
 def _up_frame(iteration: int, result: Any) -> bytes:
@@ -601,6 +610,28 @@ class _Job:
         while self.thread.is_alive():
             self.sc.cancelJobsWithTag(self.tag)
             self.thread.join(_POLL_S * 10)
+
+    def wait_for_tasks(self, timeout_s: float) -> None:
+        """Wait, at most ``timeout_s``, until no task of the cancelled
+        job runs. A job ends at its cancel, its tasks later: one busy in
+        Python ends when Spark kills its worker, 2-4 s on. Until then
+        Spark may also kill a worker that the task released earlier (the
+        worker of a Python stage feeding its rows), which by then can
+        serve another task and fail it."""
+        status = self.sc.statusTracker()
+        jobs = self.sc._jsc.sc().statusTracker().getJobIdsForTag(self.tag)
+        stages = [
+            stage
+            for job in (status.getJobInfo(j) for j in jobs)
+            if job is not None
+            for stage in job.stageIds
+        ]
+        deadline = time.monotonic() + timeout_s
+        while time.monotonic() < deadline and any(
+            info is not None and info.numActiveTasks > 0
+            for info in map(status.getStageInfo, stages)
+        ):
+            time.sleep(_POLL_S)
 
     def finish(self) -> None:
         """Wait for the job; raise its error unless it was cancelled."""
@@ -861,6 +892,7 @@ class _Resident:
             return
         if told != self.listener.tasks:  # None: no task ever said hello
             self.job.cancel()
+            self.job.wait_for_tasks(_TASK_END_TIMEOUT_S)
         self.job.thread.join()
 
 

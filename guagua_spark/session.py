@@ -48,6 +48,13 @@ _OPENBLAS_KERNELS = (
 )
 
 
+_DAEMON_KEY = "spark.python.daemon.module"
+
+
+def _is_local(master: str | None) -> bool:
+    return bool(master and re.fullmatch(r"local(\[.*\])?", master))
+
+
 def _cpu_features() -> Mapping[str, bool]:
     """numpy's runtime CPU detection (``numpy.core`` before numpy 2)."""
     try:
@@ -77,12 +84,42 @@ def _openblas_coretype(
     CPUs, so a cluster sets the key at deploy time."""
     if _CORETYPE_KEY in conf or "OPENBLAS_CORETYPE" in environ:
         return None
-    if master is None or not re.fullmatch(r"local(\[.*\])?", master):
+    if not _is_local(master):
         return None
     for features, kernel in _OPENBLAS_KERNELS:
         if all(cpu.get(f) for f in features):
             return kernel
     return None
+
+
+def _daemon_module(
+    master: str | None,
+    conf: Mapping[str, str],
+    jvm_pythonpath: str | None,
+    pkg_parent: str,
+) -> str | None:
+    """The Python worker daemon a local session should start, or None for
+    PySpark's own (``pyspark.daemon``).
+
+    ``guagua_spark._daemon`` imports pyspark and py4j from their
+    installed packages, whose bytecode is cached, instead of compiling
+    them from Spark's zips in every new daemon (~1 s of each session's
+    first Python job). Its workers must import ``guagua_spark`` when
+    the daemon starts, before any task has shipped it: so the package's
+    parent directory ``pkg_parent`` must be on the PYTHONPATH of the
+    JVM that launches them (``jvm_pythonpath``) or in ``conf``'s
+    ``spark.executorEnv.PYTHONPATH``. A key set when the JVM is launched
+    stays a JVM system property, so every later session in that JVM
+    inherits it; get_spark exports ``pkg_parent`` before it launches
+    one, so the JVM's PYTHONPATH keeps that key valid. Nothing is chosen
+    when the user already chose (the key in ``conf``) or ``master`` is
+    not local: a cluster sets the key at deploy time, where its
+    executors have the package installed."""
+    if _DAEMON_KEY in conf or not _is_local(master):
+        return None
+    env = conf.get("spark.executorEnv.PYTHONPATH", "")
+    paths = f"{jvm_pythonpath or ''}:{env}"
+    return "guagua_spark._daemon" if pkg_parent in paths.split(":") else None
 
 
 def get_spark(
@@ -111,7 +148,9 @@ def get_spark(
 
     A local master also gets ``spark.executorEnv.OPENBLAS_CORETYPE``
     for its Python workers, derived from numpy's CPU detection
-    (``_openblas_coretype``), unless the user already set it.
+    (``_openblas_coretype``), and ``spark.python.daemon.module`` when
+    its workers can import this package (``_daemon_module``), unless the
+    user already set them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Driver heap must be fixed BEFORE the gateway JVM forks —
@@ -161,12 +200,20 @@ def get_spark(
     # In the session conf, not set later through sc.environment: every
     # Python job then shares one worker pool, whose daemon loads numpy
     # (and so OpenBLAS) before it forks the workers.
-    kernel = _openblas_coretype(
-        conf.get("spark.master", master or os.environ.get("SPARK_MASTER")),
-        conf, os.environ, _cpu_features(),
-    )
+    master = conf.get("spark.master", master or os.environ.get("SPARK_MASTER"))
+    kernel = _openblas_coretype(master, conf, os.environ, _cpu_features())
     if kernel is not None:
         conf[_CORETYPE_KEY] = kernel
+    # a running JVM keeps the environment it was launched with
+    jvm = SparkContext._jvm
+    daemon = _daemon_module(
+        master, conf,
+        os.environ.get("PYTHONPATH") if jvm is None
+        else jvm.System.getenv("PYTHONPATH"),
+        pkg_parent,
+    )
+    if daemon is not None:
+        conf[_DAEMON_KEY] = daemon
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

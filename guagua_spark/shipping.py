@@ -9,22 +9,28 @@ application that built its own session first would get
 ModuleNotFoundError on the first task. ``sc.addPyFile`` works at any
 point: the zip is shipped to every current and future executor and
 prepended to the worker's sys.path. On a real cluster this is also
-exactly how you deploy this package (--py-files equivalent).
+exactly how you deploy this package (--py-files equivalent). A worker
+that already imported the package keeps that copy: in a session whose
+worker daemon is ``guagua_spark._daemon`` (local sessions from
+``get_spark``), the daemon imports it from its directory, with cached
+bytecode, before it forks any worker, and the shipped zip goes unread.
 
 A Python worker imports pyspark itself from zip archives on its
-``sys.path`` (``pyspark.zip``, ``py4j-*.zip``, the Spark core jar), and
-PySpark calls ``importlib.invalidate_caches()`` at the start of every
-task. Before Python 3.13, each ``zipimporter`` then re-parses its
-archive's whole central directory in pure Python; a worker holds about
-a dozen such importers, which cost ~0.25 s per task on 4 cores.
+``sys.path`` (``pyspark.zip``, ``py4j-*.zip``, the Spark core jar)
+unless that daemon put them last, and PySpark calls
+``importlib.invalidate_caches()`` at the start of every task. Before
+Python 3.13, each ``zipimporter`` then re-parses its archive's whole
+central directory in pure Python; a worker holds about a dozen such
+importers, which cost ~0.25 s per task on 4 cores.
 ``install_zip_check`` makes that call re-read an archive only when the
 file on disk changed. Importing ``guagua_spark`` installs it, so every
-worker that unpickles a guagua task pays the re-read once per process
-instead of once per task.
+worker that unpickles a guagua task, and every worker a guagua daemon
+forks, pays the re-read once per process instead of once per task.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import tempfile
@@ -79,23 +85,40 @@ def install_zip_check() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _package_zip() -> str:
+    """This package's ``.py`` files as a zip in the temp directory, named
+    by a digest of their paths and bytes: every process serving the same
+    source shares one file instead of writing one per process. It is
+    never removed, because Spark's file server reads it by path for as
+    long as a SparkContext that added it runs."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    parent = os.path.dirname(pkg_dir)
+    sources = sorted(
+        os.path.relpath(os.path.join(root, name), parent)
+        for root, _, files in os.walk(pkg_dir)
+        for name in files
+        if name.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel in sources:
+        with open(os.path.join(parent, rel), "rb") as f:
+            data = f.read()
+        digest.update(f"{rel}\0{len(data)}\0".encode() + data)
+    zpath = os.path.join(
+        tempfile.gettempdir(), f"guagua_spark_pkg_{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zpath):
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+            for rel in sources:
+                z.write(os.path.join(parent, rel), rel)
+        os.replace(tmp, zpath)
+    return zpath
+
+
 def ensure_shipped(sc) -> None:
     """Idempotently ship the guagua_spark package to executors."""
     if getattr(sc, _SHIPPED_ATTR, False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    parent = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"guagua_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-            for root, _, files in os.walk(pkg_dir):
-                for name in files:
-                    if name.endswith(".py"):
-                        full = os.path.join(root, name)
-                        z.write(full, os.path.relpath(full, parent))
-        os.replace(tmp, zpath)
-    sc.addPyFile(zpath)
+    sc.addPyFile(_package_zip())
     setattr(sc, _SHIPPED_ATTR, True)

@@ -379,19 +379,19 @@ def test_worker_dying_on_every_attempt_ends_run(spark, caplog):
 
 
 def test_checkpoint_resume_into_resident_run(spark, caplog, tmp_path):
-    """A run stopped by a master error at iteration 6 resumes from its
-    iteration-5 checkpoint with 5 rounds left, fewer than
-    LOAD_ONCE_MIN_ROUNDS, on the resident path, and ends with the model
-    of an uninterrupted run, bit for bit."""
+    """A run stopped by a master error resumes from the checkpoint before
+    it with LOAD_ONCE_MIN_ROUNDS - 1 rounds left on the resident path,
+    and ends with the model of an uninterrupted run, bit for bit."""
     rounds = LOAD_ONCE_MIN_ROUNDS + 2
+    left = LOAD_ONCE_MIN_ROUNDS - 1
     ckpt = str(tmp_path / "ckpt")
 
-    class _FailAt6(_FailAt):
-        at = 6
+    class _FailLate(_FailAt):
+        at = rounds - left + 1
 
-    with pytest.raises(RuntimeError, match="iteration 6"):
+    with pytest.raises(RuntimeError, match=f"iteration {_FailLate.at}"):
         IterativeEngine(spark, checkpoint_dir=ckpt, checkpoint_interval=1).run(
-            _FailAt6(dim=2, learning_rate=0.5),
+            _FailLate(dim=2, learning_rate=0.5),
             LogisticGradientWorker(("f1", "f2"), "label"),
             _train_df(spark),
             total_iteration=rounds,
@@ -404,7 +404,9 @@ def test_checkpoint_resume_into_resident_run(spark, caplog, tmp_path):
             _train_df(spark),
             total_iteration=rounds,
         )
-    assert "resuming from checkpoint at iteration 6" in caplog.messages
-    assert any(m.startswith("resident path: 5 rounds") for m in caplog.messages)
-    assert len(engine.iteration_seconds) == 5
+    assert f"resuming from checkpoint at iteration {_FailLate.at}" in caplog.messages
+    assert any(
+        m.startswith(f"resident path: {left} rounds") for m in caplog.messages
+    )
+    assert len(engine.iteration_seconds) == left
     np.testing.assert_array_equal(resumed.weights, _run(spark, rounds).weights)

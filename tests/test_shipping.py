@@ -3,8 +3,12 @@ its own SparkSession before importing us (no PYTHONPATH export)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+import zipfile
+
+from guagua_spark.shipping import _package_zip
 
 SCRIPT = r"""
 import os, sys
@@ -40,8 +44,29 @@ def test_queries_survive_hostile_session():
         cwd="/tmp",  # not the repo — workers can't rely on cwd either
         env={
             k: v
-            for k, v in __import__("os").environ.items()
+            for k, v in os.environ.items()
             if k != "PYTHONPATH"
         },
     )
     assert "SHIP_OK" in r.stdout, (r.stdout[-1000:], r.stderr[-3000:])
+
+
+def test_processes_share_one_package_zip():
+    """The shipped zip is named by the package's source, not by the
+    process: a second process finds the first one's file instead of
+    leaving another in the temp directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mine = _package_zip()
+    r = subprocess.run(
+        [sys.executable, "-c",
+         "from guagua_spark.shipping import _package_zip; print(_package_zip())"],
+        capture_output=True, text=True, timeout=120, cwd=repo,
+    )
+    assert r.stdout.strip() == mine, r.stderr[-2000:]
+    sources = {
+        os.path.relpath(os.path.join(root, name), repo)
+        for root, _, files in os.walk(os.path.join(repo, "guagua_spark"))
+        for name in files
+        if name.endswith(".py")
+    }
+    assert set(zipfile.ZipFile(mine).namelist()) == sources
