@@ -67,31 +67,34 @@ def _features_matrix(
     batches: Iterator[pa.RecordBatch],
     feature_cols: Sequence[str],
     label_col: str,
+    bias: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate Arrow batches into X (with bias column) and y.
+    """The batches' features as one float64 matrix X, with a leading
+    bias column of ones when ``bias``, and the label as float64 y.
 
-    Direct column→numpy (no pandas hop): measured ~0.1 s/iteration off
-    the lr_train loop at sf0.1 — per-round latency is the engine's
-    whole cost model, so the hot path avoids DataFrame construction."""
-    xs: list[np.ndarray] = []
-    ys: list[np.ndarray] = []
+    X is allocated once from the batch lengths and filled column by
+    column, so the partition is copied once: stacking each batch, then
+    concatenating the batches and then the bias column made three copies
+    (28 ms against 10 ms for lr_long's 75k x 21 partition). Each column
+    is cast straight to float64, which gives the same bits as casting
+    the batch's stacked (promoted) columns: Spark's boolean, integer and
+    float columns all promote exactly. Direct column→numpy, no pandas
+    hop: per-round latency is the engine's whole cost model."""
+    batches = list(batches)
+    rows = sum(b.num_rows for b in batches)
+    lead = 1 if bias else 0
+    x = np.empty((rows, lead + len(feature_cols)))
+    y = np.empty(rows)
+    if bias:
+        x[:, 0] = 1.0
+    lo = 0
     for batch in batches:
-        cols = [
-            batch.column(c).to_numpy(zero_copy_only=False)
-            for c in feature_cols
-        ]
-        xs.append(np.column_stack(cols).astype(np.float64, copy=False))
-        ys.append(
-            batch.column(label_col)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64, copy=False)
-        )
-    if not xs:
-        return np.zeros((0, len(feature_cols) + 1)), np.zeros(0)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    bias = np.ones((x.shape[0], 1))
-    return np.concatenate([bias, x], axis=1), y
+        hi = lo + batch.num_rows
+        for j, c in enumerate(feature_cols, start=lead):
+            x[lo:hi, j] = batch.column(c).to_numpy(zero_copy_only=False)
+        y[lo:hi] = batch.column(label_col).to_numpy(zero_copy_only=False)
+        lo = hi
+    return x, y
 
 
 def sigmoid(z: np.ndarray) -> np.ndarray:

@@ -34,7 +34,7 @@ from guagua_spark.api import (
     WorkerComputable,
     WorkerContext,
 )
-from guagua_spark.algorithms.gradient import sigmoid
+from guagua_spark.algorithms.gradient import _features_matrix, sigmoid
 
 
 # -- network ----------------------------------------------------------------
@@ -179,25 +179,12 @@ class NNWorker(WorkerComputable):
         self, batches: Iterator[pa.RecordBatch]
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
         """Load-once fast path: (X_train, y_train, X_test, y_test),
-        converted and split once per partition (direct column→numpy, no
-        pandas hop — see gradient.py _features_matrix for the
-        per-iteration latency rationale)."""
-        xs, ys = [], []
-        for batch in batches:
-            cols = [
-                batch.column(c).to_numpy(zero_copy_only=False)
-                for c in self.feature_cols
-            ]
-            xs.append(np.column_stack(cols).astype(np.float64, copy=False))
-            ys.append(
-                batch.column(self.label_col)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-            )
-        if xs:
-            x, y = np.concatenate(xs), np.concatenate(ys).reshape(-1, 1)
-        else:
-            x, y = np.zeros((0, len(self.feature_cols))), np.zeros((0, 1))
+        converted once per partition with one copy (gradient.py
+        _features_matrix) and split once."""
+        x, y = _features_matrix(
+            batches, self.feature_cols, self.label_col, bias=False
+        )
+        y = y.reshape(-1, 1)
         if self.validation_rate <= 0:
             return x, y, x[:0], y[:0]
         # deterministic split: row-index hash, stable across iterations

@@ -162,7 +162,12 @@ class WorkerComputable(abc.ABC):
     blob path it is persisted once (pickled, block manager,
     MEMORY_AND_DISK) and crosses the JVM→Python boundary as one opaque
     blob per round. ``compute_prepared`` must not modify it: the
-    resident path hands the same object to every iteration.
+    resident path hands the same object to every iteration. ``prepare``
+    is on the first iteration's critical path, once per partition, so
+    it should copy the partition once: the built-in workers allocate
+    their matrix from the batch lengths and fill it column by column
+    (algorithms/gradient.py ``_features_matrix``) instead of stacking
+    every batch and then concatenating the stacks.
     """
 
     def init(self, context: WorkerContext) -> None:  # noqa: B027

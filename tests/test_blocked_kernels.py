@@ -2,17 +2,20 @@
 matrix run over fixed row blocks, so a worker's memory is bounded by the
 block size, not by rows × hidden (or rows × k). These tests check the
 blocked kernels against single-pass formulas written here, the mask-free
-sigmoid against the split form it replaced, and the memory ceiling on
-the shape that used to kill full-batch workers (pure numpy, no Spark)."""
+sigmoid against the split form it replaced, the memory ceiling on the
+shape that used to kill full-batch workers, and the one-copy Arrow →
+numpy conversion of ``prepare`` against the stacking form it replaced
+(pure numpy, no Spark)."""
 
 from __future__ import annotations
 
 import tracemalloc
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from guagua_spark.algorithms.gradient import sigmoid
+from guagua_spark.algorithms.gradient import _features_matrix, sigmoid
 from guagua_spark.algorithms.kmeans import (
     KMeansModel,
     KMeansWorker,
@@ -188,3 +191,135 @@ def test_kmeans_blocked_assignment_matches_single_pass():
         got.counts, np.bincount(want_tags, minlength=k).astype(np.float64)
     )
     assert _nearest_centroid(x[:0], centroids).shape == (0,)
+
+
+# -- prepare's Arrow → numpy conversion -------------------------------------
+
+
+def _stacked_features(batches, cols, label, bias):
+    """The three-copy form _features_matrix replaced: stack each batch's
+    columns, concatenate the stacks, then prepend the bias column."""
+    xs, ys = [], []
+    for batch in batches:
+        stacked = np.column_stack(
+            [batch.column(c).to_numpy(zero_copy_only=False) for c in cols]
+        )
+        xs.append(stacked.astype(np.float64, copy=False))
+        ys.append(
+            batch.column(label)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.float64, copy=False)
+        )
+    if not xs:
+        x, y = np.zeros((0, len(cols))), np.zeros(0)
+    else:
+        x, y = np.concatenate(xs), np.concatenate(ys)
+    if bias:
+        x = np.concatenate([np.ones((x.shape[0], 1)), x], axis=1)
+    return x, y
+
+
+def _stacked_nn_prepare(batches, cols, label, rate):
+    """NNWorker.prepare before it used _features_matrix."""
+    x, y = _stacked_features(batches, cols, label, bias=False)
+    y = y.reshape(-1, 1)
+    if rate <= 0:
+        return x, y, x[:0], y[:0]
+    is_test = (np.arange(x.shape[0]) * 2654435761 % 1000) < rate * 1000
+    return x[~is_test], y[~is_test], x[is_test], y[is_test]
+
+
+def _typed_batches(rows: int, cuts) -> list[pa.RecordBatch]:
+    """int64, int32, bool, float32 and float64 columns and an int64
+    label, cut into batches at ``cuts`` (an empty batch included)."""
+    r = np.random.default_rng(rows)
+    table = pa.table({
+        "i64": r.integers(-2**40, 2**40, rows),
+        "i32": r.integers(-2**31, 2**31, rows, dtype=np.int32),
+        "flag": r.random(rows) > 0.5,
+        "f32": r.standard_normal(rows).astype(np.float32),
+        "f64": r.standard_normal(rows),
+        "label": r.integers(0, 2, rows),
+    })
+    edges = [0, *cuts, rows]
+    return [
+        table.slice(lo, hi - lo).combine_chunks().to_batches()[0]
+        if hi > lo else pa.RecordBatch.from_pylist([], schema=table.schema)
+        for lo, hi in zip(edges[:-1], edges[1:])
+    ]
+
+
+def _assert_bits_equal(got, want):
+    assert got.dtype == want.dtype == np.float64
+    assert got.shape == want.shape
+    assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
+#: column sets: one of each type; float32 with bool, which the stacking
+#: form promoted to float32 before its float64 cast; float64 alone
+COLUMN_SETS = [
+    ("i64", "i32", "flag", "f32", "f64"),
+    ("f32", "flag"),
+    ("f64",),
+]
+BATCHINGS = {
+    "no batches": (0, None),
+    "one batch": (700, ()),
+    "many batches": (2_500, (400, 400, 1_000, 1_999)),
+}
+
+
+@pytest.mark.parametrize("cols", COLUMN_SETS, ids=lambda c: "+".join(c))
+@pytest.mark.parametrize("batching", sorted(BATCHINGS))
+@pytest.mark.parametrize("bias", [True, False])
+def test_features_matrix_equals_stacking_bit_for_bit(cols, batching, bias):
+    rows, cuts = BATCHINGS[batching]
+    batches = [] if cuts is None else _typed_batches(rows, cuts)
+    x, y = _features_matrix(iter(batches), cols, "label", bias=bias)
+    want_x, want_y = _stacked_features(batches, cols, "label", bias)
+    _assert_bits_equal(x, want_x)
+    _assert_bits_equal(y, want_y)
+
+
+@pytest.mark.parametrize("rate", [0.0, 0.2])
+@pytest.mark.parametrize("batching", sorted(BATCHINGS))
+def test_nn_prepare_equals_stacking_bit_for_bit(batching, rate):
+    rows, cuts = BATCHINGS[batching]
+    batches = [] if cuts is None else _typed_batches(rows, cuts)
+    cols = COLUMN_SETS[0]
+    got = NNWorker(cols, "label", rate).prepare(iter(batches))
+    want = _stacked_nn_prepare(batches, cols, "label", rate)
+    for g, w in zip(got, want, strict=True):
+        _assert_bits_equal(g, w)
+
+
+#: traced bytes a conversion may use beyond its output and one batch:
+#: the batch list and numpy's casting buffers
+CONVERSION_SLACK = 256 * 1024
+
+
+@pytest.mark.parametrize("convert", ["features matrix", "nn prepare"])
+def test_prepare_copies_the_partition_once(convert):
+    """The stacking form peaked at three copies of the partition (the
+    stacks, their concatenation and the bias concatenation)."""
+    rows, dim, batch_rows = 100_000, 20, 10_000
+    r = np.random.default_rng(3)
+    cols = [f"f{i}" for i in range(dim)]
+    arrays = [pa.array(r.standard_normal(rows)) for _ in range(dim + 1)]
+    table = pa.table(arrays, names=[*cols, "label"])
+    batches = table.to_batches(max_chunksize=batch_rows)
+    assert len(batches) == rows // batch_rows
+    tracemalloc.start()
+    try:
+        if convert == "features matrix":
+            out = _features_matrix(iter(batches), cols, "label")
+        else:
+            out = NNWorker(cols, "label").prepare(iter(batches))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    output = out[0].nbytes + out[1].nbytes  # X and y
+    one_batch = batch_rows * (dim + 1) * 8
+    assert peak <= output + one_batch + CONVERSION_SLACK, (
+        f"peak {peak / 2**20:.1f} MB, output {output / 2**20:.1f} MB"
+    )

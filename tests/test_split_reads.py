@@ -17,14 +17,21 @@ import pyarrow as pa
 import pyarrow.csv as pacsv
 import pyarrow.parquet as pq
 import pytest
+from py4j import protocol
 from pyspark import TaskContext
 from pyspark.sql import functions as F
+
+import guagua_spark.engine as engine
 
 from guagua_spark.algorithms.gradient import (
     GradientDescentMaster,
     LogisticGradientWorker,
 )
-from guagua_spark.api import MasterComputable, WorkerComputable
+from guagua_spark.api import (
+    MasterComputable,
+    MasterInterceptor,
+    WorkerComputable,
+)
 from guagua_spark.engine import LOAD_ONCE_MIN_ROUNDS, IterativeEngine
 from guagua_spark.sources.splits import plan_splits
 from test_load_once import _KillOnce
@@ -272,9 +279,25 @@ def _lost_at(caplog, iteration: int) -> list[str]:
     ]
 
 
-def test_changed_file_falls_back_to_cached_rows(spark, caplog, tmp_path):
-    """A file replaced after persist(): its task refuses to read it, the
-    resident job is lost before the first superstep, and the run
+def _count_plans(monkeypatch) -> list:
+    """The DataFrames ``run()`` plans splits for from now on."""
+    planned = []
+    plan = engine.plan_splits
+
+    def counted(df):
+        planned.append(df)
+        return plan(df)
+
+    monkeypatch.setattr(engine, "plan_splits", counted)
+    return planned
+
+
+def test_changed_file_falls_back_to_cached_rows(
+    spark, caplog, tmp_path, monkeypatch
+):
+    """A file replaced after persist() and after a first run planned the
+    splits: the second run reuses that plan, its task refuses the file,
+    the resident job is lost before the first superstep, and the run
     finishes on the blob path over the cached rows."""
     d = tmp_path / "in"
     os.makedirs(d)
@@ -285,14 +308,23 @@ def test_changed_file_falls_back_to_cached_rows(spark, caplog, tmp_path):
     df = spark.read.parquet(str(d)).persist()
     df.count()
     try:
+        want = _replay(df)
+        planned = _count_plans(monkeypatch)
+        with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+            first = _train(spark, df)
+        assert any(SPLITS in m for m in caplog.messages), caplog.messages
+        np.testing.assert_allclose(first, want, rtol=1e-9)
         target = str(d / "part-00001.parquet")
         pq.write_table(_lr_table(500, 99), target + ".new")
         os.replace(target + ".new", target)
+        caplog.clear()
         with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
             broken = _train(spark, df)
+        assert planned == [df]
         assert any(SPLITS in m for m in caplog.messages), caplog.messages
         # the task's own error, not the driver's py4j call
         assert _lost_at(caplog, 1) == ["SplitChangedError"], caplog.messages
+        np.testing.assert_allclose(broken, want, rtol=1e-9)
         # the same cached rows, through the JVM
         rows = df.withColumn("label", F.col("label") * 1.0)
         caplog.clear()
@@ -300,8 +332,63 @@ def test_changed_file_falls_back_to_cached_rows(spark, caplog, tmp_path):
             clean = _train(spark, rows)
         assert not any(SPLITS in m for m in caplog.messages)
         np.testing.assert_array_equal(broken, clean)
+        np.testing.assert_array_equal(broken, first)
     finally:
         df.unpersist()
+
+
+#: py4j's finalizer thread sends these whenever Python frees a proxy
+_PROXY_FREED = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+
+class _Sent(MasterInterceptor):
+    """py4j commands sent, from any thread, between the start of
+    iteration 2 and the end of the last iteration."""
+
+    def __init__(self, commands: list) -> None:
+        self.commands = commands
+        self.at: dict[tuple[str, int], int] = {}
+
+    def pre_iteration(self, context) -> None:
+        self.at["pre", context.current_iteration] = len(self.commands)
+
+    def post_iteration(self, context) -> None:
+        self.at["post", context.current_iteration] = len(self.commands)
+
+    def supersteps_after_first(self) -> list[str]:
+        last = max(i for _, i in self.at)
+        return self.commands[self.at["pre", 2]:self.at["post", last]]
+
+
+def test_resident_supersteps_make_no_driver_round_trip(
+    spark, caplog, lr_dir, monkeypatch
+):
+    """A resident superstep is socket frames only: no py4j call from the
+    driver while supersteps 2..N run, and a second run on the same
+    DataFrame reuses its split plan."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    commands = []
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith(_PROXY_FREED):
+            commands.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    planned = _count_plans(monkeypatch)
+    df = spark.read.parquet(lr_dir)
+    runs = []
+    for _ in range(2):
+        sent = _Sent(commands)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+            runs.append(_train(spark, df, rounds=5, interceptors=[sent]))
+        assert any(SPLITS in m for m in caplog.messages), caplog.messages
+        assert sent.supersteps_after_first() == []
+    assert planned == [df]
+    np.testing.assert_array_equal(runs[0], runs[1])
+    np.testing.assert_allclose(runs[1], _replay(df, rounds=5), rtol=1e-9)
 
 
 def test_lost_worker_on_split_path_recovers(spark, caplog, lr_dir, tmp_path):
