@@ -37,16 +37,18 @@ first iteration is ~0.30 s over the rows and ~0.12 s over parquet
 splits. Of a warm lr_long train (~0.25 s over splits), ~0.10 s is
 Spark's own floor for the one job: submit, launch and end, the part of
 a run the engine does not control. The engine's own fixed cost per run
-is kept off that path: the split plan (~80 py4j calls, ~14 ms) is made
-once per DataFrame (_split_plan), a resident superstep makes no py4j
-call (the job description is set only on iterations that launch a job),
-the job ends with a JVM-side action instead of collect() serving its
-empty result through a new socket (~10 ms), and ``prepare`` copies the
-partition once (gradient._features_matrix: ~10 ms a partition, not 28).
-A repeat run on one DataFrame then makes ~16 py4j calls on the
-calling thread, not ~118. After the first iteration, a resident
-superstep is the slowest worker's compute: numpy, at the speed of the
-BLAS kernel the worker's OpenBLAS loaded. get_spark picks that kernel for local sessions
+is the split plan (~80 py4j calls, ~14 ms) and the job's build. The
+plan is made on every run: a Spark write to a cached DataFrame's path
+refreshes its file listing in place, so a plan kept from an earlier run
+could miss the new files. The rest is kept off that path: a resident
+superstep makes no py4j call (the job description is
+set only on iterations that launch a job), the job ends with a
+JVM-side action instead of collect() serving its empty result through
+a new socket (~10 ms), and ``prepare`` copies the partition once
+(gradient._features_matrix: ~10 ms a partition, not 28). After the
+first iteration, a resident superstep is the slowest worker's compute:
+numpy, at the speed of the BLAS kernel the worker's OpenBLAS loaded.
+get_spark picks that kernel for local sessions
 (session._openblas_coretype says why); a cluster sets
 ``spark.executorEnv.OPENBLAS_CORETYPE`` at deploy time. One nn_backprop
 worker (25k rows, [20,64,32,1], one thread) takes ~95 ms a superstep on
@@ -145,7 +147,6 @@ import struct
 import tempfile
 import time
 import uuid
-import weakref
 from collections.abc import Sequence
 from typing import Any, Callable, Iterator, NamedTuple
 
@@ -195,23 +196,6 @@ LOAD_ONCE_MIN_ROUNDS = 3
 #: partials a run may hold in driver memory, in raw pickled bytes, per
 #: iteration; the gather spills the rest to a temp file (_Partials)
 DEFAULT_RESULT_BYTES_BUDGET = 256 * 1024 * 1024
-
-#: per DataFrame, its split plan or why it has none (see _split_plan)
-_SPLIT_PLANS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def _split_plan(df: DataFrame) -> SplitPlan | str:
-    """``plan_splits(df)``, planned once per DataFrame object (~80 py4j
-    calls, ~14 ms a run otherwise). Spark's file index fixed the files'
-    sizes and mtimes when it listed them for ``df``, so the plan holds
-    as long as ``df`` does, and a task still refuses a file that changed
-    since (SplitChangedError). A session conf changed between two runs
-    on one DataFrame (say ``spark.sql.files.maxPartitionBytes``) does not
-    re-plan it; a new DataFrame over the same files does."""
-    plan = _SPLIT_PLANS.get(df)
-    if plan is None:
-        plan = _SPLIT_PLANS[df] = plan_splits(df)
-    return plan
 
 
 class _ModelRef:
@@ -1078,7 +1062,7 @@ class IterativeEngine:
         else:
             # a split plan fixes the stage width before submit; Spark's
             # own count can differ from the realized stage under AQE
-            splits = _split_plan(df)
+            splits = plan_splits(df)
             if isinstance(splits, str):
                 source, splits = f"Spark rows ({splits})", None
                 num_partitions = df.rdd.getNumPartitions()

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import re
-import shlex
 from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
@@ -50,13 +49,6 @@ _OPENBLAS_KERNELS = (
 
 
 _DAEMON_KEY = "spark.python.daemon.module"
-
-_UDS_KEY = "spark.python.unix.domain.socket.enabled"
-_UDS_DIR_KEY = "spark.python.unix.domain.socket.dir"
-#: AF_UNIX's sun_path: 107 bytes and the terminating NUL
-_SUN_PATH_BYTES = 107
-#: what PySpark's daemon appends to the socket directory: /.<uuid4>.sock
-_SOCKET_NAME_BYTES = 43
 
 
 def _is_local(master: str | None) -> bool:
@@ -130,38 +122,6 @@ def _daemon_module(
     return "guagua_spark._daemon" if pkg_parent in paths.split(":") else None
 
 
-def _unix_sockets(
-    master: str | None,
-    conf: Mapping[str, str],
-    jvm_tmpdir: str | None,
-) -> bool:
-    """Whether a local session's JVM should reach its Python workers
-    over Unix domain sockets instead of TCP on loopback.
-
-    Over TCP every Python task waited ~40 ms between reading its command
-    and receiving its first input, which fits Nagle's algorithm and
-    delayed ACKs on the JVM's worker socket; over a Unix socket the gap
-    is gone. On 4 cores a warm trivial 4-task job took ~110 ms against
-    ~150 over TCP, ~100 against ~125 as a barrier job.
-    PySpark's daemon binds ``<dir>/.<uuid4>.sock``, where ``<dir>`` is
-    ``spark.python.unix.domain.socket.dir`` or else the driver JVM's
-    ``java.io.tmpdir``: the running JVM's (``jvm_tmpdir``), else the
-    last one given in ``spark.driver.extraJavaOptions``, else ``/tmp``.
-    The key is chosen only when that path fits AF_UNIX's limit, and not
-    when the user already chose (the key in ``conf``) or ``master`` is
-    not local."""
-    if _UDS_KEY in conf or not _is_local(master):
-        return False
-    sock_dir = conf.get(_UDS_DIR_KEY) or jvm_tmpdir
-    if sock_dir is None:
-        sock_dir = "/tmp"
-        for opt in shlex.split(conf.get("spark.driver.extraJavaOptions", "")):
-            if opt.startswith("-Djava.io.tmpdir="):
-                sock_dir = opt.split("=", 1)[1]
-    size = len(os.fsencode(sock_dir)) + _SOCKET_NAME_BYTES
-    return size <= _SUN_PATH_BYTES
-
-
 def get_spark(
     app_name: str = "guagua_spark",
     master: str | None = None,
@@ -189,9 +149,7 @@ def get_spark(
     A local master also gets ``spark.executorEnv.OPENBLAS_CORETYPE``
     for its Python workers, derived from numpy's CPU detection
     (``_openblas_coretype``), and ``spark.python.daemon.module`` when
-    its workers can import this package (``_daemon_module``) and
-    ``spark.python.unix.domain.socket.enabled=true`` when the daemon's
-    socket path fits AF_UNIX's limit (``_unix_sockets``), unless the
+    its workers can import this package (``_daemon_module``), unless the
     user already set them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -256,9 +214,6 @@ def get_spark(
     )
     if daemon is not None:
         conf[_DAEMON_KEY] = daemon
-    tmpdir = None if jvm is None else jvm.System.getProperty("java.io.tmpdir")
-    if _unix_sockets(master, conf, tmpdir):
-        conf[_UDS_KEY] = "true"
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

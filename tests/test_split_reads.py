@@ -21,8 +21,6 @@ from py4j import protocol
 from pyspark import TaskContext
 from pyspark.sql import functions as F
 
-import guagua_spark.engine as engine
-
 from guagua_spark.algorithms.gradient import (
     GradientDescentMaster,
     LogisticGradientWorker,
@@ -279,26 +277,11 @@ def _lost_at(caplog, iteration: int) -> list[str]:
     ]
 
 
-def _count_plans(monkeypatch) -> list:
-    """The DataFrames ``run()`` plans splits for from now on."""
-    planned = []
-    plan = engine.plan_splits
-
-    def counted(df):
-        planned.append(df)
-        return plan(df)
-
-    monkeypatch.setattr(engine, "plan_splits", counted)
-    return planned
-
-
-def test_changed_file_falls_back_to_cached_rows(
-    spark, caplog, tmp_path, monkeypatch
-):
-    """A file replaced after persist() and after a first run planned the
-    splits: the second run reuses that plan, its task refuses the file,
-    the resident job is lost before the first superstep, and the run
-    finishes on the blob path over the cached rows."""
+def test_changed_file_falls_back_to_cached_rows(spark, caplog, tmp_path):
+    """A file replaced after persist() and after a first run read the
+    splits: the second run's task refuses the file, the resident job is
+    lost before the first superstep, and the run finishes on the blob
+    path over the cached rows."""
     d = tmp_path / "in"
     os.makedirs(d)
     for i in range(2):
@@ -309,7 +292,6 @@ def test_changed_file_falls_back_to_cached_rows(
     df.count()
     try:
         want = _replay(df)
-        planned = _count_plans(monkeypatch)
         with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
             first = _train(spark, df)
         assert any(SPLITS in m for m in caplog.messages), caplog.messages
@@ -320,7 +302,6 @@ def test_changed_file_falls_back_to_cached_rows(
         caplog.clear()
         with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
             broken = _train(spark, df)
-        assert planned == [df]
         assert any(SPLITS in m for m in caplog.messages), caplog.messages
         # the task's own error, not the driver's py4j call
         assert _lost_at(caplog, 1) == ["SplitChangedError"], caplog.messages
@@ -333,6 +314,38 @@ def test_changed_file_falls_back_to_cached_rows(
         assert not any(SPLITS in m for m in caplog.messages)
         np.testing.assert_array_equal(broken, clean)
         np.testing.assert_array_equal(broken, first)
+    finally:
+        df.unpersist()
+
+
+def test_spark_append_between_runs_is_read(spark, caplog, tmp_path):
+    """A Spark write to a persisted DataFrame's directory between two
+    runs: Spark refreshes the cached relation's file listing in place and
+    rebuilds the cache, so the second run must plan the new files too and
+    train on the rows the cache now holds. (``df.toPandas()`` still
+    serves the old rows from ``df``'s own executed plan, so the replay
+    reads the directory afresh.)"""
+    d = str(tmp_path / "in")
+    spark.createDataFrame(_lr_table(3_000, 20).to_pandas()).write.parquet(d)
+    df = spark.read.parquet(d).persist()
+    df.count()
+    try:
+        with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+            first = _train(spark, df)
+        assert any(SPLITS in m for m in caplog.messages), caplog.messages
+        np.testing.assert_allclose(first, _replay(df), rtol=1e-9)
+        spark.createDataFrame(_lr_table(2_000, 21).to_pandas()).write.mode(
+            "append"
+        ).parquet(d)
+        assert df.count() == 5_000
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+            second = _train(spark, df)
+        assert any(SPLITS in m for m in caplog.messages), caplog.messages
+        assert not _lost_at(caplog, 1), caplog.messages
+        np.testing.assert_allclose(
+            second, _replay(spark.read.parquet(d)), rtol=1e-9
+        )
     finally:
         df.unpersist()
 
@@ -364,8 +377,8 @@ def test_resident_supersteps_make_no_driver_round_trip(
     spark, caplog, lr_dir, monkeypatch
 ):
     """A resident superstep is socket frames only: no py4j call from the
-    driver while supersteps 2..N run, and a second run on the same
-    DataFrame reuses its split plan."""
+    driver while supersteps 2..N run, on a first run and on a repeat run
+    over the same DataFrame."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     commands = []
@@ -376,7 +389,6 @@ def test_resident_supersteps_make_no_driver_round_trip(
         return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counted)
-    planned = _count_plans(monkeypatch)
     df = spark.read.parquet(lr_dir)
     runs = []
     for _ in range(2):
@@ -386,7 +398,6 @@ def test_resident_supersteps_make_no_driver_round_trip(
             runs.append(_train(spark, df, rounds=5, interceptors=[sent]))
         assert any(SPLITS in m for m in caplog.messages), caplog.messages
         assert sent.supersteps_after_first() == []
-    assert planned == [df]
     np.testing.assert_array_equal(runs[0], runs[1])
     np.testing.assert_allclose(runs[1], _replay(df, rounds=5), rtol=1e-9)
 

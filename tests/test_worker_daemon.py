@@ -2,9 +2,7 @@
 import pyspark and py4j from the installed packages (bytecode-cached),
 not from Spark's zips, and hold guagua_spark, with its zip check, from
 before they fork. session._daemon_module selects the daemon only when
-the workers can import the package at daemon start. The JVM reaches
-them over Unix domain sockets when the daemon's socket path fits
-AF_UNIX's limit (session._unix_sockets)."""
+the workers can import the package at daemon start."""
 
 from __future__ import annotations
 
@@ -18,13 +16,7 @@ import zipfile
 import pytest
 
 from guagua_spark._daemon import archives_last
-from guagua_spark.session import (
-    _DAEMON_KEY,
-    _UDS_DIR_KEY,
-    _UDS_KEY,
-    _daemon_module,
-    _unix_sockets,
-)
+from guagua_spark.session import _DAEMON_KEY, _daemon_module
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG_DIR = os.path.join(REPO, "guagua_spark")
@@ -227,51 +219,3 @@ def test_session_in_a_jvm_launched_without_the_package(tmp_path):
     assert all(".zip" in f for f in f1 + f3), rounds
     assert not any(".zip" in f for f in f2), rounds
     assert v1 == v2 == v3 == 15345
-
-
-# -- Unix domain sockets between the JVM and its Python workers -----------
-
-
-def test_workers_talk_to_the_jvm_over_unix_sockets(spark):
-    def probe(_rows):
-        yield os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower()
-
-    # the test session's JVM keeps java.io.tmpdir at /tmp
-    assert spark.sparkContext.getConf().get(_UDS_KEY) == "true"
-    assert _in_a_fresh_pool(spark.sparkContext, probe) == ["true"] * 4
-
-
-#: the longest socket directory that fits: 107 bytes less /.<uuid4>.sock
-FITS = "/" + "d" * 63
-
-
-@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
-def test_local_masters_get_unix_sockets_when_the_path_fits(master):
-    assert _unix_sockets(master, {}, None)  # /tmp
-    assert _unix_sockets(master, {}, FITS)
-    assert not _unix_sockets(master, {}, FITS + "d")
-    assert _unix_sockets(master, {_UDS_DIR_KEY: FITS}, "/tmp")
-    assert not _unix_sockets(master, {_UDS_DIR_KEY: FITS + "d"}, "/tmp")
-
-
-def test_tmpdir_comes_from_the_running_jvm_else_its_java_options():
-    long_opt = {"spark.driver.extraJavaOptions": (
-        f"-Xss4m -Djava.io.tmpdir=/tmp -Djava.io.tmpdir={FITS}d -XX:-UsePerfData"
-    )}
-    assert not _unix_sockets("local", long_opt, None)
-    # a running JVM was launched with its own tmpdir; the options are
-    # for the next launch
-    assert _unix_sockets("local", long_opt, "/tmp")
-    short_opt = {"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir='{FITS}'"}
-    assert _unix_sockets("local", short_opt, None)
-    assert not _unix_sockets("local", short_opt, FITS + "d")
-
-
-@pytest.mark.parametrize(
-    "master",
-    [None, "yarn", "spark://host:7077", "local-cluster[2,1,1024]"],
-)
-def test_cluster_masters_and_users_choice_get_no_unix_sockets(master):
-    assert not _unix_sockets(master, {}, "/tmp")
-    for choice in ("true", "false"):
-        assert not _unix_sockets("local[4]", {_UDS_KEY: choice}, "/tmp")
