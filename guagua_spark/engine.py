@@ -41,10 +41,10 @@ is the split plan (~80 py4j calls, ~14 ms) and the job's build. The
 plan is made on every run: a Spark write to a cached DataFrame's path
 refreshes its file listing in place, so a plan kept from an earlier run
 could miss the new files. The rest is kept off that path: a resident
-superstep makes no py4j call (the job description is
-set only on iterations that launch a job), the job ends with a
-JVM-side action instead of collect() serving its empty result through
-a new socket (~10 ms), and ``prepare`` copies the partition once
+superstep makes no py4j call (the job description is set only on
+iterations that launch a job), the job ends with a JVM-side action
+instead of collect() serving its empty result through a new socket
+(~10 ms), and ``prepare`` copies the partition once
 (gradient._features_matrix: ~10 ms a partition, not 28). After the
 first iteration, a resident superstep is the slowest worker's compute:
 numpy, at the speed of the BLAS kernel the worker's OpenBLAS loaded.
