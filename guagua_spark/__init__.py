@@ -11,10 +11,9 @@ semantics → broadcast → iterate-until-converged), built Spark-first:
 - **executors are the workers** (reference: worker/GuaguaWorkerService.java)
   — per-partition compute over a persisted DataFrame, Arrow-batched;
 - **AllReduce** = per-partition partials sent up the run's socket to
-  the driver's gather, executor-side treeReduce for Combinable results
-  past 32 partitions, then the master's combine (reference:
-  io/Combinable.java, master/NettyMasterCoordinator.java
-  merge-on-arrival);
+  the driver's one gather, then the master's combine over them in
+  partition order (reference: io/Combinable.java,
+  master/NettyMasterCoordinator.java merge-on-arrival);
 - **model broadcast** = ``sc.broadcast`` (reference: AbstractMasterCoordinator
   znode publish/chunking — unnecessary on Spark, TorrentBroadcast handles it).
 

@@ -18,13 +18,14 @@ for the two-pass lazy consumption the partials ride):
   equations, k×k), then emit per-item partials
   ``A_i += Σ_u x_u x_uᵀ, b_i += Σ_u r_ui·x_u, c_i += |ratings of i|``
   — Combinable by plain addition;
-- the master sums partials (engine tree-combine) and solves the item
+- the master sums the partials in partition order and solves the item
   side ``(A_i + λ·c_i·I) y_i = b_i``, halting when max |ΔY| < tol.
 
 Determinism: Y₀ is derived from md5 (engine-portable, same trick as
 the LSH planes — similarity.py _planes), so a serial numpy replay
 reproduces the whole run to float-combine noise (~1e-12; the golden
-test compares at 1e-8, the lr_train treeReduce argument).
+test compares at 1e-8: per-partition partials summed in partition
+order against the replay's own order).
 
 100 TB shape: the corpus-sized relation (ratings) is touched once per
 superstep via the load-once worker cache; per-superstep traffic is the
@@ -268,7 +269,7 @@ def als_serial_replay(
     """Single-process golden: the same md5 init, the same per-user and
     per-item solvers (shared code, not re-derived math), sequential —
     the replayable oracle for the engine run (FIXTURES.md pattern; the
-    engine may differ by tree-combine float order only)."""
+    engine may differ by partial-sum float order only)."""
     y = init_item_factors(n_items, rank)
     model = AlsModel(item_factors=y)
     k = rank

@@ -21,7 +21,7 @@ BSP split (design anchors ``MasterComputable.java`` /
   merges), route every row through the broadcast partial tree to its
   frontier node, and emit a dense gradient histogram
   ``hist[frontier, feature, bin] = (Σ gradient, count)`` —
-  Combinable by plain addition, the engine tree-combines it;
+  Combinable by plain addition, the master sums the partials;
 - the master scans each frontier node's histogram with the exact
   cumulative-sum split search (gain =
   G_L²/(H_L+λ) + G_R²/(H_R+λ) − G²/(H+λ), deterministic first-wins
@@ -31,7 +31,8 @@ BSP split (design anchors ``MasterComputable.java`` /
 Determinism: all ROUTING is integer (bin indices, split bins), so
 the only float divergence between the engine and a serial replay is
 summation order inside the histograms (~1e-12 relative; goldens
-compare at 1e-8 — the lr_train treeReduce argument). The frontier
+compare at 1e-8 — per-partition partials summed in partition order
+against the replay's row order). The frontier
 never exceeds 2^depth nodes, so the per-superstep partial is
 O(2^depth · features · bins) — KBs whatever the corpus.
 
@@ -120,7 +121,7 @@ def best_split(
     no candidate leaves both children non-empty.
 
     The comparison KEY is the gain demoted to float32: histogram sums
-    differ between the engine (tree-combine order) and the serial
+    differ between the engine (per-partition partials) and the serial
     replay (row order) by ~1e-12 relative, so two mathematically-equal
     candidates (common on lattice-like features) would tie-break by
     noise under full precision. A float32 key (~6e-8 ulp) collapses

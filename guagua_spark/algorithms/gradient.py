@@ -13,8 +13,8 @@ Re-expresses the reference workloads (guagua-examples):
 Spark-first design: the per-partition fold is numpy over Arrow batches
 (vectorized — the reference's per-record Java loop becomes one matrix
 multiply per batch), the AllReduce is the master summing the partials
-the engine gathers (a Combinable treeReduce past 32 partitions), and
-the model rides the broadcast. Gradients are dense ``float64[d+1]``;
+the engine gathers, one per partition, and the model rides the
+broadcast. Gradients are dense ``float64[d+1]``;
 at 1000 executors a 10k-feature gradient is 80 KB per partition — far
 below any transport limit.
 """

@@ -42,17 +42,15 @@ import pyarrow as pa
 class Combinable(Protocol):
     """Associative partial-merge of two worker results.
 
-    On a full-barrier run with more than 32 partitions, or with
-    ``combine_executor_side=True``, the engine merges results that
-    implement this executor-side (treeReduce) before they reach the
-    driver, which then sees O(sqrt(P)) of them — the Spark analogue of
-    the reference's merge-on-arrival combiner
+    The engine never merges results itself: every run hands the master
+    each worker's result, in partition order, and the master merges
+    them (e.g. with ``combine_all``), as the reference's master merges
+    the results that reach it over Netty
     (master/NettyMasterCoordinator.java:160-200, threshold
-    guagua.master.result.merge.threshold=10). Every other run hands the
-    master each worker's result and the master merges them (e.g. with
-    ``combine_all``). Must be associative and order-insensitive: how
-    treeReduce groups the results is Spark's choice (SURVEY.md §4 last
-    row).
+    guagua.master.result.merge.threshold=10). Must be associative. The
+    fold order is the partition order on every run, so a merge that is
+    order-sensitive in its last bits (float sums) still gives the same
+    model from run to run.
     """
 
     def combine(self, other: "Combinable") -> "Combinable": ...
@@ -79,9 +77,8 @@ def is_halt(result: Any) -> bool:
 class MasterContext:
     """Driver-side per-iteration context (reference master/MasterContext.java).
 
-    ``worker_results`` holds this iteration's worker results in
-    partition order; on a treeReduce run (see ``Combinable``) it holds
-    the executor-side merge instead. It is a list unless the results
+    ``worker_results`` holds this iteration's worker results, one per
+    arrived worker, in partition order. It is a list unless the results
     exceed the run's ``result_bytes_budget``: then it is a sequence
     that supports iteration (any number of passes), ``len()`` and
     indexing, and unpickles one result per access from a driver-local
@@ -102,10 +99,10 @@ class MasterContext:
     #: worker result this iteration carried halt=True
     #: (reference AbstractMasterCoordinator.java:311-350).
     all_workers_halted: bool = False
-    #: how many workers' results actually arrived this iteration — equals
-    #: num_workers except under the partial barrier (min_workers_ratio),
-    #: where stragglers' results are dropped for the iteration
-    #: (reference BasicCoordinator.java:649-662).
+    #: how many workers' results actually arrived this iteration, so
+    #: len(worker_results) — equals num_workers except under the partial
+    #: barrier (min_workers_ratio), where stragglers' results are dropped
+    #: for the iteration (reference BasicCoordinator.java:649-662).
     arrived_workers: int = 0
 
 

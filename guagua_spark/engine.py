@@ -3,7 +3,7 @@
     prepare/persist input → loop:
         ship(master_result)                     # socket | inline | broadcast
         per-partition fold                      # resident | blob | Arrow
-        partials up the run's socket            # | treeReduce(combine)
+        partials up the run's socket
         master.compute(worker_results)          # model update, driver-side
         halt? → break
     stop the resident tasks / unpersist
@@ -61,21 +61,21 @@ choice, with the reason, once per run at INFO:
   prepares its partition once, keeps it in memory and connects back to
   the run's listener on the driver; every superstep is a socket frame
   down (the master result) and one up (the partial). Taken by a worker
-  that overrides ``prepare``, with no executor-side combine, ≤ 32
-  partitions, no more partitions than the scheduler has task slots,
-  and no dynamic allocation (Spark rejects barrier stages under it).
-  Its input: when ``df`` is a bare parquet scan of whole local files
-  (at most a projection of its columns, cached or not), the job is a
-  barrier RDD over Spark's own file partitions and each task reads its
-  files with pyarrow (sources/splits.py), so the stage width is the
-  split plan's, fixed before submit; otherwise it is a barrier
-  mapInArrow job over ``df``'s rows, and the INFO line names the
-  reason. If the job dies (a task also fails it on a file whose size
-  or mtime changed since planning), the run finishes on the blob path
-  over ``df`` from the failed iteration. The tasks hold their slots
-  until run() returns: a Spark job that a master or master interceptor
-  waits on mid-run gets only the other slots, and none when the
-  partitions fill the cluster, so it would never finish.
+  that overrides ``prepare``, with no more partitions than the
+  scheduler has task slots and no dynamic allocation (Spark rejects
+  barrier stages under it). Its input: when ``df`` is a bare parquet
+  scan of whole local files (at most a projection of its columns,
+  cached or not), the job is a barrier RDD over Spark's own file
+  partitions and each task reads its files with pyarrow
+  (sources/splits.py), so the stage width is the split plan's, fixed
+  before submit; otherwise it is a barrier mapInArrow job over ``df``'s
+  rows, and the INFO line names the reason. If the job dies (a task
+  also fails it on a file whose size or mtime changed since planning),
+  the run finishes on the blob path over ``df`` from the failed
+  iteration. The tasks hold their slots until run() returns: a Spark
+  job that a master or master interceptor waits on mid-run gets only
+  the other slots, and none when the partitions fill the cluster, so
+  it would never finish.
 - blob: the other prepared runs of ≥ LOAD_ONCE_MIN_ROUNDS rounds. Each
   partition's prepared object is persisted as one pickled blob; each
   iteration is one job over them.
@@ -83,23 +83,23 @@ choice, with the reason, once per run at INFO:
   resident path cannot take. Each iteration is one job that re-reads
   the persisted rows as Arrow batches.
 
-The way up is the same on every path: a task sends its pickled partial
-to the run's listener as one _UP frame (iteration, length, halt vote)
-after the run token and a hello, and one gather (_Listener.gather)
-reads the frames in arrival order with ``selectors``. It hands the
-master the partials in partition order, keeps the first complete frame
-per partition (task retries, speculation) and drops a frame of an older
-iteration unpickled. Past ``result_bytes_budget`` of raw frames it
-spills the rest to a driver-local temp file (_Partials). Under
-``min_workers_ratio`` < 1 the gather is the partial barrier: at
-``min_workers_timeout`` it proceeds once arrived/total ≥ the ratio and
-cancels the rest of a per-iteration job by its tag; a resident task
-that still owes a frame is sent no superstep until its late frame has
-been read and dropped, and run() ends such a job by cancelling it and
-waiting until its tasks have ended (_Job.wait_for_tasks). The one
-exception is a full-barrier run with more than 32 partitions or
-``combine_executor_side=True``: its tasks return their partials to
-Spark, which merges them executor-side with treeReduce.
+The way up is the same on every path, with no exception: a task sends
+its pickled partial to the run's listener as one _UP frame (iteration,
+length, halt vote) after the run token and a hello, and one gather
+(_Listener.gather) reads the frames in arrival order with
+``selectors``. It hands the master the partials in partition order,
+keeps the first complete frame per partition (task retries,
+speculation) and drops a frame of an older iteration unpickled. Past
+``result_bytes_budget`` of raw frames it spills the rest to a
+driver-local temp file (_Partials). Under ``min_workers_ratio`` < 1
+the gather is the partial barrier: at ``min_workers_timeout`` it
+proceeds once arrived/total ≥ the ratio and cancels the rest of a
+per-iteration job by its tag; a resident task that still owes a frame
+is sent no superstep until its late frame has been read and dropped,
+and run() ends such a job by cancelling it and waiting until its tasks
+have ended (_Job.wait_for_tasks). No task returns data to Spark, and
+Spark never combines partials: every job ends with a JVM-side action
+(_run_to_end).
 
 This single loop replaces the reference's entire coordination layer
 (~4,000 LoC of ZooKeeper/Netty master-worker barriers — SURVEY.md §2.6):
@@ -118,13 +118,12 @@ Scale notes (100 TB / 1000 executors):
   in memory; the other paths persist MEMORY_AND_DISK, so re-reads hit
   the block manager and partitions that don't fit in memory spill
   instead of recomputing.
-- Worker→master traffic is one frame per partition per iteration, read
-  as it arrives. The driver holds at most ``result_bytes_budget`` of
-  them in memory and spills the rest to disk, where the master reads
-  them one at a time (the reference's BytableMemoryDiskList). With a
-  Combinable result and more than 32 partitions the engine pre-merges
-  executor-side via treeReduce (depth 2) instead, so the driver sees
-  O(sqrt(P)) results, not O(P).
+- Worker→master traffic is O(P) frames per iteration into the one
+  gather, one per partition, read as they arrive, as the reference's
+  Netty master receives them (NettyMasterCoordinator.java:160-200). The
+  driver holds at most ``result_bytes_budget`` of them in memory and
+  spills the rest to disk, where the master reads them one at a time
+  (the reference's BytableMemoryDiskList).
 - Master→worker traffic off the resident path is TorrentBroadcast
   (BitTorrent-style chunks) above INLINE_MODEL_BYTES; the reference's
   1 MB ZK chunking (GuaguaConstants.java:140-142) has no analogue
@@ -151,12 +150,11 @@ from collections.abc import Sequence
 from typing import Any, Callable, Iterator, NamedTuple
 
 import pyarrow as pa
-from pyspark import BarrierTaskContext, InheritableThread, TaskContext
+from pyspark import RDD, BarrierTaskContext, InheritableThread, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 from guagua_spark.api import (
-    Combinable,
     MasterComputable,
     MasterContext,
     MasterInterceptor,
@@ -182,15 +180,14 @@ DEFAULT_TOTAL_ITERATION = 50
 INLINE_MODEL_BYTES = 256 * 1024
 
 #: a prepared run the resident path cannot take (more partitions than
-#: task slots, > 32 partitions, executor-side combine, dynamic
-#: allocation) uses the blob path from this many remaining rounds on,
-#: the Arrow path below it. Measured on 4 cores, local[4], lr_long's
-#: 300k x 20 input cached in 8 partitions, 4 interleaved runs each: the
-#: blob path's first iteration (its prepare pass and persisted copy)
-#: took ~1.07 s against ~0.47 s for an Arrow iteration, its steady
-#: iteration ~0.16 s against ~0.46 s, so runs of 2/3/5 rounds took
-#: 1.31/1.44/1.69 s on the blob path and 0.95/1.43/2.30 s on the Arrow
-#: path: they meet at 3 rounds.
+#: task slots, dynamic allocation) uses the blob path from this many
+#: remaining rounds on, the Arrow path below it. Measured on 4 cores,
+#: local[4], lr_long's 300k x 20 input cached in 8 partitions, 4
+#: interleaved runs each: the blob path's first iteration (its prepare
+#: pass and persisted copy) took ~1.07 s against ~0.47 s for an Arrow
+#: iteration, its steady iteration ~0.16 s against ~0.46 s, so runs of
+#: 2/3/5 rounds took 1.31/1.44/1.69 s on the blob path and
+#: 0.95/1.43/2.30 s on the Arrow path: they meet at 3 rounds.
 LOAD_ONCE_MIN_ROUNDS = 3
 
 #: partials a run may hold in driver memory, in raw pickled bytes, per
@@ -220,24 +217,11 @@ class _ModelRef:
             self.bc.destroy()
 
 
-class _Partial:
-    """Internal wrapper combined executor-side by treeReduce: carries the
-    user result, the AND of worker halt votes, and the partition count."""
-
-    __slots__ = ("result", "all_halt", "n")
-
-    def __init__(self, result: Any, all_halt: bool, n: int = 1) -> None:
-        self.result = result
-        self.all_halt = all_halt
-        self.n = n
-
-
 class _Task(NamedTuple):
     """What one iteration's worker task needs besides its partition data.
     The worker object, props and interceptors are serialized into the
     task closure; the (potentially large) master result rides the
-    _ModelRef. ``up`` is the run listener's (address, token); None on a
-    treeReduce run, whose tasks return their partials to Spark."""
+    _ModelRef. ``up`` is the run listener's (address, token)."""
 
     worker: WorkerComputable
     iteration: int
@@ -245,7 +229,7 @@ class _Task(NamedTuple):
     props: dict[str, Any]
     model: _ModelRef
     interceptors: Sequence[WorkerInterceptor]
-    up: tuple[tuple[str, int], bytes] | None = None
+    up: tuple[tuple[str, int], bytes]
 
 
 def _drain(it: Iterator[Any]) -> None:
@@ -293,15 +277,9 @@ def _run_task(
     return result
 
 
-def _emit(task: _Task, pid: int, result: Any) -> list[bytes]:
-    """End of a per-iteration task: send the partial up the run's socket
-    and return nothing, or, on a treeReduce run, return it pickled with
-    its halt vote for Spark to carry."""
-    if task.up is None:
-        raw = pickle.dumps(
-            (result, is_halt(result)), protocol=pickle.HIGHEST_PROTOCOL
-        )
-        return [raw]
+def _emit(task: _Task, pid: int, result: Any) -> Iterator[Any]:
+    """End of a per-iteration task: send the partial up the run's socket;
+    the task yields nothing to Spark."""
     addr, token = task.up
     with socket.create_connection(addr) as sock:
         sock.sendall(
@@ -310,7 +288,7 @@ def _emit(task: _Task, pid: int, result: Any) -> list[bytes]:
         # the driver closes once it has read the frame, so a finished
         # task's partial is always at the driver
         sock.recv(1)
-    return []
+    return iter(())
 
 
 def _make_worker_fn(
@@ -325,8 +303,7 @@ def _make_worker_fn(
             task, pid, lambda ctx: task.worker.compute(ctx, batches)
         )
         _drain(batches)
-        for raw in _emit(task, pid, result):
-            yield pa.RecordBatch.from_pydict({"result": [raw]})
+        return _emit(task, pid, result)
 
     return fn
 
@@ -364,7 +341,7 @@ def _make_prepared_iter_fn(
             pid,
             lambda ctx: task.worker.compute_prepared(ctx, pickle.loads(blob)),
         )
-        yield from _emit(task, pid, result)
+        return _emit(task, pid, result)
 
     return fn
 
@@ -472,8 +449,7 @@ def _serve_resident(
     total_iteration: int,
     props: dict[str, Any],
     interceptors: Sequence[WorkerInterceptor],
-    addr: tuple[str, int],
-    token: bytes,
+    up: tuple[tuple[str, int], bytes],
 ) -> None:
     """Body of a resident task: prepare the partition once, connect to
     the driver, then run one _run_task per superstep frame until the
@@ -487,6 +463,7 @@ def _serve_resident(
     def compute(ctx: WorkerContext) -> Any:
         return worker.compute_prepared(ctx, data)
 
+    addr, token = up
     with socket.create_connection(addr) as sock:
         sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         sock.sendall(token + _HELLO.pack(pid, tasks))
@@ -497,7 +474,7 @@ def _serve_resident(
             model = _ModelRef(payload=_recv_exact(sock, size))
             task = _Task(
                 worker, iteration, total_iteration, props, model,
-                interceptors,
+                interceptors, up,
             )
             sock.sendall(_up_frame(iteration, _run_task(task, pid, compute)))
 
@@ -507,8 +484,7 @@ def _make_resident_fn(
     total_iteration: int,
     props: dict[str, Any],
     interceptors: Sequence[WorkerInterceptor],
-    addr: tuple[str, int],
-    token: bytes,
+    up: tuple[tuple[str, int], bytes],
     splits: SplitPlan | None,
 ) -> Callable[[Iterator[Any]], Iterator[Any]]:
     """Function of the resident job; it yields nothing. Without
@@ -522,8 +498,7 @@ def _make_resident_fn(
             _drain(rows)
             batches = splits.read(_partition_id())
         _serve_resident(
-            batches, worker, total_iteration, props, interceptors, addr,
-            token,
+            batches, worker, total_iteration, props, interceptors, up
         )
         return iter(())
 
@@ -650,6 +625,16 @@ class _Job:
         self.thread.join()
         if self.error is not None and not self.cancelled:
             raise self.error
+
+
+def _run_to_end(job: DataFrame | RDD) -> None:
+    """Run the one stage of ``job`` (a DataFrame or an RDD whose tasks
+    yield nothing) with a JVM-side action: collect() would serve the
+    empty result back through a new authenticated socket (~10 ms)."""
+    if isinstance(job, DataFrame):
+        job.write.format("noop").mode("overwrite").save()
+    else:
+        job._jrdd.count()
 
 
 class _Listener:
@@ -800,11 +785,12 @@ class _Listener:
             waiting.discard(pid)
 
     def gather_job(
-        self, sc, action: Callable[[], Any], iteration: int, partitions: int
+        self, sc, out: DataFrame | RDD, iteration: int, partitions: int
     ) -> _Partials:
-        """Run one per-iteration Spark job and gather its partials;
-        cancel the job if the partial barrier proceeded without some."""
-        job = _Job(sc, action)
+        """Run one per-iteration Spark job over ``out`` and gather its
+        partials; cancel the job if the partial barrier proceeded without
+        some."""
+        job = _Job(sc, lambda: _run_to_end(out))
         got = None
         try:
             got = self.gather(
@@ -848,7 +834,7 @@ class _Resident:
         df, worker, total_iteration, props, interceptors = self.args
         fn = _make_resident_fn(
             worker, total_iteration, props, interceptors,
-            self.listener.addr, self.listener.token, self.splits,
+            (self.listener.addr, self.listener.token), self.splits,
         )
         if self.splits is None:
             job = df.mapInArrow(fn, "done boolean", barrier=True)
@@ -858,13 +844,7 @@ class _Resident:
 
         def action() -> None:
             self.sc.setJobDescription("guagua resident run")
-            # JVM-side actions that run the job's one stage: the tasks
-            # yield nothing, and collect() would serve that empty result
-            # back through a new authenticated socket (~10 ms)
-            if self.splits is None:
-                job.write.format("noop").mode("overwrite").save()
-            else:
-                job._jrdd.count()
+            _run_to_end(job)
 
         self.job = _Job(self.sc, action)
         self.listener.accept(self._check)
@@ -923,19 +903,13 @@ def _task_slots(sc) -> int:
     )
 
 
-def _resident_blocker(
-    sc, num_partitions: int, combine_executor_side: bool | None
-) -> str | None:
+def _resident_blocker(sc, num_partitions: int) -> str | None:
     """Why a prepared run cannot take the resident path, or None when
     it can. The slot check runs before any job is submitted: a barrier
     stage wider than the cluster is retried by Spark's slot check for
     minutes before it fails."""
     if num_partitions == 0:
         return "no partitions"
-    if combine_executor_side is True:
-        return "executor-side combine"
-    if num_partitions > 32:
-        return f"{num_partitions} partitions > 32"
     dyn = sc._conf.get("spark.dynamicAllocation.enabled", "false")
     if dyn.lower() == "true":
         return "dynamic allocation"
@@ -1002,7 +976,6 @@ class IterativeEngine:
         interceptors: Sequence[MasterInterceptor] = (),
         worker_interceptors: Sequence[WorkerInterceptor] = (),
         worker_halt_enable: bool = False,
-        combine_executor_side: bool | None = None,
         min_workers_ratio: float = 1.0,
         min_workers_timeout: float = 60.0,
         result_bytes_budget: int = DEFAULT_RESULT_BYTES_BUDGET,
@@ -1019,8 +992,8 @@ class IterativeEngine:
         / guagua.min.workers.timeout, BasicCoordinator.java:649-662):
         after ``min_workers_timeout`` seconds the master proceeds once
         ``arrived/total >= ratio``, dropping the stragglers' results for
-        that iteration. It is a deadline on the gather of every path
-        but treeReduce, which it therefore turns off.
+        that iteration. It is a deadline on the gather, the one way up
+        on every path.
 
         ``result_bytes_budget`` bounds the partials the driver holds in
         memory per iteration, in raw pickled bytes; past it the gather
@@ -1069,7 +1042,7 @@ class IterativeEngine:
             else:
                 source = "parquet splits"
                 num_partitions = len(splits.partitions)
-            why = _resident_blocker(sc, num_partitions, combine_executor_side)
+            why = _resident_blocker(sc, num_partitions)
             if why is None:
                 path, why = "resident", (
                     f"{remaining} rounds, {num_partitions} partitions fit "
@@ -1130,7 +1103,6 @@ class IterativeEngine:
                 payload = pickle.dumps(
                     master_result, protocol=pickle.HIGHEST_PROTOCOL
                 )
-                got = None
                 if resident is not None:
                     try:
                         got = resident.superstep(iteration, payload)
@@ -1163,16 +1135,11 @@ class IterativeEngine:
                         bc = _ModelRef(payload=payload)
                     else:
                         bc = _ModelRef(bc=sc.broadcast(payload))
-                    combine = combine_executor_side
-                    if combine is None:
-                        combine = num_partitions > 32
-                    tree = combine and min_workers_ratio >= 1.0
-                    if not tree and listener is None:
+                    if listener is None:
                         listener = listen()
                     task = _Task(
                         worker, iteration, total_iteration, self.props, bc,
-                        worker_interceptors,
-                        None if tree else (listener.addr, listener.token),
+                        worker_interceptors, (listener.addr, listener.token),
                     )
                     if prep_rdd is not None:
                         out = prep_rdd.mapPartitions(
@@ -1180,28 +1147,15 @@ class IterativeEngine:
                         )
                     else:
                         out = df.mapInArrow(
-                            _make_worker_fn(task), "result binary"
+                            _make_worker_fn(task), "done boolean"
                         )
-                    if tree:
-                        if prep_rdd is None:
-                            out = out.rdd.map(lambda row: row.result)
-                        reduced = out.map(_unwrap_partial).treeReduce(
-                            _combine_or_list, depth=2
-                        )
-                        results = _flatten_partial(reduced)
-                        all_halt = reduced.all_halt and reduced.n > 0
-                        mctx.arrived_workers = num_partitions
-                    else:
-                        got = listener.gather_job(
-                            sc, out.collect, iteration, num_partitions
-                        )
-                if got is not None:
-                    results = got.results()
-                    all_halt = got.all_halt()
-                    mctx.arrived_workers = len(got)
+                    got = listener.gather_job(
+                        sc, out, iteration, num_partitions
+                    )
 
-                mctx.worker_results = results
-                mctx.all_workers_halted = worker_halt_enable and all_halt
+                mctx.worker_results = got.results()
+                mctx.arrived_workers = len(got)
+                mctx.all_workers_halted = worker_halt_enable and got.all_halt()
                 master_result = master.compute(mctx)
                 if mctx.all_workers_halted:
                     _force_halt(master_result)
@@ -1237,41 +1191,6 @@ class IterativeEngine:
             if described:
                 sc.setJobDescription(None)
         return master_result
-
-
-def _unwrap_partial(raw: bytes) -> _Partial:
-    result, halt = pickle.loads(bytes(raw))
-    return _Partial(result, halt)
-
-
-class _Acc(list):
-    """Private accumulator for non-Combinable results inside treeReduce.
-
-    A distinct type (not a bare ``list``) so a user worker result that is
-    itself a Python list round-trips intact instead of being flattened
-    into the engine's internal merge."""
-
-
-def _combine_or_list(a: _Partial, b: _Partial) -> _Partial:
-    """treeReduce op: combine user results if Combinable, else accumulate
-    an _Acc (still bounds driver traffic to one task's worth per tree leaf)."""
-    ar, br = a.result, b.result
-    if isinstance(ar, _Acc) or isinstance(br, _Acc):
-        merged: Any = _Acc(
-            (ar if isinstance(ar, _Acc) else [ar])
-            + (br if isinstance(br, _Acc) else [br])
-        )
-    elif isinstance(ar, Combinable) and isinstance(br, Combinable):
-        merged = ar.combine(br)
-    else:
-        merged = _Acc([ar, br])
-    return _Partial(merged, a.all_halt and b.all_halt, a.n + b.n)
-
-
-def _flatten_partial(p: _Partial) -> list[Any]:
-    if isinstance(p.result, _Acc):
-        return list(p.result)
-    return [p.result]
 
 
 def _force_halt(result: Any) -> None:

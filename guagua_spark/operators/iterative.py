@@ -713,11 +713,11 @@ def als_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core-count partitions made the superstep freight
     # slots × catalog while each task solved a sliver of users.
     # ceil(rows / ALS_ROWS_PER_WORKER) keeps per-task row work bounded
-    # as the corpus grows (the engine tree-combines partials
-    # executor-side past 32 partitions, so freight merges before the
-    # driver) and collapses to a handful of workers when the corpus is
-    # small. Measured at sf0.1/local[32]: 32 parts 15–24 s → 4 parts
-    # 6–7 s per run, rmse/movement identical to 9 dp (rating rows =
+    # as the corpus grows (every partial goes up to the driver's
+    # gather, which spills past the run's result budget) and collapses
+    # to a handful of workers when the corpus is small. Measured at
+    # sf0.1/local[32]: 32 parts 15–24 s → 4 parts 6–7 s per run,
+    # rmse/movement identical to 9 dp (rating rows =
     # lineitem rows: the order FK always matches, so the footer-only
     # lineitem count sizes it without building the join).
     rows = load_table(spark, sf_dir, "lineitem").count()
@@ -906,8 +906,8 @@ LOCAL_ORACLE_SQL = {
 # kmeans 97 s at sf10 ==> ~8/16 min at sf100; the Spark sides are 13-45
 # MINUTES each at that scale). The sweep twins train on a
 # deterministic md5 row subset at sf0.1-scale cost whatever the
-# corpus: the ENGINE interior (load-once persist, map-side folds,
-# treeReduce, broadcast model, halt protocol) and the update rules are
+# corpus: the ENGINE interior (load-once persist, map-side folds, the
+# gather, broadcast model, halt protocol) and the update rules are
 # identical — only the input relation shrinks, and both engines select
 # it with the same u32(md5) Bernoulli rule (the ngram-twin exactness
 # argument, dedup.py NGRAM_SAMPLE_TARGET).

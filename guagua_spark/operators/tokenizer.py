@@ -19,8 +19,9 @@ Translation of Rare Words with Subword Units" — the public algorithm).
   load-once cache, engine.py:214 / MemoryDiskList analogue);
 - per-iteration traffic is one pair-count dict per worker, bounded by
   the number of DISTINCT adjacent symbol pairs in that partition
-  (≤ alphabet² + merges growth, NOT corpus-sized), tree-combined
-  executor-side (api.py Combinable → O(√P) driver traffic);
+  (≤ alphabet² + merges growth, NOT corpus-sized), one frame per
+  worker into the driver's gather, merged by the master (api.py
+  Combinable → O(P) bounded dicts at the driver);
 - workers are stateless between iterations (SURVEY.md §7 hard part #2):
   each superstep re-applies the broadcast merge list to the cached
   vocabulary — O(merges × Σ|word|) per partition, no corpus rescan.

@@ -3,9 +3,9 @@
 The replay shares the actual solvers (solve_users / solve_items /
 init_item_factors) with the engine path, so the comparison pins the
 BSP orchestration — partitioning, combine, broadcast, halt — not a
-re-derivation of the math. Engine and replay may differ only by
-tree-combine float summation order (the lr_train treeReduce argument),
-hence the 1e-8 tolerance.
+re-derivation of the math. Engine and replay may differ only by float
+summation order (per-partition partials summed in partition order
+against the replay's own order), hence the 1e-8 tolerance.
 """
 
 from __future__ import annotations

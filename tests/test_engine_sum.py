@@ -48,13 +48,26 @@ def test_sum_halt_fires_at_iteration_17(spark):
     assert len(engine.iteration_seconds) == 17
 
 
-def test_sum_executor_side_combine_matches(spark):
-    df = _two_partition_df(spark)
+class SplitSumWorker(SumWorker):
+    """SumWorker that, like the reference's input format, gives an empty
+    split no worker result: it returns None, which SumMaster skips."""
+
+    def compute(self, context, batches: Iterator[pa.RecordBatch]):
+        batches = [b for b in batches if b.num_rows]
+        return super().compute(context, iter(batches)) if batches else None
+
+
+def test_sum_golden_over_33_partitions(spark):
+    """The SumTest splits in 2 of 33 partitions: a Combinable run wider
+    than 32 partitions sends its partials up the run's socket like any
+    other, and the master sums them in partition order."""
+    rdd = spark.sparkContext.parallelize(
+        [[1, 2, 3], [2, 3, 4]] + [[]] * 31, 33
+    ).flatMap(lambda values: [(v,) for v in values])
+    df = spark.createDataFrame(rdd, "value long")
+    assert df.rdd.getNumPartitions() == 33
     engine = IterativeEngine(spark)
-    result = engine.run(
-        SumMaster(), SumWorker(), df, total_iteration=10,
-        combine_executor_side=True,
-    )
+    result = engine.run(SumMaster(), SplitSumWorker(), df, total_iteration=10)
     assert result.value == 15345
 
 
@@ -108,8 +121,8 @@ def test_worker_voted_halt(spark):
 
 class ListWorker(WorkerComputable):
     """A worker whose result is ITSELF a Python list — regression guard:
-    the treeReduce accumulator must not flatten user lists into its own
-    merge (engine._Acc sentinel)."""
+    the engine must hand the master each list intact, never flattened
+    into a merge of its own."""
 
     def compute(self, context, batches: Iterator[pa.RecordBatch]):
         n = 0
@@ -131,10 +144,7 @@ class ListMaster(MasterComputable):
 def test_list_results_round_trip_combinable_path(spark):
     df = _two_partition_df(spark)
     engine = IterativeEngine(spark)
-    result = engine.run(
-        ListMaster(), ListWorker(), df, total_iteration=1,
-        combine_executor_side=True,  # force the treeReduce path
-    )
+    result = engine.run(ListMaster(), ListWorker(), df, total_iteration=1)
     assert result.value == 6
 
 
@@ -187,14 +197,19 @@ def test_interceptor_ordering(spark):
     ]
 
 
-def test_worker_interceptor_ordering(spark, tmp_path):
+def test_worker_interceptor_ordering(spark, tmp_path, caplog):
     """Executor-side hooks: FIFO pre, FILO post, application hooks on the
     first/last iteration's task (worker/WorkerInterceptor.java:33-38), on
-    every worker-task path: Arrow, prepared blob RDD (executor-side
-    combine) and resident. The paths run inside one test so
-    its id stays stable. Single partition + local mode ⇒ tasks share the
-    driver filesystem and run one-at-a-time, so an append-only trace file
-    observes exact order."""
+    every worker-task path: Arrow, prepared blob RDD (more partitions
+    than the 4 task slots of local[4]) and resident. The paths run inside
+    one test so its id stays stable. Local mode ⇒ tasks share the driver
+    filesystem, and one partition's tasks run one at a time, so an
+    append-only trace file per partition observes exact order."""
+    import glob
+    import logging
+
+    from test_load_once import _paths
+
     from guagua_spark.algorithms.gradient import (
         GradientDescentMaster,
         LogisticGradientWorker,
@@ -208,7 +223,7 @@ def test_worker_interceptor_ordering(spark, tmp_path):
             self.path = path
 
         def _mark(self, hook: str, ctx) -> None:
-            with open(self.path, "a") as f:
+            with open(f"{self.path}.{ctx.partition_id}", "a") as f:
                 f.write(f"{hook}:{self.name}:it{ctx.current_iteration}\n")
 
         def pre_application(self, ctx):
@@ -227,31 +242,36 @@ def test_worker_interceptor_ordering(spark, tmp_path):
     sum_df = spark.createDataFrame(
         sc.parallelize([(1,), (2,), (3,)], 1), "value long"
     )
-    lr_df = spark.createDataFrame(
-        sc.parallelize([(0.1, 0.0), (0.5, 1.0), (0.9, 1.0)], 1),
-        "f1 double, label double",
-    )
+    rows = [(0.1, 0.0), (0.5, 1.0), (0.9, 1.0)]
+
+    def lr_df(partitions: int):
+        return spark.createDataFrame(
+            sc.parallelize(rows * partitions, partitions),
+            "f1 double, label double",
+        )
+
     paths = {
-        "arrow": (SumMaster(), SumWorker(), sum_df, 2, {}),
+        "arrow": (SumMaster(), SumWorker(), sum_df, 2),
         "blob": (
             GradientDescentMaster(dim=1, learning_rate=0.5),
             LogisticGradientWorker(("f1",), "label"),
-            lr_df, LOAD_ONCE_MIN_ROUNDS, {"combine_executor_side": True},
+            lr_df(8), LOAD_ONCE_MIN_ROUNDS,
         ),
         "resident": (
             GradientDescentMaster(dim=1, learning_rate=0.5),
             LogisticGradientWorker(("f1",), "label"),
-            lr_df, LOAD_ONCE_MIN_ROUNDS, {},
+            lr_df(1), LOAD_ONCE_MIN_ROUNDS,
         ),
     }
-    for name, (master, worker, df, rounds, kwargs) in paths.items():
+    for name, (master, worker, df, rounds) in paths.items():
         trace = str(tmp_path / f"{name}.log")
-        IterativeEngine(spark).run(
-            master, worker, df, total_iteration=rounds,
-            worker_interceptors=[Tracker("a", trace), Tracker("b", trace)],
-            **kwargs,
-        )
-        calls = open(trace).read().splitlines()
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="guagua_spark.engine"):
+            IterativeEngine(spark).run(
+                master, worker, df, total_iteration=rounds,
+                worker_interceptors=[Tracker("a", trace), Tracker("b", trace)],
+            )
+        assert _paths(caplog) == [name]
         expected = ["preApp:a:it1", "preApp:b:it1"]
         for it in range(1, rounds + 1):
             expected += [
@@ -259,7 +279,12 @@ def test_worker_interceptor_ordering(spark, tmp_path):
                 f"postIter:b:it{it}", f"postIter:a:it{it}",
             ]
         expected += [f"postApp:b:it{rounds}", f"postApp:a:it{rounds}"]
-        assert calls == expected, name
+        files = sorted(glob.glob(f"{trace}.*"))
+        assert files == [
+            f"{trace}.{p}" for p in range(df.rdd.getNumPartitions())
+        ], name
+        for path in files:
+            assert open(path).read().splitlines() == expected, (name, path)
 
 
 def test_iteration_latency_budget(spark):

@@ -7,7 +7,8 @@ stats pass, per-level histograms, combine, broadcast, halt — not a
 re-derivation of the math. All routing decisions are integer (bin
 indices, split bins), so engine and replay may differ only by float
 summation order inside the histograms; structure is compared exactly
-and weights at 1e-8 (the lr_train treeReduce argument).
+and weights at 1e-8 (per-partition partials summed in partition order
+against the replay's row order).
 """
 
 from __future__ import annotations

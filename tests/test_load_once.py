@@ -78,11 +78,11 @@ def _paths(caplog) -> list[str]:
     ]
 
 
-def test_blob_path_matches_arrow_semantics(spark):
-    """Long runs forced onto the blob/treeReduce path (executor-side
-    combine) must produce the same model as the Arrow path (float-sum
-    order may differ between treeReduce and driver-order collect, hence
-    allclose not array_equal)."""
+def test_blob_path_matches_arrow_semantics(spark, caplog):
+    """A long run forced onto the blob path (8 partitions on the 4 task
+    slots of local[4]) must produce the same model as the Arrow path
+    over the same partitions, bit for bit: both hand the master its
+    partials in partition order."""
     from guagua_spark.api import WorkerComputable
 
     class ArrowOnlyWorker(LogisticGradientWorker):
@@ -99,22 +99,34 @@ def test_blob_path_matches_arrow_semantics(spark):
             )
 
     rounds = LOAD_ONCE_MIN_ROUNDS + 2
-    engine = IterativeEngine(spark)
-    blob = engine.run(
-        GradientDescentMaster(dim=2, learning_rate=0.5),
-        LogisticGradientWorker(("f1", "f2"), "label"),
-        _train_df(spark),
-        total_iteration=rounds,
-        combine_executor_side=True,  # blob + treeReduce variant
-    )
-    engine = IterativeEngine(spark)
-    arrow = engine.run(
-        GradientDescentMaster(dim=2, learning_rate=0.5),
-        ArrowOnlyWorker(("f1", "f2"), "label"),
-        _train_df(spark),
-        total_iteration=rounds,
-    )
-    np.testing.assert_allclose(blob.weights, arrow.weights, rtol=1e-9)
+    with caplog.at_level(logging.INFO, logger=ENGINE_LOG):
+        blob = IterativeEngine(spark).run(
+            GradientDescentMaster(dim=2, learning_rate=0.5),
+            LogisticGradientWorker(("f1", "f2"), "label"),
+            _train_df(spark, 8),
+            total_iteration=rounds,
+        )
+        arrow = IterativeEngine(spark).run(
+            GradientDescentMaster(dim=2, learning_rate=0.5),
+            ArrowOnlyWorker(("f1", "f2"), "label"),
+            _train_df(spark, 8),
+            total_iteration=rounds,
+        )
+    assert _paths(caplog) == ["blob", "arrow"]
+    np.testing.assert_array_equal(blob.weights, arrow.weights)
+    np.testing.assert_allclose(blob.weights, _replay(spark, rounds), rtol=1e-9)
+
+
+def test_no_partition_cap_beyond_the_task_slots(spark, monkeypatch):
+    """Only the task slots bound a resident run's width: 40 partitions
+    stay resident on 64 slots and are kept off the resident path on 4."""
+    from guagua_spark import engine
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(engine, "_task_slots", lambda sc: 64)
+    assert engine._resident_blocker(sc, 40) is None
+    monkeypatch.setattr(engine, "_task_slots", lambda sc: 4)
+    assert engine._resident_blocker(sc, 40) == "40 partitions > 4 task slots"
 
 
 def test_short_runs_are_resident(spark, caplog):
