@@ -3,7 +3,8 @@
 A from-scratch re-expression of the capabilities of ShifuML/guagua
 (distributed, pluggable, iterative BSP computing: partitioned scan →
 per-partition UDF over cached data → global aggregate with combiner
-semantics → broadcast → iterate-until-converged), built Spark-first:
+semantics → model back to every worker → iterate-until-converged),
+built Spark-first:
 
 - the Spark **driver is the master** (reference: guagua-core
   master/GuaguaMasterService.java) — the ZooKeeper/Netty coordination
@@ -14,8 +15,10 @@ semantics → broadcast → iterate-until-converged), built Spark-first:
   the driver's one gather, then the master's combine over them in
   partition order (reference: io/Combinable.java,
   master/NettyMasterCoordinator.java merge-on-arrival);
-- **model broadcast** = ``sc.broadcast`` (reference: AbstractMasterCoordinator
-  znode publish/chunking — unnecessary on Spark, TorrentBroadcast handles it).
+- **model down-link** = one frame per task per iteration on that same
+  socket, as each reference worker fetches the master result before its
+  iteration (reference: AbstractMasterCoordinator znode publish/chunking,
+  the Netty master).
 
 Relational/declared queries are plain DataFrame programs optimized by
 Catalyst; the iterative engine is reserved for genuinely iterative

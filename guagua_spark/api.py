@@ -13,9 +13,10 @@ Reproduces the reference's extension points (SURVEY.md §2.8):
 Differences from the reference, by design (Spark-first):
 
 - No ``Bytable``/serializer layer: results are arbitrary picklable Python
-  objects; each task sends its pickled result to the driver as one frame
-  on the run's socket, and Spark carries the rest (reference
-  io/BytableSerializer.java and the GZIP/Bzip2 variants disappear).
+  objects. Each task gets the pickled master result from the driver as
+  one frame on the run's socket and sends its pickled result back as
+  another (reference io/BytableSerializer.java and the GZIP/Bzip2
+  variants disappear).
 - Workers receive their partition as an iterator of **pyarrow RecordBatches**
   (columnar, zero-copy from the JVM) instead of a line-record reader
   (reference hadoop/io/GuaguaLineRecordReader.java). Convert with
@@ -137,11 +138,13 @@ class WorkerComputable(abc.ABC):
     """Per-partition fold over the partition's data, once per iteration.
 
     Reference contract: worker/WorkerComputable.java:60-72 and the
-    load-once template AbstractWorkerComputable.java:66-144. On Spark the
-    "load-once, iterate many" protocol is the persisted DataFrame: the
-    engine persists the input before the loop unless Spark already
-    caches it, so every iteration's scan hits the block-manager cache,
-    and ``compute`` sees fresh Arrow batches each round.
+    load-once template AbstractWorkerComputable.java:66-144. A worker
+    without ``prepare`` runs on the Arrow path, where the "load-once,
+    iterate many" protocol is the persisted DataFrame: the engine
+    persists the input before the loop unless Spark already caches it,
+    so every iteration's scan hits the block-manager cache, and
+    ``compute`` sees fresh Arrow batches each round. The load-once paths
+    below keep the prepared partition instead and persist no rows.
 
     Implementations MUST handle an empty batch iterator (a partition can
     be empty) and MUST NOT rely on instance state surviving between

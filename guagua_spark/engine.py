@@ -1,7 +1,7 @@
 """The iterative BSP engine: driver = master, executors = workers.
 
     prepare/persist input → loop:
-        ship(master_result)                     # socket | inline | broadcast
+        master result down the run's socket     # one _DOWN frame per task
         per-partition fold                      # resident | blob | Arrow
         partials up the run's socket
         master.compute(worker_results)          # model update, driver-side
@@ -41,8 +41,8 @@ is the split plan (~80 py4j calls, ~14 ms) and the job's build. The
 plan is made on every run: a Spark write to a cached DataFrame's path
 refreshes its file listing in place, so a plan kept from an earlier run
 could miss the new files. The rest is kept off that path: a resident
-superstep makes no py4j call (the job description is set only on
-iterations that launch a job), the job ends with a JVM-side action
+superstep makes no py4j call (a job's description is set in the
+thread that launches it), the job ends with a JVM-side action
 instead of collect() serving its empty result through a new socket
 (~10 ms), and ``prepare`` copies the partition once
 (gradient._features_matrix: ~10 ms a partition, not 28). After the
@@ -83,10 +83,15 @@ choice, with the reason, once per run at INFO:
   resident path cannot take. Each iteration is one job that re-reads
   the persisted rows as Arrow batches.
 
-The way up is the same on every path, with no exception: a task sends
-its pickled partial to the run's listener as one _UP frame (iteration,
-length, halt vote) after the run token and a hello, and one gather
-(_Listener.gather) reads the frames in arrival order with
+The socket is the same on every path, with no exception, and every
+task runs one loop on it (_serve): it connects, sends the run token and
+a hello, then per superstep gets the pickled master result as one _DOWN
+frame and sends its pickled partial as one _UP frame (iteration,
+length, halt vote), until _STOP. A resident task serves the whole run;
+a per-iteration task says hello (tasks = 0) before it computes, is sent
+that iteration's _DOWN frame and, once its _UP frame is read, _STOP; a
+hello for a partition whose frame already arrived gets _STOP at once.
+One gather (_Listener.gather) reads the frames in arrival order with
 ``selectors``. It hands the master the partials in partition order,
 keeps the first complete frame per partition (task retries,
 speculation) and drops a frame of an older iteration unpickled. Past
@@ -124,12 +129,13 @@ Scale notes (100 TB / 1000 executors):
   driver holds at most ``result_bytes_budget`` of them in memory and
   spills the rest to disk, where the master reads them one at a time
   (the reference's BytableMemoryDiskList).
-- Master→worker traffic off the resident path is TorrentBroadcast
-  (BitTorrent-style chunks) above INLINE_MODEL_BYTES; the reference's
-  1 MB ZK chunking (GuaguaConstants.java:140-142) has no analogue
-  because broadcast already scales. Previous iterations' broadcasts are
-  destroyed eagerly (analogue of iter−2 znode GC,
-  AbstractMasterCoordinator.java:92-107).
+- Master→worker traffic is one _DOWN frame per task per iteration on
+  the run's socket, on every path, as each of the reference's workers
+  fetches the master result in preIteration: the driver writes the
+  pickled model once per task, e.g. ~16 MB an iteration for a 393 KB
+  k=512 x 96 model over 40 partitions. A frame is a stream, so the
+  reference's 1 MB ZK chunking (GuaguaConstants.java:140-142) and its
+  znode GC (AbstractMasterCoordinator.java:92-107) have no analogue.
 """
 
 from __future__ import annotations
@@ -171,14 +177,6 @@ log = logging.getLogger("guagua_spark.engine")
 #: (GuaguaConstants.java:35-37)
 DEFAULT_TOTAL_ITERATION = 50
 
-#: models at or below this pickled size ride the task closure instead of
-#: a TorrentBroadcast: a broadcast write+read round-trip costs ~150 ms
-#: per iteration on local mode (measured), pure overhead for the
-#: few-KB models of LR/k-means/small NN. Above it (wide NN, big
-#: centroid sets) broadcast amortizes across tasks as usual. Kept small
-#: because an inlined model is shipped once PER TASK via the scheduler.
-INLINE_MODEL_BYTES = 256 * 1024
-
 #: a prepared run the resident path cannot take (more partitions than
 #: task slots, dynamic allocation) uses the blob path from this many
 #: remaining rounds on, the Arrow path below it. Measured on 4 cores,
@@ -195,41 +193,15 @@ LOAD_ONCE_MIN_ROUNDS = 3
 DEFAULT_RESULT_BYTES_BUDGET = 256 * 1024 * 1024
 
 
-class _ModelRef:
-    """Master-result carrier for the down-link: inline pickle for small
-    models, TorrentBroadcast of the SAME payload bytes otherwise — the
-    model is serialized exactly once per iteration either way (the
-    reference's equivalent knob is its 1 MB ZK znode chunking,
-    GuaguaConstants.java:140-142)."""
-
-    __slots__ = ("payload", "bc")
-
-    def __init__(self, payload: bytes | None = None, bc=None) -> None:
-        self.payload = payload
-        self.bc = bc
-
-    def get(self) -> Any:
-        raw = self.bc.value if self.bc is not None else self.payload
-        return pickle.loads(raw)
-
-    def destroy(self) -> None:
-        if self.bc is not None:
-            self.bc.destroy()
-
-
 class _Task(NamedTuple):
-    """What one iteration's worker task needs besides its partition data.
-    The worker object, props and interceptors are serialized into the
-    task closure; the (potentially large) master result rides the
-    _ModelRef. ``up`` is the run listener's (address, token)."""
+    """What a run's worker tasks carry in their closure: the same for
+    every iteration. The partition data is the task's input; the master
+    result comes down the run's socket."""
 
     worker: WorkerComputable
-    iteration: int
     total_iteration: int
     props: dict[str, Any]
-    model: _ModelRef
     interceptors: Sequence[WorkerInterceptor]
-    up: tuple[tuple[str, int], bytes]
 
 
 def _drain(it: Iterator[Any]) -> None:
@@ -244,68 +216,6 @@ def _drain(it: Iterator[Any]) -> None:
 def _partition_id() -> int:
     tc = TaskContext.get()
     return tc.partitionId() if tc is not None else -1
-
-
-def _run_task(
-    task: _Task, pid: int, compute: Callable[[WorkerContext], Any]
-) -> Any:
-    """The one worker-task body every path runs; paths differ only in
-    how ``compute`` obtains the partition data. Hook order is the
-    reference's call-stack contract (worker/WorkerInterceptor.java:33-38):
-    [iter 1: pre_application FIFO] → pre_iteration FIFO → init/compute →
-    post_iteration FILO → [iter N: post_application FILO]. Returns the
-    worker's result."""
-    ctx = WorkerContext(
-        current_iteration=task.iteration,
-        total_iteration=task.total_iteration,
-        last_master_result=task.model.get(),
-        props=task.props,
-        partition_id=pid,
-    )
-    if task.iteration == 1:
-        for icpt in task.interceptors:
-            icpt.pre_application(ctx)
-    for icpt in task.interceptors:
-        icpt.pre_iteration(ctx)
-    task.worker.init(ctx)
-    result = compute(ctx)
-    for icpt in reversed(task.interceptors):
-        icpt.post_iteration(ctx)
-    if task.iteration == task.total_iteration:
-        for icpt in reversed(task.interceptors):
-            icpt.post_application(ctx)
-    return result
-
-
-def _emit(task: _Task, pid: int, result: Any) -> Iterator[Any]:
-    """End of a per-iteration task: send the partial up the run's socket;
-    the task yields nothing to Spark."""
-    addr, token = task.up
-    with socket.create_connection(addr) as sock:
-        sock.sendall(
-            token + _HELLO.pack(pid, 0) + _up_frame(task.iteration, result)
-        )
-        # the driver closes once it has read the frame, so a finished
-        # task's partial is always at the driver
-        sock.recv(1)
-    return iter(())
-
-
-def _make_worker_fn(
-    task: _Task,
-) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """mapInArrow task over the persisted rows: the worker folds the
-    partition's Arrow batches."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = _partition_id()
-        result = _run_task(
-            task, pid, lambda ctx: task.worker.compute(ctx, batches)
-        )
-        _drain(batches)
-        return _emit(task, pid, result)
-
-    return fn
 
 
 def _make_prepare_fn(
@@ -326,26 +236,6 @@ def _make_prepare_fn(
     return fn
 
 
-def _make_prepared_iter_fn(
-    task: _Task,
-) -> Callable[[Iterator[bytes]], Iterator[bytes]]:
-    """Per-iteration task over the persisted prepared blobs: the
-    partition data arrives as one pickle.loads (memcpy for numpy)
-    instead of an Arrow decode."""
-
-    def fn(blobs: Iterator[bytes]) -> Iterator[bytes]:
-        (blob,) = blobs  # reads the stream to its end; see _drain
-        pid = _partition_id()
-        result = _run_task(
-            task,
-            pid,
-            lambda ctx: task.worker.compute_prepared(ctx, pickle.loads(blob)),
-        )
-        return _emit(task, pid, result)
-
-    return fn
-
-
 def _prepared_blobs(df: DataFrame, worker: WorkerComputable):
     """The blob path's input: one persisted pickled prepare() output per
     partition. Take the run's partition count from this RDD: under AQE a
@@ -362,12 +252,11 @@ def _prepared_blobs(df: DataFrame, worker: WorkerComputable):
 # -- the run's socket ------------------------------------------------------
 # Wire format, all big-endian. A task connects and sends the raw run
 # token, then _HELLO (partition id, tasks in the stage; 0 for a
-# per-iteration task), then one _UP frame per superstep: (iteration,
-# payload length, halt vote) + the pickled worker result. A resident
-# task keeps its connection and gets _DOWN (iteration, payload length)
-# + the pickled master result before each superstep; iteration 0 tells
-# it to stop. A per-iteration task sends its one frame and waits for
-# the driver to close the connection.
+# per-iteration task). Then, per superstep, it gets _DOWN (iteration,
+# payload length) + the pickled master result and sends _UP
+# (iteration, payload length, halt vote) + the pickled worker result,
+# until a _DOWN of iteration 0 (_STOP). A per-iteration task gets one
+# superstep, or _STOP at once.
 _DOWN = struct.Struct("!qQ")
 _HELLO = struct.Struct("!qq")
 _UP = struct.Struct("!qQ?")
@@ -384,6 +273,11 @@ _TASK_END_TIMEOUT_S = 30.0
 def _up_frame(iteration: int, result: Any) -> bytes:
     payload = pickle.dumps(result, protocol=pickle.HIGHEST_PROTOCOL)
     return _UP.pack(iteration, len(payload), is_halt(result)) + payload
+
+
+def _down_frame(iteration: int, result: Any) -> bytes:
+    payload = pickle.dumps(result, protocol=pickle.HIGHEST_PROTOCOL)
+    return _DOWN.pack(iteration, len(payload)) + payload
 
 
 #: the exception line that ends a Python traceback, module path dropped
@@ -443,26 +337,24 @@ def _send_all(
             check()
 
 
-def _serve_resident(
-    batches: Iterator[pa.RecordBatch],
-    worker: WorkerComputable,
-    total_iteration: int,
-    props: dict[str, Any],
-    interceptors: Sequence[WorkerInterceptor],
+def _serve(
+    task: _Task,
     up: tuple[tuple[str, int], bytes],
+    tasks: int,
+    compute: Callable[[WorkerContext], Any],
 ) -> None:
-    """Body of a resident task: prepare the partition once, connect to
-    the driver, then run one _run_task per superstep frame until the
-    stop frame. The worker and interceptor objects live for the whole
-    run. Module-level, so task closures pickle it by reference."""
+    """The one socket loop of every worker task: connect to the run's
+    listener, send the token and a hello, then run one superstep per
+    _DOWN frame until _STOP. A resident task (``tasks`` > 0) serves the
+    whole run with the same worker and interceptor objects; a
+    per-iteration task (``tasks`` = 0) is sent at most one superstep.
+    Hook order is the reference's call-stack contract
+    (worker/WorkerInterceptor.java:33-38): [iter 1: pre_application
+    FIFO] → pre_iteration FIFO → init/compute → post_iteration FILO →
+    [iter N: post_application FILO]. Module-level, so task closures
+    pickle it by reference."""
     pid = _partition_id()
-    tasks = len(BarrierTaskContext.get().getTaskInfos())
-    data = worker.prepare(batches)
-    _drain(batches)
-
-    def compute(ctx: WorkerContext) -> Any:
-        return worker.compute_prepared(ctx, data)
-
+    worker, total_iteration, props, interceptors = task
     addr, token = up
     with socket.create_connection(addr) as sock:
         sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
@@ -471,35 +363,69 @@ def _serve_resident(
             iteration, size = _DOWN.unpack(_recv_exact(sock, _DOWN.size))
             if iteration == 0:
                 return
-            model = _ModelRef(payload=_recv_exact(sock, size))
-            task = _Task(
-                worker, iteration, total_iteration, props, model,
-                interceptors, up,
+            ctx = WorkerContext(
+                current_iteration=iteration,
+                total_iteration=total_iteration,
+                last_master_result=pickle.loads(_recv_exact(sock, size)),
+                props=props,
+                partition_id=pid,
             )
-            sock.sendall(_up_frame(iteration, _run_task(task, pid, compute)))
+            if iteration == 1:
+                for icpt in interceptors:
+                    icpt.pre_application(ctx)
+            for icpt in interceptors:
+                icpt.pre_iteration(ctx)
+            worker.init(ctx)
+            result = compute(ctx)
+            for icpt in reversed(interceptors):
+                icpt.post_iteration(ctx)
+            if iteration == total_iteration:
+                for icpt in reversed(interceptors):
+                    icpt.post_application(ctx)
+            sock.sendall(_up_frame(iteration, result))
 
 
-def _make_resident_fn(
-    worker: WorkerComputable,
-    total_iteration: int,
-    props: dict[str, Any],
-    interceptors: Sequence[WorkerInterceptor],
-    up: tuple[tuple[str, int], bytes],
-    splits: SplitPlan | None,
+def _make_task_fn(
+    path: str,
+    task: _Task,
+    listener: _Listener,
+    splits: SplitPlan | None = None,
 ) -> Callable[[Iterator[Any]], Iterator[Any]]:
-    """Function of the resident job; it yields nothing. Without
-    ``splits`` it is the mapInArrow function over ``df``'s rows; with
-    them, a task of a barrier RDD job that reads its own files and
-    drains its one-number input."""
+    """The function of a run's worker tasks, built once per path; it
+    yields nothing. The paths differ only in how a task gets its
+    partition data:
+
+    - arrow: mapInArrow over the persisted rows; the worker folds the
+      partition's Arrow batches.
+    - blob: over the persisted prepared blobs, one per partition; the
+      data arrives as one pickle.loads (memcpy for numpy) instead of an
+      Arrow decode.
+    - resident: a barrier task prepares its partition once, from
+      ``df``'s rows, or with ``splits`` from its own files after
+      draining its one-number input, and keeps it for the whole run.
+    """
+    up = (listener.addr, listener.token)
 
     def fn(rows: Iterator[Any]) -> Iterator[Any]:
-        batches = rows
-        if splits is not None:
-            _drain(rows)
-            batches = splits.read(_partition_id())
-        _serve_resident(
-            batches, worker, total_iteration, props, interceptors, up
-        )
+        tasks = 0
+        if path == "arrow":
+            compute = lambda ctx: task.worker.compute(ctx, rows)  # noqa: E731
+        elif path == "blob":
+            (blob,) = rows  # reads the stream to its end; see _drain
+            compute = lambda ctx: task.worker.compute_prepared(  # noqa: E731
+                ctx, pickle.loads(blob)
+            )
+        else:
+            tasks = len(BarrierTaskContext.get().getTaskInfos())
+            batches = rows
+            if splits is not None:
+                _drain(rows)
+                batches = splits.read(_partition_id())
+            data = task.worker.prepare(batches)
+            _drain(batches)
+            compute = lambda ctx: task.worker.compute_prepared(ctx, data)  # noqa: E731
+        _serve(task, up, tasks, compute)
+        _drain(rows)  # what an Arrow task's worker left unread
         return iter(())
 
     return fn
@@ -561,11 +487,14 @@ class _Partials(Sequence):
 
 class _Job:
     """One Spark action run from an InheritableThread, so it keeps the
-    caller's job group, description and scheduler pool, under a job tag
-    of its own with interrupt-on-cancel: cancelling it touches no other
-    job of the caller's group and stops its Python workers."""
+    caller's job group and scheduler pool, under a job tag of its own
+    with interrupt-on-cancel: cancelling it touches no other job of the
+    caller's group and stops its Python workers. Its description is set
+    in that thread only, so the caller's stays as it was."""
 
-    def __init__(self, sc, action: Callable[[], Any]) -> None:
+    def __init__(
+        self, sc, description: str, action: Callable[[], Any]
+    ) -> None:
         self.sc = sc
         self.tag = f"guagua-{uuid.uuid4().hex[:12]}"
         self.error: BaseException | None = None
@@ -573,6 +502,7 @@ class _Job:
 
         def run() -> None:
             try:
+                sc.setJobDescription(description)
                 sc.addJobTag(self.tag)
                 sc.setInterruptOnCancel(True)
                 action()
@@ -638,14 +568,15 @@ def _run_to_end(job: DataFrame | RDD) -> None:
 
 
 class _Listener:
-    """The run's socket, bound to the driver's host, and the one gather
-    of worker partials. A connection's first bytes must be the run's raw
-    token; any other connection is closed unread, so nothing a stranger
-    sends is ever unpickled. On a resident run the first hello fixes
-    the run's task count (the stage as Spark realized it: over ``df``'s
-    rows under AQE it can differ from an earlier ``getNumPartitions()``;
-    over parquet splits it is the plan's); every other hello must
-    agree."""
+    """The run's socket, bound to the driver's host: the one way down
+    for the master result and the one gather of worker partials. A
+    connection's first bytes must be the run's raw token; any other
+    connection is closed unread and sent nothing, so nothing a stranger
+    sends is ever unpickled and no model byte reaches it. On a resident
+    run the first hello fixes the run's task count (the stage as Spark
+    realized it: over ``df``'s rows under AQE it can differ from an
+    earlier ``getNumPartitions()``; over parquet splits it is the
+    plan's); every other hello must agree."""
 
     def __init__(
         self,
@@ -730,6 +661,7 @@ class _Listener:
     def gather(
         self,
         iteration: int,
+        frame: bytes,
         waiting: set[int],
         total: int,
         check: Callable[[], None],
@@ -737,8 +669,11 @@ class _Listener:
         """Read _UP frames in arrival order until every partition in
         ``waiting`` sent this iteration's, or, under the partial barrier
         (reference BasicCoordinator.java:649-662), until the deadline
-        once arrived/total ≥ the ratio. ``check`` runs whenever the
-        sockets are quiet and raises once waiting is pointless."""
+        once arrived/total ≥ the ratio. A per-iteration task's hello for
+        a partition in ``waiting`` is answered with ``frame``, this
+        iteration's _DOWN frame, and its _UP frame with _STOP; any other
+        hello gets _STOP at once. ``check`` runs whenever the sockets
+        are quiet and raises once waiting is pointless."""
         got = _Partials(self.budget)
         deadline = time.monotonic() + self.timeout_s
         while waiting:
@@ -753,18 +688,23 @@ class _Listener:
             if not events:
                 check()
             for key, _ in events:
-                if key.data is not None:  # a resident task's connection
-                    self._read_up(key.fileobj, key.data, iteration,
-                                  waiting, got, check)
-                    continue
-                for conn, pid, tasks in self._greeted(check):
-                    with conn:
-                        try:
-                            if tasks == 0:
-                                self._read_up(conn, pid, iteration, waiting,
-                                              got, check)
-                        except (OSError, EOFError):
-                            pass  # the attempt died mid-frame; a retry resends
+                conn, pid = key.fileobj, key.data
+                if pid is None:  # the listening socket
+                    for conn, pid, tasks in self._greeted(check):
+                        if tasks == 0 and pid in waiting:
+                            self.sel.register(conn, selectors.EVENT_READ, pid)
+                            self._reply(conn, frame, check)
+                        else:
+                            self._reply(conn, _STOP, check)
+                elif conn is self.conns.get(pid):  # a resident task
+                    self._read_up(conn, pid, iteration, waiting, got, check)
+                else:  # a per-iteration task: its one frame, then _STOP
+                    try:
+                        self._read_up(conn, pid, iteration, waiting, got,
+                                      check)
+                    except (OSError, EOFError):
+                        pass  # the attempt died mid-frame; a retry resends
+                    self._reply(conn, _STOP, check)
         if got.spill is not None and not self.spilled:
             self.spilled = True
             log.info(
@@ -784,21 +724,47 @@ class _Listener:
             got.add(pid, halt, payload)
             waiting.discard(pid)
 
+    def _reply(self, conn, frame: bytes, check: Callable[[], None]) -> None:
+        """Send a per-iteration task ``frame``; hang up after _STOP, or
+        when the task is gone (a retry says hello again)."""
+        try:
+            _send_all(conn, frame, check)
+        except (OSError, EOFError):
+            frame = _STOP
+        if frame == _STOP:
+            self._hang_up(conn)
+
+    def _hang_up(self, conn) -> None:
+        if conn in self.sel.get_map():
+            self.sel.unregister(conn)
+        conn.close()
+
     def gather_job(
-        self, sc, out: DataFrame | RDD, iteration: int, partitions: int
+        self,
+        sc,
+        out: DataFrame | RDD,
+        description: str,
+        iteration: int,
+        frame: bytes,
+        partitions: int,
     ) -> _Partials:
-        """Run one per-iteration Spark job over ``out`` and gather its
-        partials; cancel the job if the partial barrier proceeded without
-        some."""
-        job = _Job(sc, lambda: _run_to_end(out))
+        """Run one per-iteration Spark job over ``out``, serve its tasks
+        ``frame`` and gather their partials; cancel the job if the
+        partial barrier proceeded without some, and hang up on the tasks
+        still connected."""
+        job = _Job(sc, description, lambda: _run_to_end(out))
         got = None
         try:
             got = self.gather(
-                iteration, set(range(partitions)), partitions, job.check
+                iteration, frame, set(range(partitions)), partitions,
+                job.check,
             )
         finally:
             if got is None or len(got) < partitions:
                 job.cancel()
+            for key in list(self.sel.get_map().values()):
+                if key.data is not None:
+                    self._hang_up(key.fileobj)
         job.finish()
         return got
 
@@ -817,36 +783,27 @@ class _Resident:
         self,
         sc,
         df: DataFrame,
-        worker: WorkerComputable,
-        total_iteration: int,
-        props: dict[str, Any],
-        interceptors: Sequence[WorkerInterceptor],
+        task: _Task,
         splits: SplitPlan | None,
         listener: _Listener,
     ) -> None:
         self.sc = sc
-        self.args = (df, worker, total_iteration, props, interceptors)
+        self.df = df
+        self.task = task
         self.splits = splits
         self.listener = listener
         self.job: _Job | None = None
 
     def _start(self) -> None:
-        df, worker, total_iteration, props, interceptors = self.args
-        fn = _make_resident_fn(
-            worker, total_iteration, props, interceptors,
-            (self.listener.addr, self.listener.token), self.splits,
-        )
+        fn = _make_task_fn("resident", self.task, self.listener, self.splits)
         if self.splits is None:
-            job = df.mapInArrow(fn, "done boolean", barrier=True)
+            job = self.df.mapInArrow(fn, "done boolean", barrier=True)
         else:
             n = len(self.splits.partitions)
             job = self.sc.parallelize(range(n), n).barrier().mapPartitions(fn)
-
-        def action() -> None:
-            self.sc.setJobDescription("guagua resident run")
-            _run_to_end(job)
-
-        self.job = _Job(self.sc, action)
+        self.job = _Job(
+            self.sc, "guagua resident run", lambda: _run_to_end(job)
+        )
         self.listener.accept(self._check)
 
     def _check(self) -> None:
@@ -855,20 +812,22 @@ class _Resident:
                 self.job.error or EOFError("the resident job ended")
             )
 
-    def superstep(self, iteration: int, payload: bytes) -> _Partials:
-        """Send the master result to every task that owes no frame and
-        gather this iteration's partials. A task that still owes one
-        (dropped at an earlier deadline) sits this superstep out."""
+    def superstep(self, iteration: int, frame: bytes) -> _Partials:
+        """Send ``frame``, this iteration's _DOWN frame, to every task
+        that owes no frame and gather this iteration's partials. A task
+        that still owes one (dropped at an earlier deadline) sits this
+        superstep out."""
         try:
             if self.job is None:
                 self._start()
             listener = self.listener
-            frame = _DOWN.pack(iteration, len(payload)) + payload
             sent = set(listener.conns) - listener.owes
             for pid in sent:
                 _send_all(listener.conns[pid], frame, self._check)
             listener.owes |= sent
-            return listener.gather(iteration, sent, listener.tasks, self._check)
+            return listener.gather(
+                iteration, frame, sent, listener.tasks, self._check
+            )
         except (OSError, EOFError) as exc:
             raise _ResidentLost(exc) from exc
 
@@ -1028,84 +987,78 @@ class IterativeEngine:
         # every iteration then reuses the converted form instead of
         # re-decoding rows→Arrow→numpy.
         remaining = total_iteration - start_iteration + 1
-        prep_rdd = resident = None
-        persisted = False
-        if type(worker).prepare is WorkerComputable.prepare:
-            path, why = "arrow", "the worker does not override prepare"
-        else:
-            # a split plan fixes the stage width before submit; Spark's
-            # own count can differ from the realized stage under AQE
-            splits = plan_splits(df)
-            if isinstance(splits, str):
-                source, splits = f"Spark rows ({splits})", None
-                num_partitions = df.rdd.getNumPartitions()
-            else:
-                source = "parquet splits"
-                num_partitions = len(splits.partitions)
-            why = _resident_blocker(sc, num_partitions)
-            if why is None:
-                path, why = "resident", (
-                    f"{remaining} rounds, {num_partitions} partitions fit "
-                    f"the task slots; input: {source}"
-                )
-                if splits is not None:
-                    log.debug("parquet splits: %s", splits.describe())
-                resident = _Resident(
-                    sc, df, worker, total_iteration, self.props,
-                    worker_interceptors, splits, listen(),
-                )
-            elif remaining < LOAD_ONCE_MIN_ROUNDS:
-                path, why = "arrow", (
-                    f"{why}; {remaining} rounds < {LOAD_ONCE_MIN_ROUNDS}"
-                )
-            else:
-                path = "blob"
-                prep_rdd = _prepared_blobs(df, worker)
-                num_partitions = prep_rdd.getNumPartitions()
-        if path == "arrow":
-            if df.storageLevel == StorageLevel.NONE:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted = True
-            num_partitions = df.rdd.getNumPartitions()
-        log.info("%s path: %s", path, why)
-
-        mctx = MasterContext(
-            current_iteration=0,
-            total_iteration=total_iteration,
-            worker_results=[],
-            master_result=master_result,
-            props=self.props,
-            num_workers=num_partitions,
-        )
-        master.init(mctx)
-        # optional model init before the first worker pass — replaces the
-        # reference's burned first iteration where workers return empty
-        # results so the master can initialize weights
-        # (lr/LogisticRegressionMaster.java init path)
-        if master_result is None:
-            initial = getattr(master, "initial_result", None)
-            if callable(initial):
-                master_result = initial(mctx)
-                mctx.master_result = master_result
-        for icpt in interceptors:
-            icpt.pre_application(mctx)
-
-        bc = listener = None
-        described = False
+        task = _Task(worker, total_iteration, self.props, worker_interceptors)
+        prep_rdd = resident = listener = None
+        persisted = applied = False
         try:
+            if type(worker).prepare is WorkerComputable.prepare:
+                path, why = "arrow", "the worker does not override prepare"
+            else:
+                # a split plan fixes the stage width before submit; Spark's
+                # own count can differ from the realized stage under AQE
+                splits = plan_splits(df)
+                if isinstance(splits, str):
+                    source, splits = f"Spark rows ({splits})", None
+                    num_partitions = df.rdd.getNumPartitions()
+                else:
+                    source = "parquet splits"
+                    num_partitions = len(splits.partitions)
+                why = _resident_blocker(sc, num_partitions)
+                if why is None:
+                    path, why = "resident", (
+                        f"{remaining} rounds, {num_partitions} partitions "
+                        f"fit the task slots; input: {source}"
+                    )
+                    if splits is not None:
+                        log.debug("parquet splits: %s", splits.describe())
+                    resident = _Resident(sc, df, task, splits, listen())
+                elif remaining < LOAD_ONCE_MIN_ROUNDS:
+                    path, why = "arrow", (
+                        f"{why}; {remaining} rounds < {LOAD_ONCE_MIN_ROUNDS}"
+                    )
+                else:
+                    path = "blob"
+                    prep_rdd = _prepared_blobs(df, worker)
+                    num_partitions = prep_rdd.getNumPartitions()
+            if path == "arrow":
+                if df.storageLevel == StorageLevel.NONE:
+                    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                    persisted = True
+                num_partitions = df.rdd.getNumPartitions()
+            log.info("%s path: %s", path, why)
+
+            mctx = MasterContext(
+                current_iteration=0,
+                total_iteration=total_iteration,
+                worker_results=[],
+                master_result=master_result,
+                props=self.props,
+                num_workers=num_partitions,
+            )
+            master.init(mctx)
+            # optional model init before the first worker pass — replaces
+            # the reference's burned first iteration where workers return
+            # empty results so the master can initialize weights
+            # (lr/LogisticRegressionMaster.java init path)
+            if master_result is None:
+                initial = getattr(master, "initial_result", None)
+                if callable(initial):
+                    master_result = initial(mctx)
+                    mctx.master_result = master_result
+            for icpt in interceptors:
+                icpt.pre_application(mctx)
+            applied = True
+
             for iteration in range(start_iteration, total_iteration + 1):
                 t0 = time.monotonic()
                 mctx.current_iteration = iteration
                 for icpt in interceptors:
                     icpt.pre_iteration(mctx)
 
-                prev_bc = bc
-                payload = pickle.dumps(
-                    master_result, protocol=pickle.HIGHEST_PROTOCOL
-                )
+                frame = _down_frame(iteration, master_result)
                 if resident is not None:
                     try:
-                        got = resident.superstep(iteration, payload)
+                        got = resident.superstep(iteration, frame)
                         # the stage as Spark realized it (see _Listener)
                         num_partitions = resident.listener.tasks
                     except _ResidentLost as lost:
@@ -1119,38 +1072,25 @@ class IterativeEngine:
                         )
                         resident.close(cancel=True)
                         resident = None
+                        path = "blob"
                         prep_rdd = _prepared_blobs(df, worker)
                         num_partitions = prep_rdd.getNumPartitions()
                     mctx.num_workers = num_partitions
                 if resident is None:
-                    # progress reporting — analogue of Progressable →
-                    # context.setStatus (mapreduce/GuaguaMapper.java:
-                    # 133-175), on the iterations that launch a job: a
-                    # resident superstep makes no py4j call at all
-                    sc.setJobDescription(
-                        f"guagua iteration {iteration}/{total_iteration}"
-                    )
-                    described = True
-                    if len(payload) <= INLINE_MODEL_BYTES:
-                        bc = _ModelRef(payload=payload)
-                    else:
-                        bc = _ModelRef(bc=sc.broadcast(payload))
-                    if listener is None:
+                    if listener is None:  # the path's job, built once
                         listener = listen()
-                    task = _Task(
-                        worker, iteration, total_iteration, self.props, bc,
-                        worker_interceptors, (listener.addr, listener.token),
-                    )
-                    if prep_rdd is not None:
-                        out = prep_rdd.mapPartitions(
-                            _make_prepared_iter_fn(task)
-                        )
-                    else:
-                        out = df.mapInArrow(
-                            _make_worker_fn(task), "done boolean"
-                        )
+                        fn = _make_task_fn(path, task, listener)
+                        if path == "blob":
+                            out = prep_rdd.mapPartitions(fn)
+                        else:
+                            out = df.mapInArrow(fn, "done boolean")
+                    # the job's description reports progress — analogue
+                    # of Progressable → context.setStatus
+                    # (mapreduce/GuaguaMapper.java:133-175)
                     got = listener.gather_job(
-                        sc, out, iteration, num_partitions
+                        sc, out,
+                        f"guagua iteration {iteration}/{total_iteration}",
+                        iteration, frame, num_partitions,
                     )
 
                 mctx.worker_results = got.results()
@@ -1163,8 +1103,6 @@ class IterativeEngine:
 
                 for icpt in reversed(interceptors):
                     icpt.post_iteration(mctx)
-                if prev_bc is not None:
-                    prev_bc.destroy()
                 if (
                     self.checkpoint_interval
                     and iteration % self.checkpoint_interval == 0
@@ -1180,16 +1118,13 @@ class IterativeEngine:
                 resident.close()
             if listener is not None:
                 listener.close()
-            for icpt in reversed(interceptors):
-                icpt.post_application(mctx)
-            if bc is not None:
-                bc.destroy()
+            if applied:
+                for icpt in reversed(interceptors):
+                    icpt.post_application(mctx)
             if persisted:
                 df.unpersist()
             if prep_rdd is not None:
                 prep_rdd.unpersist()
-            if described:
-                sc.setJobDescription(None)
         return master_result
 
 

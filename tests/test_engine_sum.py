@@ -15,6 +15,7 @@ import pytest
 from guagua_spark.algorithms.sum_ import SumMaster, SumState, SumWorker
 from guagua_spark.api import (
     MasterComputable,
+    MasterInterceptor,
     WorkerComputable,
 )
 from guagua_spark.engine import IterativeEngine
@@ -71,17 +72,48 @@ def test_sum_golden_over_33_partitions(spark):
     assert result.value == 15345
 
 
+class _Workers(MasterInterceptor):
+    """Records the master's worker count per iteration."""
+
+    def __init__(self) -> None:
+        self.counts: list[int] = []
+
+    def post_iteration(self, context) -> None:
+        self.counts.append(context.num_workers)
+
+
 def test_empty_partitions_are_harmless(spark):
-    # 4 partitions, only 2 hold data; empty partitions contribute prev_sum
-    # per reference semantics? No — guagua never assigns empty splits to
-    # workers (GuaguaInputFormat drops them); our workers return prev only
-    # when they saw the broadcast. To match reference worker counts we
-    # repartition non-empty.
-    rdd = spark.sparkContext.parallelize([(1,), (2,), (3,), (2,), (3,), (4,)], 2)
+    """4 partitions, 2 of them empty, on the Arrow path: an empty
+    partition is a worker like any other and returns the previous sum,
+    so Mₙ = 4·Mₙ₋₁ + 15."""
+    rdd = spark.sparkContext.parallelize(
+        [[1, 2, 3], [], [2, 3, 4], []], 4
+    ).flatMap(lambda values: [(v,) for v in values])
     df = spark.createDataFrame(rdd, "value long")
-    engine = IterativeEngine(spark)
-    result = engine.run(SumMaster(), SumWorker(), df, total_iteration=1)
-    assert result.value == 15
+    assert [len(p) for p in df.rdd.glom().collect()] == [3, 0, 3, 0]
+    workers = _Workers()
+    result = IterativeEngine(spark).run(
+        SumMaster(), SumWorker(), df, total_iteration=2,
+        interceptors=[workers],
+    )
+    assert result.value == 75
+    assert workers.counts == [4, 4]
+
+
+def test_run_keeps_the_callers_job_description(spark):
+    """Each per-iteration job is described in its own thread, so the
+    caller's description is the same after run() as before it."""
+    sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    try:
+        result = IterativeEngine(spark).run(
+            SumMaster(), SumWorker(), _two_partition_df(spark),
+            total_iteration=2,
+        )
+        assert result.value == 45
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
 
 
 @dataclass
